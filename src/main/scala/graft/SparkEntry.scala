@@ -92,10 +92,12 @@ object SparkEntry {
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
     // system property first (lets the plan-pin suite audit the AT-SCALE
     // plan, where the size condition makes spread provably absent), then
-    // the deployment env knob
+    // the deployment env knob; a malformed value keeps the default rather
+    // than failing every table read
     val spreadMax = sys.props.get("graft.spread.max.bytes")
       .orElse(sys.env.get("SPARK_GRAFT_SPREAD_MAX_BYTES"))
-      .map(_.toLong).getOrElse(64L << 20)
+      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
+      .getOrElse(64L << 20)
     if (bytes >= 4096 && bytes <= spreadMax && bytes < cores * maxSplit)
       df.repartition(cores, col(key))
     else df

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import scala.util.Try
 import graft.core.MonthFinder
 import graft.layout._
 
@@ -25,8 +26,12 @@ object Extract {
 
   /** Span budget per document; override with GRAFT_SPAN_BUDGET. The default
     * bounds task memory at roughly spans * ~100B = ~100 MiB. */
-  val SpanBudget: Int =
-    sys.env.get("GRAFT_SPAN_BUDGET").map(_.toInt).getOrElse(1 << 20)
+  val SpanBudget: Int = parseSpanBudget(sys.env.get("GRAFT_SPAN_BUDGET"))
+
+  /** A non-numeric override falls back to the default: this runs in an
+    * object initializer, where a throw would fail every extraction task. */
+  def parseSpanBudget(raw: Option[String]): Int =
+    raw.flatMap(s => Try(s.trim.toInt).toOption).getOrElse(1 << 20)
 
   /** An embedded media reference, carried through extraction so the output
     * span assembly never needs a second pass over the raw documents. */

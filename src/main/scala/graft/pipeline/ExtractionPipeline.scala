@@ -8,26 +8,32 @@ import graft.layout._
 
 /** End-to-end Spark orchestration of the extraction pipeline.
   *
-  * Lifecycle (mirrors the reference's v3 steps, SURVEY.md §3.1), Spark-shaped:
+  * Lifecycle (mirrors the reference's v3 steps, SURVEY.md §3.1), Spark-shaped.
+  * Each document is finished in ONE place, like the reference's per-paper
+  * loop: parse, merge its criterion table, write its stats back (steps 1-3
+  * and 6), producing one [[DocOut]]:
   *
-  *   docs ──mapPartitions(Extract.extractDoc)──► ExtractResult       (narrow)
-  *        ├─► stats  (Dataset[PaperStat])                            (narrow)
-  *        └─► candidates ──groupByKey(doc_id)──mapGroups(Merge)──►   (1 shuffle,
-  *            MergedDoc — only the small candidate tables shuffle,    tiny rows)
-  *            never the raw documents
-  *   merged ──flatMap(CorpusSheet.sheetRows)──► sheet rows           (narrow)
+  *   salted (saltPages = Some(n)):
+  *   docs ──flatMap(chunkDoc ► extractChunk)──► chunk rows             (narrow)
+  *        (PartialStat, candidates, media) per <= n-page chunk
+  *        ──groupByKey(doc_id)──mapGroups──► DocOut                   (1 shuffle,
+  *          reduceStats ► mergeDoc ► updateStat + outputSpans          chunk rows)
+  *   unsalted (saltPages = None):
+  *   docs ──map(extractDoc ► mergeDoc ► updateStat + outputSpans)──►  (narrow)
+  *        DocOut
+  *
+  *   DocOut ──► stats / merged / outSpans                         (projections)
+  *   merged ──flatMap(CorpusSheet.sheetRows)──► sheet rows             (narrow)
   *          ──map-column expansion over the distinct column names──► corpus DF
   *   corpus ──fuzzy L1 + ffill window + row_number──► pivot DF
-  *   merged+media ──► ordered output span sequences (the equality contract)
   *
-  * The only mandatory shuffle is the per-doc groupBy of candidates; the
-  * corpus/pivot stages run at "sheet scale" (rows = extracted table rows,
-  * orders of magnitude smaller than the corpus). The ffill/No. window is
-  * intentionally global-ordered — the reference's semantics (pandas implicit
-  * row order, step_5_pivot_table.py:78-85) REQUIRE one total order; at true
-  * 10^12 scale this column would be computed per-doc with per-doc offsets
-  * (two-pass zipWithIndex-style), which we keep out of v1 because the sheet
-  * is small by construction.
+  * Unpersisted, each output is its own plan: one shuffle per output on the
+  * salted path, none on the unsalted path; raw documents never shuffle.
+  * The corpus/pivot stages run at "sheet scale" (rows = extracted table
+  * rows, orders of magnitude smaller than the corpus). The ffill/No. window
+  * is intentionally global-ordered — the reference's semantics (pandas
+  * implicit row order, step_5_pivot_table.py:78-85) REQUIRE one total
+  * order; the scale path is [[pivotFrameScalable]].
   */
 object ExtractionPipeline {
 
@@ -36,17 +42,26 @@ object ExtractionPipeline {
   final case class OutSpan(doc_id: String, ord: Int, kind: String, text: String,
       media_ref: String)
 
-  /** One keyed fragment of a document after extraction: either a candidate
-    * table or a media reference. The whole downstream (merge + output span
-    * assembly) consumes ONE dataset of these, so the flagship job is a
-    * single scan + a single shuffle of small rows. */
-  final case class DocPart(doc_id: String, cand: Option[CandidateTable],
-      media: Option[Extract.MediaSpan])
+  /** Everything the pipeline emits for one document: its stats row (merge
+    * folded in), its merged criterion table (None when it has no
+    * candidates) and its ordered output spans. */
+  final case class DocOut(stat: PaperStat, merged: Option[MergedDoc],
+      spans: Seq[OutSpan])
 
-  /** Pipeline outputs. `corpus`/`pivot` are LAZY: building the corpus sheet
-    * requires one eager job (collecting the distinct column names), so it
-    * must not run unless a caller actually reads those outputs — a consumer
-    * of only `outSpans` (the benchmark) pays for exactly one pass. */
+  /** Finish one document: merge its candidates if it has any (step_3), fold
+    * the merge onto its stat and assemble its output spans. */
+  def docOut(stat: PaperStat, candidates: Seq[CandidateTable],
+      media: Seq[MediaSpan]): DocOut = {
+    val m =
+      if (candidates.isEmpty) None
+      else Some(Merge.mergeDoc(stat.doc_id, candidates.iterator))
+    DocOut(Merge.updateStat(stat, m), m, m.toSeq.flatMap(outputSpans(_, media)))
+  }
+
+  /** Pipeline outputs. `stats`, `merged` and `outSpans` are projections of
+    * one per-document dataset. `corpus`/`pivot` are LAZY: building the
+    * corpus sheet requires one eager job (collecting the distinct column
+    * names), so it must not run unless a caller actually reads them. */
   final class Result(
       val stats: Dataset[PaperStat],
       val candidates: Dataset[CandidateTable],
@@ -54,7 +69,7 @@ object ExtractionPipeline {
       corpusThunk: () => DataFrame,
       pivotThunk: DataFrame => DataFrame,
       val outSpans: Dataset[OutSpan],
-      persisted: Seq[Dataset[_]]) {
+      persisted: Option[Dataset[_]]) {
     lazy val corpus: DataFrame = corpusThunk()
     lazy val pivot: DataFrame = pivotThunk(corpus)
     /** Release cached intermediates (benchmark loops re-run the pipeline
@@ -66,8 +81,11 @@ object ExtractionPipeline {
     *                   page-aligned chunks of at most this many pages before
     *                   extraction (bounded per-task layout state — the skew
     *                   path; see [[SaltedExtract]]). Results are identical
-    *                   either way (asserted in SaltedExtractSpec). */
-  /** @param scalablePivot route step_5 through [[pivotFrameScalable]]
+    *                   either way (asserted in SaltedExtractSpec).
+    * @param persistIntermediate persist the per-document dataset, so a
+    *                   caller reading several outputs parses once; a caller
+    *                   reading each output once (ExtractMain) opts out.
+    * @param scalablePivot route step_5 through [[pivotFrameScalable]]
     *                      (no single-partition window; byte-identical
     *                      output — the 10^12-scale path) */
   def run(spark: SparkSession, docs: Dataset[DocRow],
@@ -76,76 +94,30 @@ object ExtractionPipeline {
       scalablePivot: Boolean = false): Result = {
     import spark.implicits._
 
-    // ---- extract (steps 1+2+6 fused; one parse per document). The persist
-    // avoids re-parsing when the caller consumes several outputs; a caller
-    // consuming exactly one (benchmarks) opts out.
-    val (baseStats, docParts, persistedSets) = saltPages match {
+    // candidates keep their own lineage (a second parse when read): only
+    // the candidate-table query and tests read them
+    val (outs0, candidates) = saltPages match {
       case Some(n) =>
-        SaltedExtract.extract(spark, docs, n, persistIntermediate)
+        val rows = SaltedExtract.chunkRows(docs, n)
+        (SaltedExtract.docOuts(rows), rows.flatMap(_._2))
       case None =>
-        var extracted = docs.mapPartitions(_.map(Extract.extractDoc))
-        val handles =
-          if (persistIntermediate) {
-            extracted = extracted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            Seq(extracted)
-          } else Nil
-        val parts = extracted.flatMap { r =>
-          r.candidates.iterator.map(c => DocPart(r.stat.doc_id, Some(c), None)) ++
-            r.media.iterator.map(m => DocPart(r.stat.doc_id, None, Some(m)))
-        }
-        (extracted.map(_.stat), parts, handles: Seq[Dataset[_]])
+        (docs.map { d =>
+          val r = Extract.extractDoc(d)
+          docOut(r.stat, r.candidates, r.media)
+        }, docs.flatMap(d => Extract.extractDoc(d).candidates))
     }
-    val candidates = docParts.flatMap(_.cand.iterator)
-
-    // ---- merge (step_3): the one shuffle, on doc_id, candidate rows only
-    val merged: Dataset[MergedDoc] = candidates
-      .groupByKey(_.doc_id)
-      .mapGroups((docId, it) => Merge.mergeDoc(docId, it))
-
-    // ---- stats join-back (per-paper write-back in step_3:40-47)
-    val mergedInfo = merged.map(m => (m.doc_id, m.merged_tables_count,
-      m.merged_rows_count, m.merged_table_start_page, m.merged_table_end_page))
-      .toDF("m_doc_id", "m_tables", "m_rows", "m_start", "m_end")
-    val stats = baseStats.toDF()
-      .join(broadcast(mergedInfo), $"doc_id" === $"m_doc_id", "left")
-      .select(
-        $"doc_id", $"doc_ord", $"file_size", $"page_size",
-        $"criterion_tables_count",
-        $"m_tables".as("merged_tables_count"),
-        $"m_rows".as("merged_rows_count"),
-        $"m_start".as("merged_table_start_page"),
-        $"m_end".as("merged_table_end_page"),
-        $"publish_month", $"publish_month_verified", $"status")
-      .as[PaperStat]
-
-    // ---- corpus sheet (step_4) — lazy: see Result scaladoc
-    val sheetRows0 = merged.flatMap(CorpusSheet.sheetRows)
-    val sheetRows =
+    val outs =
       if (persistIntermediate)
-        sheetRows0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sheetRows0
-    val corpusThunk = () => corpusFrame(spark, sheetRows)
+        outs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else outs0
 
-    // ---- output span sequences (the per-doc equality contract): candidates
-    // and media co-group in ONE shuffle; the merge re-runs inside the group
-    // (cheap — candidate tables are tiny relative to extraction)
-    val outSpans = docParts
-      .groupByKey(_.doc_id)
-      .flatMapGroups { (docId, it) =>
-        val all = it.toVector
-        val cands = all.iterator.flatMap(_.cand)
-        if (!cands.hasNext) Iterator.empty
-        else {
-          val m = Merge.mergeDoc(docId, cands)
-          outputSpans(m, all.flatMap(_.media)).iterator
-        }
-      }
-
-    val persisted = persistedSets ++ (if (persistIntermediate) Seq(sheetRows) else Nil)
+    val merged = outs.flatMap(_.merged)
     val pivotFn: DataFrame => DataFrame =
       if (scalablePivot) c => pivotFrameScalable(spark, c)
       else c => pivotFrame(spark, c)
-    new Result(stats, candidates, merged, corpusThunk, pivotFn, outSpans, persisted)
+    new Result(outs.map(_.stat), candidates, merged,
+      () => corpusFrame(spark, merged.flatMap(CorpusSheet.sheetRows)), pivotFn,
+      outs.flatMap(_.spans), if (persistIntermediate) Some(outs) else None)
   }
 
   /** Ordered output spans for one document: the merged table cells row-major

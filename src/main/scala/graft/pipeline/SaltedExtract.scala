@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import graft.core.MonthFinder
+import org.apache.spark.sql.Dataset
 import graft.layout._
 
 /** Skew handling for oversized documents (the north-rule requirement; the
@@ -18,9 +17,10 @@ import graft.layout._
   *   2. extracts candidates and partial page stats per chunk independently
   *      (pages never interact during detection — table detection is
   *      per-page, so chunking at page boundaries is semantics-preserving);
-  *   3. reduces the partial stats per doc_id (one shuffle of tiny rows) and
-  *      lets the normal Merge stage group the candidates, which are small
-  *      regardless of document size.
+  *   3. groups each document's chunk rows by doc_id (the one shuffle; it
+  *      carries partial stats, candidates and media, never the raw spans),
+  *      reduces the partial stats and finishes the document there: merge,
+  *      stats write-back and output spans.
   *
   * Equivalence with the unsalted path is asserted in SaltedExtractSpec on
   * the fixture corpus (including the 200-page F14).
@@ -56,9 +56,9 @@ object SaltedExtract {
       page_size: Int, criterion_tables_count: Int, publish_month: String,
       hasFirstPage: Boolean, skipped: Boolean)
 
-  def extractChunk(c: Chunk): (PartialStat, Seq[CandidateTable], Seq[Extract.MediaSpan]) = {
+  def extractChunk(c: Chunk): ChunkRow = {
     // the span budget was already enforced on the WHOLE document before
-    // chunking (extract() below) — chunks themselves parse unchecked so the
+    // chunking (chunkRows below) — chunks themselves parse unchecked so the
     // salted path stays bit-identical to the unsalted one
     val r = Extract.extractDoc(DocRow(c.doc_id, c.spans), spanBudget = Int.MaxValue)
     val month = if (c.isFirst) r.stat.publish_month.orNull else null
@@ -68,7 +68,7 @@ object SaltedExtract {
   }
 
   /** Over-budget document -> the same skip stat as the unsalted path. */
-  def skipPartial(d: DocRow): (PartialStat, Seq[CandidateTable], Seq[Extract.MediaSpan]) = {
+  def skipPartial(d: DocRow): ChunkRow = {
     val s = Extract.extractDoc(d, spanBudget = -1).stat // forces the skip path
     (PartialStat(s.doc_id, s.doc_ord, s.file_size, s.page_size, 0,
       null, hasFirstPage = true, skipped = true), Nil, Nil)
@@ -83,38 +83,34 @@ object SaltedExtract {
       a.hasFirstPage || b.hasFirstPage,
       a.skipped || b.skipped)
 
-  /** Salted extraction: per-chunk parse, per-doc stat reduce. Returns the
-    * same (stats, doc parts) shape as the unsalted Extract stage, plus the
-    * persisted handles (for the caller to release). */
-  def extract(spark: SparkSession, docs: Dataset[DocRow], maxPages: Int = 64,
-      persistIntermediate: Boolean = true,
-      spanBudget: Int = Extract.SpanBudget)
-      : (Dataset[PaperStat], Dataset[ExtractionPipeline.DocPart], Seq[Dataset[_]]) = {
-    import spark.implicits._
+  /** One chunk's extraction: its partial stat, candidates and media. */
+  type ChunkRow = (PartialStat, Seq[CandidateTable], Seq[Extract.MediaSpan])
+
+  /** Per-chunk parse (narrow): over-budget documents become one skip row,
+    * the rest one row per page-aligned chunk. */
+  def chunkRows(docs: Dataset[DocRow], maxPages: Int = 64,
+      spanBudget: Int = Extract.SpanBudget): Dataset[ChunkRow] = {
+    import docs.sparkSession.implicits._
     val budget = spanBudget
-    var parts = docs
-      .flatMap { d =>
-        if (d.spans.length > budget) Iterator.single(skipPartial(d))
-        else chunkDoc(d, maxPages).iterator.map(extractChunk)
-      }
-    val handles: Seq[Dataset[_]] =
-      if (persistIntermediate) {
-        parts = parts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        Seq(parts)
-      } else Nil
-    val docParts = parts.flatMap { case (stat, cands, media) =>
-      cands.iterator.map(c => ExtractionPipeline.DocPart(stat.doc_id, Some(c), None)) ++
-        media.iterator.map(m => ExtractionPipeline.DocPart(stat.doc_id, None, Some(m)))
+    docs.flatMap { d =>
+      if (d.spans.length > budget) Iterator.single(skipPartial(d))
+      else chunkDoc(d, maxPages).iterator.map(extractChunk)
     }
-    val stats = parts.map(_._1)
-      .groupByKey(_.doc_id)
-      .reduceGroups(reduceStats _)
-      .map { case (_, p) =>
-        PaperStat(p.doc_id, p.doc_ord, p.file_size, p.page_size,
-          p.criterion_tables_count, None, None, None, None,
-          Option(p.publish_month), publish_month_verified = !p.skipped,
-          status = Extract.statusOf(p.skipped, p.criterion_tables_count))
-      }
-    (stats, docParts, handles)
+  }
+
+  /** The one keyed pass: a document's chunk rows meet in one group, where
+    * the stats reduce and the document is finished
+    * ([[ExtractionPipeline.docOut]]). */
+  def docOuts(rows: Dataset[ChunkRow]): Dataset[ExtractionPipeline.DocOut] = {
+    import rows.sparkSession.implicits._
+    rows.groupByKey(_._1.doc_id).mapGroups { (_, it) =>
+      val parts = it.toVector
+      val p = parts.iterator.map(_._1).reduce(reduceStats)
+      val stat = PaperStat(p.doc_id, p.doc_ord, p.file_size, p.page_size,
+        p.criterion_tables_count, None, None, None, None,
+        Option(p.publish_month), publish_month_verified = !p.skipped,
+        status = Extract.statusOf(p.skipped, p.criterion_tables_count))
+      ExtractionPipeline.docOut(stat, parts.flatMap(_._2), parts.flatMap(_._3))
+    }
   }
 }

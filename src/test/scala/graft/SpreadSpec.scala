@@ -44,6 +44,11 @@ class SpreadSpec extends AnyFunSuite
     assert(q12Shuffles(Some("1024")) == 0)
   }
 
+  test("a malformed spread limit keeps the 64 MB default instead of failing " +
+      "the table read") {
+    assert(q12Shuffles(Some("64MB")) == 1)
+  }
+
   test("relational tables are never spread: q01's plan is identical with " +
       "the spread enabled and disabled") {
     def shape(maxBytes: Option[String]): Int = {

@@ -216,6 +216,30 @@ class PipelineSpec extends AnyFunSuite {
     assert(Extract.extractDoc(bomb, spanBudget = 100000).stat.status != "oversized_skip")
   }
 
+  test("span budget override: a malformed GRAFT_SPAN_BUDGET keeps the default") {
+    assert(Extract.parseSpanBudget(None) == (1 << 20))
+    assert(Extract.parseSpanBudget(Some(" 5000 ")) == 5000)
+    assert(Extract.parseSpanBudget(Some("lots")) == (1 << 20))
+    assert(Extract.parseSpanBudget(Some("")) == (1 << 20))
+  }
+
+  test("one keyed pass per document: stats and outSpans each shuffle once " +
+      "salted, never unsalted, and broadcast nothing") {
+    val docs = spark.createDataset(FixtureCorpus.fixtureDocs)
+    Seq(Some(16) -> 1, None -> 0).foreach { case (salt, want) =>
+      val r = ExtractionPipeline.run(spark, docs, saltPages = salt,
+        persistIntermediate = false)
+      Seq("stats" -> r.stats.toDF(), "outSpans" -> r.outSpans.toDF()).foreach {
+        case (name, df) =>
+          df.collect()
+          val plan = graft.io.Bucketed.finalSection(df)
+          assert(graft.io.Bucketed.shuffleExchangeCount(df) == want,
+            s"$name, saltPages = $salt:\n$plan")
+          assert(!plan.contains("BroadcastExchange"), s"$name:\n$plan")
+      }
+    }
+  }
+
   test("scalable pivot is byte-identical to the global-window pivot, no global sort") {
     val scalable = ExtractionPipeline.pivotFrameScalable(spark, result.corpus,
       numPartitions = 4)

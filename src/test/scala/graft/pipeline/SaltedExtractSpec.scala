@@ -43,6 +43,22 @@ class SaltedExtractSpec extends AnyFunSuite {
     val sa = plain.outSpans.collect().sortBy(s => (s.doc_id, s.ord)).toVector
     val sb = salted.outSpans.collect().sortBy(s => (s.doc_id, s.ord)).toVector
     assert(sa == sb)
+
+    // both equal the in-driver reference for every fixture document,
+    // including a multi-chunk one and one with no criterion table
+    val ref = FixtureCorpus.fixtureDocs.map { d =>
+      val r = Extract.extractDoc(d)
+      val m =
+        if (r.candidates.isEmpty) None
+        else Some(Merge.mergeDoc(d.doc_id, r.candidates.iterator))
+      (Merge.updateStat(r.stat, m),
+        m.toSeq.flatMap(ExtractionPipeline.outputSpans(_, r.media)))
+    }.sortBy(_._1.doc_id)
+    assert(SaltedExtract.chunkDoc(FixtureCorpus.f14, maxPages = 16).length > 1)
+    assert(ref.exists(_._1.status == "not_found"))
+    assert(a.toVector == ref.map(_._1) && b.toVector == ref.map(_._1))
+    val refSpans = ref.flatMap(_._2).sortBy(s => (s.doc_id, s.ord))
+    assert(sa == refSpans && sb == refSpans)
   }
 
   test("salted path applies the span budget to the WHOLE doc, matching unsalted") {
@@ -50,14 +66,16 @@ class SaltedExtractSpec extends AnyFunSuite {
       Span("page", "1", null, 0) +:
         (1 to 20000).map(i => Span("text", s"line$i", null, i)).toVector)
     val docs = spark.createDataset(Seq(bomb, FixtureCorpus.f01))
-    val (stats, parts, _) =
-      SaltedExtract.extract(spark, docs, maxPages = 16,
-        persistIntermediate = false, spanBudget = 10000)
-    val byId = stats.collect().map(s => s.doc_id -> s).toMap
+    val rows = SaltedExtract.chunkRows(docs, maxPages = 16, spanBudget = 10000)
+    val outs = SaltedExtract.docOuts(rows).collect()
+    val byId = outs.map(o => o.stat.doc_id -> o.stat).toMap
     assert(byId("98.bomb.pdf") == Extract.extractDoc(bomb, spanBudget = 10000).stat)
     assert(byId("98.bomb.pdf").status == "oversized_skip")
     assert(byId("1.f01_clean.pdf").status == "success")
     // the bomb contributes no candidates or media downstream
-    assert(!parts.collect().exists(_.doc_id == "98.bomb.pdf"))
+    val parts = rows.collect().filter(_._1.doc_id == "98.bomb.pdf")
+    assert(parts.forall(p => p._2.isEmpty && p._3.isEmpty))
+    assert(outs.filter(_.stat.doc_id == "98.bomb.pdf")
+      .forall(o => o.merged.isEmpty && o.spans.isEmpty))
   }
 }
