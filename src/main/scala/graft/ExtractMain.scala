@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.json4s.{JDecimal, JObject, JValue}
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods
 
 /** The production entrypoint — the class the north rule's spark-submit
   * invocation launches (scripts/spark-submit-example.sh):
@@ -25,6 +28,14 @@ import org.apache.spark.sql.SparkSession
   * (docs committed this run, total committed, snapshot count).
   */
 object ExtractMain {
+
+  /** Prints one JSON record as a line on stdout. */
+  private def emit(j: JObject): Unit =
+    println(JsonMethods.compact(JsonMethods.render(j)))
+
+  /** A duration with three decimals, the form the scaling script parses. */
+  private def seconds(t: Double): JValue =
+    JDecimal(BigDecimal(t).setScale(3, BigDecimal.RoundingMode.HALF_UP))
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
@@ -86,9 +97,8 @@ object ExtractMain {
       (System.nanoTime() - t0) / 1e9
     }
     val warm = if (times.length > 1) times.drop(1).min else times.head
-    println(s"""{"mode":"bench","sink":${sinkDir.nonEmpty},""" +
-      times.map(t => f"$t%.3f").mkString(""""rounds":[""", ",", "],") +
-      f""""seconds":$warm%.3f}""")
+    emit(("mode" -> "bench") ~ ("sink" -> sinkDir.nonEmpty) ~
+      ("rounds" -> times.map(seconds)) ~ ("seconds" -> seconds(warm)))
   }
 
   /** Table maintenance on BOTH committed tables (stats + spans) — the ops
@@ -104,6 +114,7 @@ object ExtractMain {
       .filter(d => Checkpointing.snapshots(d).nonEmpty)
     require(tables.nonEmpty, s"no committed tables under $out")
     def name(dir: String) = dir.split('/').last
+    def op(verb: String, dir: String) = ("op" -> verb) ~ ("table" -> name(dir))
     cmd.toList match {
       case "compact" :: rest =>
         val parts = rest.headOption.map(_.toInt).getOrElse(
@@ -111,14 +122,13 @@ object ExtractMain {
         tables.foreach { dir =>
           val (before, after, rows) = Checkpointing.compact(spark, dir, parts,
             java.util.UUID.randomUUID().toString.take(8))
-          println(s"""{"op":"compact","table":"${name(dir)}",""" +
-            s""""files_before":$before,"files_after":$after,"rows":$rows}""")
+          emit(op("compact", dir) ~ ("files_before" -> before) ~
+            ("files_after" -> after) ~ ("rows" -> rows))
         }
       case "vacuum" :: Nil =>
         tables.foreach { dir =>
           val removed = Checkpointing.vacuum(dir)
-          println(s"""{"op":"vacuum","table":"${name(dir)}",""" +
-            s""""removed":${removed.size}}""")
+          emit(op("vacuum", dir) ~ ("removed" -> removed.size))
         }
       case "delete" :: ids :: Nil =>
         import spark.implicits._
@@ -128,57 +138,54 @@ object ExtractMain {
         tables.foreach { dir =>
           val n = Checkpointing.deleteWhere(keys.toDF("doc_id"), dir,
             s"takedown-$run")
-          println(s"""{"op":"delete","table":"${name(dir)}","tombstones":$n}""")
+          emit(op("delete", dir) ~ ("tombstones" -> n))
         }
       case "snapshots" :: Nil =>
         tables.foreach { dir =>
           Checkpointing.snapshots(dir).foreach { s =>
-            println(s"""{"table":"${name(dir)}","seq":${s.seq},""" +
-              s""""run":"${s.runId}","rows":${s.rows},"full":${s.full},""" +
-              s""""files":${s.files.size},"delete_sets":${s.deletes.size}}""")
+            emit(("table" -> name(dir)) ~ ("seq" -> s.seq) ~
+              ("run" -> s.runId) ~ ("rows" -> s.rows) ~ ("full" -> s.full) ~
+              ("files" -> s.files.size) ~ ("delete_sets" -> s.deletes.size))
           }
         }
       case "expire" :: rest =>
         val keepLast = rest.headOption.map(_.toInt).getOrElse(1)
         tables.foreach { dir =>
           val expired = Checkpointing.expireSnapshots(dir, keepLast)
-          println(s"""{"op":"expire","table":"${name(dir)}",""" +
-            s""""keep_last":$keepLast,"expired":${expired.size}}""")
+          emit(op("expire", dir) ~ ("keep_last" -> keepLast) ~
+            ("expired" -> expired.size))
         }
       case "rollback" :: version :: Nil =>
         val v = version.toInt
         val run = java.util.UUID.randomUUID().toString.take(8)
         tables.foreach { dir =>
           val seq = Checkpointing.rollback(dir, v, s"rollback-$run")
-          println(s"""{"op":"rollback","table":"${name(dir)}",""" +
-            s""""to_version":$v,"new_seq":$seq}""")
+          emit(op("rollback", dir) ~ ("to_version" -> v) ~ ("new_seq" -> seq))
         }
       case "branch" :: bname :: version :: Nil =>
         val v = version.toInt
         tables.foreach { dir =>
           Checkpointing.createBranch(dir, bname, v)
-          println(s"""{"op":"branch","table":"${name(dir)}",""" +
-            s""""name":"$bname","base":$v}""")
+          emit(op("branch", dir) ~ ("name" -> bname) ~ ("base" -> v))
         }
       case "branches" :: Nil =>
         tables.foreach { dir =>
           Checkpointing.branches(dir).toSeq.sortBy(_._1).foreach {
             case (n, (base, commits)) =>
-              println(s"""{"table":"${name(dir)}","branch":"$n",""" +
-                s""""base":$base,"commits":$commits}""")
+              emit(("table" -> name(dir)) ~ ("branch" -> n) ~
+                ("base" -> base) ~ ("commits" -> commits))
           }
         }
       case "fast-forward" :: bname :: Nil =>
         tables.foreach { dir =>
           val head = Checkpointing.fastForward(dir, bname)
-          println(s"""{"op":"fast-forward","table":"${name(dir)}",""" +
-            s""""branch":"$bname","new_head":$head}""")
+          emit(op("fast-forward", dir) ~ ("branch" -> bname) ~
+            ("new_head" -> head))
         }
       case "drop-branch" :: bname :: Nil =>
         tables.foreach { dir =>
           Checkpointing.dropBranch(dir, bname)
-          println(s"""{"op":"drop-branch","table":"${name(dir)}",""" +
-            s""""branch":"$bname"}""")
+          emit(op("drop-branch", dir) ~ ("branch" -> bname))
         }
       case other =>
         throw new IllegalArgumentException(s"unknown maintenance op: $other")
@@ -251,9 +258,9 @@ object ExtractMain {
       .readAt(spark, statsDir, snaps.last.seq).count()
     val nSnaps = snaps.size
     val secs = (System.nanoTime() - t0) / 1e9
-    println(s"""{"run":"$runId","docs_committed":$committed,""" +
-      s""""total_committed":$total,"snapshots":$nSnaps,""" +
-      f""""seconds":$secs%.3f}""")
+    emit(("run" -> runId) ~ ("docs_committed" -> committed) ~
+      ("total_committed" -> total) ~ ("snapshots" -> nSnaps) ~
+      ("seconds" -> seconds(secs)))
     (committed, total)
   }
 }

@@ -14,7 +14,9 @@ package graft.io
   *
   * Every directory lives under one per-process root that a JVM shutdown
   * hook removes recursively — bounded residency, nothing keyed on the
-  * input data survives the process (no cross-run reuse is possible).
+  * input data survives the process (no cross-run reuse is possible). A
+  * killed process never runs its hook, so the first use of the root also
+  * removes the roots of processes that are gone ([[sweepDead]]).
   */
 object Scratch {
   private lazy val root: java.nio.file.Path = {
@@ -27,6 +29,7 @@ object Scratch {
         else None
       }
       .getOrElse(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+    sweepDead(base)
     val p = base.resolve(s"pid-${ProcessHandle.current().pid()}")
     java.nio.file.Files.createDirectories(p)
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(p.toFile)))
@@ -38,6 +41,17 @@ object Scratch {
     f.delete()
     ()
   }
+
+  /** Deletes the `pid-<n>` dirs under `base` whose process `n` is no longer
+    * alive. */
+  def sweepDead(base: java.nio.file.Path): Unit =
+    Option(base.toFile.listFiles()).getOrElse(Array.empty).foreach { f =>
+      f.getName match {
+        case s"pid-$n" if n.toLongOption.exists(ProcessHandle.of(_).isEmpty) =>
+          deleteRecursively(f)
+        case _ =>
+      }
+    }
 
   /** A fresh scratch directory (drop-in for
     * `java.nio.file.Files.createTempDirectory(prefix)`). */

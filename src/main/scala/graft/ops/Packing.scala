@@ -26,8 +26,7 @@ import org.apache.spark.storage.StorageLevel
   *      base offsets.
   *
   * No SinglePartition exchange anywhere; the only global structure is the
-  * numPartitions-sized offset array. Same pattern as the pivot sheet's
-  * scalable numbering (ExtractionPipeline.pivotFrameScalable).
+  * numPartitions-sized offset array.
   */
 object Packing {
 

@@ -93,18 +93,11 @@ object Checkpointing {
       stats: Map[String, (Long, Long)] = Map.empty,
       spec: String = "doc_ord", rollbackOf: Option[Int] = None): Snapshot = {
     Files.createDirectories(manifestDir)
-    val statsJson = stats.toSeq.sortBy(_._1)
-      .map { case (f, (mn, mx)) => s""""$f":[$mn,$mx]""" }.mkString(",")
-    val rbJson = rollbackOf.map(v => s""""rollback_of":$v,""").getOrElse("")
-    val json = s"""{"seq":$seq,"run":"$runId","rows":$rows,"full":$full,""" +
-      rbJson +
-      s""""spec":"$spec",""" +
-      s""""deletes":[${deletes.sorted.map("\"" + _ + "\"").mkString(",")}],""" +
-      s""""files":[${added.sorted.map("\"" + _ + "\"").mkString(",")}],""" +
-      s""""stats":{$statsJson}}"""
-    Files.writeString(manifestDir.resolve(f"snapshot-$seq%05d-$runId.json"), json)
-    Snapshot(seq, runId, added.sorted, rows, full, deletes.sorted, stats,
-      spec, rollbackOf)
+    val s = Snapshot(seq, runId, added.sorted, rows, full, deletes.sorted,
+      stats, spec, rollbackOf)
+    Files.writeString(manifestDir.resolve(f"snapshot-$seq%05d-$runId.json"),
+      LogCodec.snapshot(s))
+    s
   }
 
   /** The snapshot log, oldest first (empty when the dir has no commits). */
@@ -115,34 +108,7 @@ object Checkpointing {
     Option(manifestDir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("snapshot-") && f.getName.endsWith(".json"))
       .sortBy(_.getName)
-      .map { f =>
-        val s = Files.readString(f.toPath)
-        val seq = """"seq":(\d+)""".r.findFirstMatchIn(s).get.group(1).toInt
-        val run = """"run":"([^"]*)"""".r.findFirstMatchIn(s).get.group(1)
-        val rows = """"rows":(\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
-        val files = """"files":\[([^\]]*)\]""".r.findFirstMatchIn(s).get.group(1)
-        val full = """"full":(true|false)""".r.findFirstMatchIn(s)
-          .exists(_.group(1) == "true")
-        def list(raw: String): Seq[String] = raw.split(",").toSeq
-          .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
-        // pre-delete snapshots have no "deletes" key — parse as empty
-        val dels = """"deletes":\[([^\]]*)\]""".r.findFirstMatchIn(s)
-          .map(m => list(m.group(1))).getOrElse(Nil)
-        // pre-stats snapshots have no "stats" key — parse as empty (the
-        // entries are arrays, never objects, so [^}]* is safe)
-        val stats = """"stats":\{([^}]*)\}""".r.findFirstMatchIn(s)
-          .map(m => """"([^"]+)":\[(-?\d+),(-?\d+)\]""".r.findAllMatchIn(m.group(1))
-            .map(e => e.group(1) -> (e.group(2).toLong, e.group(3).toLong))
-            .toMap)
-          .getOrElse(Map.empty[String, (Long, Long)])
-        // pre-spec-evolution snapshots have no "spec" key — they tracked
-        // doc_ord by construction
-        val spec = """"spec":"([^"]*)"""".r.findFirstMatchIn(s)
-          .map(_.group(1)).getOrElse("doc_ord")
-        val rb = """"rollback_of":(\d+)""".r.findFirstMatchIn(s)
-          .map(_.group(1).toInt)
-        Snapshot(seq, run, list(files), rows, full, dels, stats, spec, rb)
-      }.toSeq
+      .map(f => LogCodec.readSnapshot(Files.readString(f.toPath))).toSeq
   }
 
   /** Read the table as of snapshot `version` (1-based commit sequence).
@@ -221,7 +187,7 @@ object Checkpointing {
         "data files — nothing to apply them to (table schema unknown)")
       val data = dataLegs.reduce(_ unionByName _)
       val dels = delSets
-        .map { case (seq, d) => spark.read.parquet(s"${dir}_deletes/$d")
+        .map { case (seq, d) => readDeleteSet(spark, dir, d)
           .select(col("doc_id").as("_del_id"), lit(seq).as("_del_seq")) }
         .reduce(_ unionByName _)
       data.join(broadcast(dels),
@@ -230,6 +196,13 @@ object Checkpointing {
         .drop("_commit_seq")
     }
   }
+
+  /** A delete set is named after the runId that wrote it; Hadoop would
+    * read glob characters in that name as a pattern, so they are escaped. */
+  private def readDeleteSet(spark: SparkSession, dir: String,
+      name: String): DataFrame =
+    spark.read.parquet(s"${dir}_deletes/" +
+      name.replaceAll("""([\\{}\[\]*?])""", """\\$1"""))
 
   /** The manifest-stats file-skipping decision for a doc_ord range scan of
     * version `version`: (kept, skipped) file names. A file is skipped ONLY
@@ -393,7 +366,7 @@ object Checkpointing {
           // insensitive to duplicate build-side keys — skipping it keeps
           // the whole leg exchange-free (plan-pinned)
           val keys = s.deletes
-            .map(d => spark.read.parquet(s"${dir}_deletes/$d"))
+            .map(d => readDeleteSet(spark, dir, d))
             .reduce(_ unionByName _).select("doc_id")
           // pre-state rows are all committed before this snapshot, so the
           // sequence rule (delete only earlier commits) is the semi-join
@@ -645,7 +618,7 @@ object Checkpointing {
         s"(present: ${snaps.map(_.seq).mkString(",")})")
     val p = Paths.get(s"${dir}_manifest/tag-$name.json")
     require(!Files.exists(p), s"tag '$name' already exists — dropTag first")
-    Files.writeString(p, s"""{"name":"$name","seq":$version}""")
+    Files.writeString(p, LogCodec.tag(name, version))
     ()
   }
 
@@ -654,12 +627,7 @@ object Checkpointing {
     val manifestDir = new java.io.File(dir + "_manifest")
     Option(manifestDir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("tag-") && f.getName.endsWith(".json"))
-      .map { f =>
-        val s = Files.readString(f.toPath)
-        val name = """"name":"([^"]*)"""".r.findFirstMatchIn(s).get.group(1)
-        val seq = """"seq":(\d+)""".r.findFirstMatchIn(s).get.group(1).toInt
-        name -> seq
-      }.toMap
+      .map(f => LogCodec.readTag(Files.readString(f.toPath))).toMap
   }
 
   def dropTag(dir: String, name: String): Unit = {
@@ -714,8 +682,7 @@ object Checkpointing {
     val d = Paths.get(branchPath(dir, name))
     require(!Files.exists(d), s"branch '$name' already exists — dropBranch first")
     Files.createDirectories(d)
-    Files.writeString(d.resolve("base.json"),
-      s"""{"name":"$name","base_seq":$version}""")
+    Files.writeString(d.resolve("base.json"), LogCodec.branchBase(name, version))
     ()
   }
 
@@ -736,8 +703,7 @@ object Checkpointing {
   private def branchBase(dir: String, name: String): Int = {
     val p = Paths.get(branchPath(dir, name), "base.json")
     require(Files.exists(p), s"no such branch: '$name'")
-    """"base_seq":(\d+)""".r.findFirstMatchIn(Files.readString(p))
-      .get.group(1).toInt
+    LogCodec.readBranchBase(Files.readString(p))
   }
 
   private def branchSnaps(dir: String, name: String): Seq[Snapshot] =
@@ -985,7 +951,7 @@ object Checkpointing {
     val manifestDir = Paths.get(dir + "_manifest")
     Files.createDirectories(manifestDir)
     Files.writeString(manifestDir.resolve(s"compaction-$runId.json"),
-      s"""{"run":"$runId","files_before":$before,"files_after":${parquetFiles(old)},"rows":$rows}""")
+      LogCodec.compaction(runId, before, parquetFiles(old), rows))
     // the compacted state is a NEW snapshot (full file listing); earlier
     // versions are now expired — readAt tells the caller so. File names
     // survive the directory rename, so the tmp-scan stats carry over.
@@ -1064,10 +1030,7 @@ object Checkpointing {
       val lines = perFile.map { case (name, (rows, range)) =>
         val part = """part-(\d+)-""".r.findFirstMatchIn(name)
           .map(_.group(1).toInt).getOrElse(-1)
-        val mnS = range.map(_._1.toString).getOrElse("null")
-        val mxS = range.map(_._2.toString).getOrElse("null")
-        s"""{"run":"$runId","partition":$part,"rows":$rows,""" +
-          s""""min_doc_ord":$mnS,"max_doc_ord":$mxS}"""
+        LogCodec.manifestLine(runId, part, rows, range)
       }
       Files.write(manifestDir.resolve(s"manifest-$runId.jsonl"),
         lines.mkString("\n").getBytes("UTF-8"),
@@ -1137,12 +1100,8 @@ object Checkpointing {
       !snapshots(dir).exists(_.runId == runId),
       s"run $runId already staged or published at $dir")
     val (rows, added, stats) = writeInstrumented(df, dir, runId)
-    val statsJson = stats.toSeq.sortBy(_._1)
-      .map { case (f, (mn, mx)) => s""""$f":[$mn,$mx]""" }.mkString(",")
     Files.writeString(stagedPath(dir, runId),
-      s"""{"run":"$runId","rows":$rows,""" +
-        s""""files":[${added.sorted.map("\"" + _ + "\"").mkString(",")}],""" +
-        s""""stats":{$statsJson}}""")
+      LogCodec.staged(Staged(runId, added.sorted, rows, stats)))
     rows
   }
 
@@ -1156,21 +1115,7 @@ object Checkpointing {
       .getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("staged-") && f.getName.endsWith(".json"))
       .sortBy(_.getName)
-      .map { f =>
-        val s = Files.readString(f.toPath)
-        val run = """"run":"([^"]*)"""".r.findFirstMatchIn(s).get.group(1)
-        val rows = """"rows":(\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
-        val files = """"files":\[([^\]]*)\]""".r.findFirstMatchIn(s).get.group(1)
-          .split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty)
-        val stats = """"stats":\{([^}]*)\}""".r.findFirstMatchIn(s)
-          .map(m => """"([^"]+)":\[(-?\d+),(-?\d+)\]""".r
-            .findAllMatchIn(m.group(1))
-            .map(e => e.group(1) -> (e.group(2).toLong, e.group(3).toLong))
-            .toMap)
-          .getOrElse(Map.empty[String, (Long, Long)])
-        Staged(run, files.sorted, rows, stats)
-      }.toSeq
+      .map(f => LogCodec.readStaged(Files.readString(f.toPath))).toSeq
       .filterNot(s => published.contains(s.runId))
   }
 
@@ -1216,5 +1161,111 @@ object Checkpointing {
     Files.deleteIfExists(stagedPath(dir, runId))
     st.files.foreach(n => Files.deleteIfExists(Paths.get(s"$dir/$n")))
     st.files
+  }
+
+  // ------------------------------------------------------------ log codec
+  /** The log's file format, in one place: every record the log writes —
+    * snapshots, staged markers, tags, branch bases, compaction records and
+    * manifest lines — is rendered and parsed here with json4s. Records are
+    * compact JSON with a fixed key order. Readers ignore unknown keys, and
+    * a key that older writers did not emit decodes to its default. */
+  private[pipeline] object LogCodec {
+    import org.json4s._
+    import org.json4s.JsonDSL._
+    import org.json4s.jackson.JsonMethods
+
+    private def render(j: JValue): String =
+      JsonMethods.compact(JsonMethods.render(j))
+
+    private def statsJson(stats: Map[String, (Long, Long)]): JValue =
+      JObject(stats.toList.sortBy(_._1).map { case (f, (mn, mx)) =>
+        f -> JArray(List(JLong(mn), JLong(mx)))
+      })
+
+    def snapshot(s: Snapshot): String = render(
+      ("seq" -> s.seq) ~ ("run" -> s.runId) ~ ("rows" -> s.rows) ~
+        ("full" -> s.full) ~ ("rollback_of" -> s.rollbackOf) ~
+        ("spec" -> s.spec) ~ ("deletes" -> s.deletes) ~
+        ("files" -> s.files) ~ ("stats" -> statsJson(s.stats)))
+
+    def staged(s: Staged): String = render(
+      ("run" -> s.runId) ~ ("rows" -> s.rows) ~ ("files" -> s.files) ~
+        ("stats" -> statsJson(s.stats)))
+
+    def tag(name: String, seq: Int): String =
+      render(("name" -> name) ~ ("seq" -> seq))
+
+    def branchBase(name: String, baseSeq: Int): String =
+      render(("name" -> name) ~ ("base_seq" -> baseSeq))
+
+    def compaction(runId: String, filesBefore: Int, filesAfter: Int,
+        rows: Long): String =
+      render(("run" -> runId) ~ ("files_before" -> filesBefore) ~
+        ("files_after" -> filesAfter) ~ ("rows" -> rows))
+
+    /** Frames without the stats column get `null` ord bounds. */
+    def manifestLine(runId: String, partition: Int, rows: Long,
+        range: Option[(Long, Long)]): String = {
+      def bound(f: ((Long, Long)) => Long): JValue =
+        range.fold[JValue](JNull)(r => JLong(f(r)))
+      render(("run" -> runId) ~ ("partition" -> partition) ~ ("rows" -> rows) ~
+        ("min_doc_ord" -> bound(_._1)) ~ ("max_doc_ord" -> bound(_._2)))
+    }
+
+    private def long(v: JValue): Option[Long] = v match {
+      case JInt(n) => Some(n.toLong)
+      case JLong(n) => Some(n)
+      case _ => None
+    }
+    private def num(j: JValue, k: String): Option[Long] = long(j \ k)
+    private def str(j: JValue, k: String): Option[String] = j \ k match {
+      case JString(v) => Some(v)
+      case _ => None
+    }
+    private def strs(j: JValue, k: String): Option[Seq[String]] = j \ k match {
+      case JArray(vs) => Some(vs.collect { case JString(v) => v })
+      case _ => None
+    }
+    private def need[T](k: String, v: Option[T]): T = v.getOrElse(
+      throw new IllegalArgumentException(s"log record has no \"$k\" key"))
+
+    /** The keys snapshots and staged markers share; files as written. */
+    private def batch(j: JValue): Staged = {
+      val stats = j \ "stats" match {
+        case JObject(fs) => fs.flatMap {
+          case (f, JArray(List(mn, mx))) =>
+            for (lo <- long(mn); hi <- long(mx)) yield f -> (lo, hi)
+          case _ => None
+        }.toMap
+        case _ => Map.empty[String, (Long, Long)]
+      }
+      Staged(need("run", str(j, "run")), need("files", strs(j, "files")),
+        need("rows", num(j, "rows")), stats)
+    }
+
+    def readSnapshot(text: String): Snapshot = {
+      val j = JsonMethods.parse(text)
+      val b = batch(j)
+      Snapshot(need("seq", num(j, "seq")).toInt, b.runId, b.files, b.rows,
+        full = j \ "full" == JBool(true),
+        deletes = strs(j, "deletes").getOrElse(Nil),
+        stats = b.stats,
+        // snapshots from before spec evolution tracked doc_ord
+        spec = str(j, "spec").getOrElse("doc_ord"),
+        rollbackOf = num(j, "rollback_of").map(_.toInt))
+    }
+
+    def readStaged(text: String): Staged = {
+      val b = batch(JsonMethods.parse(text))
+      b.copy(files = b.files.sorted)
+    }
+
+    def readTag(text: String): (String, Int) = {
+      val j = JsonMethods.parse(text)
+      need("name", str(j, "name")) -> need("seq", num(j, "seq")).toInt
+    }
+
+    def readBranchBase(text: String): Int =
+      need("base_seq", num(JsonMethods.parse(text), "base_seq")).toInt
   }
 }

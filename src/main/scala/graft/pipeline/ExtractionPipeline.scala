@@ -33,7 +33,7 @@ import graft.layout._
   * rows, orders of magnitude smaller than the corpus). The ffill/No. window
   * is intentionally global-ordered — the reference's semantics (pandas
   * implicit row order, step_5_pivot_table.py:78-85) REQUIRE one total
-  * order; the scale path is [[pivotFrameScalable]].
+  * order.
   */
 object ExtractionPipeline {
 
@@ -67,11 +67,10 @@ object ExtractionPipeline {
       val candidates: Dataset[CandidateTable],
       val merged: Dataset[MergedDoc],
       corpusThunk: () => DataFrame,
-      pivotThunk: DataFrame => DataFrame,
       val outSpans: Dataset[OutSpan],
       persisted: Option[Dataset[_]]) {
     lazy val corpus: DataFrame = corpusThunk()
-    lazy val pivot: DataFrame = pivotThunk(corpus)
+    lazy val pivot: DataFrame = pivotFrame(corpus.sparkSession, corpus)
     /** Release cached intermediates (benchmark loops re-run the pipeline
       * many times; leaked persists degrade later runs). */
     def unpersist(): Unit = persisted.foreach(_.unpersist())
@@ -84,14 +83,10 @@ object ExtractionPipeline {
     *                   either way (asserted in SaltedExtractSpec).
     * @param persistIntermediate persist the per-document dataset, so a
     *                   caller reading several outputs parses once; a caller
-    *                   reading each output once (ExtractMain) opts out.
-    * @param scalablePivot route step_5 through [[pivotFrameScalable]]
-    *                      (no single-partition window; byte-identical
-    *                      output — the 10^12-scale path) */
+    *                   reading each output once (ExtractMain) opts out. */
   def run(spark: SparkSession, docs: Dataset[DocRow],
       saltPages: Option[Int] = None,
-      persistIntermediate: Boolean = true,
-      scalablePivot: Boolean = false): Result = {
+      persistIntermediate: Boolean = true): Result = {
     import spark.implicits._
 
     // candidates keep their own lineage (a second parse when read): only
@@ -112,11 +107,8 @@ object ExtractionPipeline {
       else outs0
 
     val merged = outs.flatMap(_.merged)
-    val pivotFn: DataFrame => DataFrame =
-      if (scalablePivot) c => pivotFrameScalable(spark, c)
-      else c => pivotFrame(spark, c)
     new Result(outs.map(_.stat), candidates, merged,
-      () => corpusFrame(spark, merged.flatMap(CorpusSheet.sheetRows)), pivotFn,
+      () => corpusFrame(spark, merged.flatMap(CorpusSheet.sheetRows)),
       outs.flatMap(_.spans), if (persistIntermediate) Some(outs) else None)
   }
 
@@ -156,103 +148,22 @@ object ExtractionPipeline {
 
   /** step_5: fuzzy L1, L2 derivation, global forward-fill, 1-based No.
     *
-    * This default variant uses one GLOBAL window (single-partition sort) —
-    * exactly the reference's pandas semantics, fine at sheet scale (rows =
-    * extracted table rows, orders of magnitude below corpus scale). The
-    * scale path is [[pivotFrameScalable]]: identical output, no global
-    * sort. */
+    * One GLOBAL window (single-partition sort) — exactly the reference's
+    * pandas semantics, fine at sheet scale (rows = extracted table rows,
+    * orders of magnitude below corpus scale). L2 = '' when Criterion
+    * equals the matched L1, else Criterion (NaN == x is False in pandas,
+    * so null Criterion keeps null L2). */
   def pivotFrame(spark: SparkSession, corpus: DataFrame): DataFrame = {
+    val matchL1 = udf((s: String) => Option(CriterionTaxonomy.matchL1(s)))
     val w = Window.orderBy("doc_ord", "row_idx")
     val ffillW = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    pivotBase(corpus)
-      .withColumn("L1", last("L1_raw", ignoreNulls = true).over(ffillW))
-      .withColumn("No.", row_number().over(w))
-      .select(col("`No.`"), col("FileName"), col("L1"), col("L2"),
-        col("SummaryAssessment"), col("Rating"))
-  }
-
-  /** Shared narrow part of step_5: L1 classification + L2 derivation.
-    * L2 = '' when Criterion equals the matched L1, else Criterion
-    * (NaN == x is False in pandas, so null Criterion keeps null L2). */
-  private def pivotBase(corpus: DataFrame): DataFrame = {
-    val matchL1 = udf((s: String) => Option(CriterionTaxonomy.matchL1(s)))
     corpus
       .withColumn("L1_raw", matchL1(col("Criterion")))
       .withColumn("L2", when(col("Criterion") === col("L1_raw"), lit(""))
         .otherwise(col("Criterion")))
-  }
-
-  /** Scale-safe step_5: byte-identical to [[pivotFrame]] (asserted on the
-    * fixture corpus in PipelineSpec) with NO single-partition window.
-    *
-    * The global order (doc_ord, row_idx) is realized as a range
-    * repartition + within-partition sort; the cross-partition running
-    * state — the 1-based `No.` offset and the forward-fill carry — is
-    * reduced to ONE tiny driver pass over per-partition summaries
-    * (numPartitions rows: row count + last non-null L1), the classic
-    * two-pass zipWithIndex shape. The summary pass and the output pass
-    * traverse the same deterministic plan (range boundaries are sampled
-    * with fixed seeds from the same input), so the partitioning agrees. */
-  def pivotFrameScalable(spark: SparkSession, corpus: DataFrame,
-      numPartitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val n = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val sorted = pivotBase(corpus)
-      .select(col("doc_ord"), col("row_idx"), col("FileName"), col("L1_raw"),
-        col("L2"), col("SummaryAssessment"), col("Rating"))
-      .repartitionByRange(n, col("doc_ord"), col("row_idx"))
-      .sortWithinPartitions("doc_ord", "row_idx")
-    val schema = sorted.schema
-    val l1Idx = schema.fieldIndex("L1_raw")
-
-    // pass 1: per-partition (id, rows, last non-null L1) — numPartitions rows
-    import spark.implicits._
-    val summaries = sorted.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var cnt = 0L
-      var last: String = null
-      it.foreach { r =>
-        cnt += 1
-        if (!r.isNullAt(l1Idx)) last = r.getString(l1Idx)
-      }
-      Iterator.single((pid, cnt, Option(last)))
-    }.collect().sortBy(_._1)
-
-    // driver-side prefix scan (numPartitions entries — bounded by cluster)
-    val offsets = new Array[Long](n)
-    val carries = new Array[String](n)
-    var acc = 0L
-    var carry: String = null
-    summaries.foreach { case (pid, cnt, last) =>
-      offsets(pid) = acc
-      carries(pid) = carry
-      acc += cnt
-      last.foreach(carry = _)
-    }
-
-    // pass 2: same deterministic plan, fill with the per-partition seeds
-    val outSchema = StructType(Seq(
-      StructField("No.", IntegerType, nullable = false),
-      StructField("FileName", schema("FileName").dataType),
-      StructField("L1", StringType),
-      StructField("L2", schema("L2").dataType),
-      StructField("SummaryAssessment", schema("SummaryAssessment").dataType),
-      StructField("Rating", schema("Rating").dataType)))
-    val fIdx = schema.fieldIndex("FileName")
-    val l2Idx = schema.fieldIndex("L2")
-    val saIdx = schema.fieldIndex("SummaryAssessment")
-    val rIdx = schema.fieldIndex("Rating")
-    sorted.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var no = offsets(pid)
-      var c = carries(pid)
-      it.map { r =>
-        no += 1
-        if (!r.isNullAt(l1Idx)) c = r.getString(l1Idx)
-        Row(no.toInt, r.get(fIdx), c, r.get(l2Idx), r.get(saIdx), r.get(rIdx))
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
+      .withColumn("L1", last("L1_raw", ignoreNulls = true).over(ffillW))
+      .withColumn("No.", row_number().over(w))
+      .select(col("`No.`"), col("FileName"), col("L1"), col("L2"),
+        col("SummaryAssessment"), col("Rating"))
   }
 }

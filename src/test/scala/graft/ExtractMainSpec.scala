@@ -81,6 +81,39 @@ class ExtractMainSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       ExtractMain.maintain(spark, out, Array("defrag")))
   }
+
+  test("stdout of run and maintain snapshots: one JSON object per line, " +
+      "keys in order, three-decimal seconds") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    spark.sparkContext.setLogLevel("WARN")
+    val base = java.nio.file.Files.createTempDirectory("graft-emout").toString
+    val input = s"$base/in"
+    val out = s"$base/out"
+    spark.createDataset(graft.layout.FixtureCorpus.fixtureDocs.take(4))
+      .write.parquet(input)
+    def stdout(body: => Unit): Seq[JObject] = {
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(buf)(body)
+      buf.toString("UTF-8").linesIterator.toSeq.map { l =>
+        // the scaling script sed-parses "seconds" as digits.3-digits
+        if (l.contains("\"seconds\""))
+          assert(l.matches(""".*"seconds":\d+\.\d{3}[,}].*"""), l)
+        JsonMethods.parse(l).asInstanceOf[JObject]
+      }
+    }
+    val ran = stdout(ExtractMain.run(spark, input, out, saltPages = 16))
+    assert(ran.map(_.obj.map(_._1)) == Seq(List("run", "docs_committed",
+      "total_committed", "snapshots", "seconds")))
+    assert(ran.head \ "docs_committed" == JInt(4))
+    val snaps = stdout(ExtractMain.maintain(spark, out, Array("snapshots")))
+    assert(snaps.map(_ \ "table") == Seq(JString("stats"), JString("spans")))
+    snaps.foreach { j =>
+      assert(j.obj.map(_._1) == List("table", "seq", "run", "rows", "full",
+        "files", "delete_sets"))
+      assert(j \ "run" == ran.head \ "run")
+    }
+  }
 }
 
 /** The audited (write-audit-publish) launch mode. */

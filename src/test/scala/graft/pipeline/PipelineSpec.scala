@@ -240,23 +240,6 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("scalable pivot is byte-identical to the global-window pivot, no global sort") {
-    val scalable = ExtractionPipeline.pivotFrameScalable(spark, result.corpus,
-      numPartitions = 4)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getString(4), r.getString(5))).sortBy(_._1).toVector
-    assert(rows(scalable) == rows(result.pivot))
-    // the scale property: no single-partition exchange anywhere in the plan
-    val plan = scalable.queryExecution.executedPlan.toString
-    assert(!plan.contains("SinglePartition"), s"global sort found:\n$plan")
-    // the flagged pipeline route produces the same thing
-    val flagged = ExtractionPipeline.run(spark,
-      spark.createDataset(FixtureCorpus.fixtureDocs),
-      persistIntermediate = false, scalablePivot = true)
-    assert(rows(flagged.pivot) == rows(result.pivot))
-  }
-
   test("output span sequences are deterministic across runs") {
     val docs = spark.createDataset(FixtureCorpus.fixtureDocs)
     val again = ExtractionPipeline.run(spark, docs)
@@ -883,6 +866,28 @@ class WapSpec extends AnyFunSuite {
     }
   }
 
+  test("runIds with quotes, backslashes and commas round-trip through the log") {
+    spark.sparkContext.setLogLevel("WARN")
+    val dir = freshDir("escape")
+    val (c, st, d) = ("c\"1,\\x", "s\\\"2,", "d,\"3\\")
+    Checkpointing.commit(rows(0 until 4), dir, c)
+    Checkpointing.stage(rows(4 until 6), dir, st)
+    assert(Checkpointing.staged(dir).map(_.runId) == Seq(st))
+    Checkpointing.publish(dir, st)
+    assert(Checkpointing.deleteWhere(rows(1 until 2), dir, d) == 1)
+    assert(Checkpointing.staged(dir).isEmpty)
+    assert(Checkpointing.snapshots(dir).map(_.runId) == Seq(c, st, d))
+    assert(Checkpointing.history(spark, dir).select("run_id").as[String]
+      .collect().toSeq == Seq(c, st, d))
+    assert(Checkpointing.readAt(spark, dir, 3).count() == 5)
+    // the rebase leaves all three below it: expiry must find their files
+    Checkpointing.upsert(rows(0 until 1, "fix"), dir, "fix")
+    assert(Checkpointing.expireSnapshots(dir) == Seq(c, st, d))
+    assert(new java.io.File(dir + "_manifest").list()
+      .filter(_.startsWith("snapshot-")).toSeq == Seq("snapshot-00004-fix.json"))
+    assert(Checkpointing.readAt(spark, dir, 4).count() == 5)
+  }
+
   test("stage/publish duplicate-run guards") {
     spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("wap-guards")
@@ -939,5 +944,72 @@ class WapSpec extends AnyFunSuite {
       Checkpointing.merge(rows(60 until 61).unionByName(rows(60 until 61)),
         dir, "m4"))
     assert(Checkpointing.snapshots(dir).size == snapsBefore)
+  }
+}
+
+/** The snapshot log's file format. Each golden record below was written by
+  * the string-built writer the codec replaced; the codec must render the
+  * same record byte for byte and read it back unchanged. */
+class LogCodecSpec extends AnyFunSuite {
+  import Checkpointing.{LogCodec, Snapshot, Staged}
+
+  test("log records keep their on-disk format; old-shape snapshots read " +
+      "with today's defaults") {
+    val p = "part-00000-a529fcb9-f309-422b-9a58-0a82faa62cdc-c000.snappy.parquet"
+    val q = "part-00000-d1d369ba-5c0a-4de2-90e3-6d4af1b60c7f-c000.snappy.parquet"
+    val s0 = "part-00000-66b2caed-23c9-44d7-b7dd-9f4b27462010-c000.snappy.parquet"
+    val s1 = "part-00001-66b2caed-23c9-44d7-b7dd-9f4b27462010-c000.snappy.parquet"
+    val st = "part-00000-5aa4542c-aa2b-4ab3-bd16-d5ed84709bf8-c000.snappy.parquet"
+    val snaps = Seq(
+      "delta snapshot with stats" ->
+        Snapshot(1, "r1", Seq(p), 5, full = false, stats = Map(p -> (1L, 5L))),
+      "delta snapshot without stats" -> Snapshot(2, "r2", Seq(q), 3, full = false),
+      "delete snapshot" ->
+        Snapshot(3, "del1", Nil, 1, full = false, deletes = Seq("del1")),
+      "rollback snapshot" ->
+        Snapshot(4, "rb1", Nil, 0, full = true, rollbackOf = Some(2)),
+      "two files under an evolved spec" -> Snapshot(1, "two", Seq(s0, s1), 10,
+        full = false, stats = Map(s1 -> (10L, 90L), s0 -> (40L, 100L)),
+        spec = "s"))
+    val golden = Seq(
+      """{"seq":1,"run":"r1","rows":5,"full":false,"spec":"doc_ord","deletes":[],"files":["part-00000-a529fcb9-f309-422b-9a58-0a82faa62cdc-c000.snappy.parquet"],"stats":{"part-00000-a529fcb9-f309-422b-9a58-0a82faa62cdc-c000.snappy.parquet":[1,5]}}""",
+      """{"seq":2,"run":"r2","rows":3,"full":false,"spec":"doc_ord","deletes":[],"files":["part-00000-d1d369ba-5c0a-4de2-90e3-6d4af1b60c7f-c000.snappy.parquet"],"stats":{}}""",
+      """{"seq":3,"run":"del1","rows":1,"full":false,"spec":"doc_ord","deletes":["del1"],"files":[],"stats":{}}""",
+      """{"seq":4,"run":"rb1","rows":0,"full":true,"rollback_of":2,"spec":"doc_ord","deletes":[],"files":[],"stats":{}}""",
+      """{"seq":1,"run":"two","rows":10,"full":false,"spec":"s","deletes":[],"files":["part-00000-66b2caed-23c9-44d7-b7dd-9f4b27462010-c000.snappy.parquet","part-00001-66b2caed-23c9-44d7-b7dd-9f4b27462010-c000.snappy.parquet"],"stats":{"part-00000-66b2caed-23c9-44d7-b7dd-9f4b27462010-c000.snappy.parquet":[40,100],"part-00001-66b2caed-23c9-44d7-b7dd-9f4b27462010-c000.snappy.parquet":[10,90]}}""")
+    snaps.zip(golden).foreach { case ((what, s), g) =>
+      assert(LogCodec.snapshot(s) == g, what)
+      assert(LogCodec.readSnapshot(g) == s, what)
+    }
+
+    val staged = Staged("st1", Seq(st), 2, Map(st -> (9L, 10L)))
+    val stagedGolden = """{"run":"st1","rows":2,"files":["part-00000-5aa4542c-aa2b-4ab3-bd16-d5ed84709bf8-c000.snappy.parquet"],"stats":{"part-00000-5aa4542c-aa2b-4ab3-bd16-d5ed84709bf8-c000.snappy.parquet":[9,10]}}"""
+    assert(LogCodec.staged(staged) == stagedGolden)
+    assert(LogCodec.readStaged(stagedGolden) == staged)
+    assert(LogCodec.tag("v1", 1) == """{"name":"v1","seq":1}""")
+    assert(LogCodec.readTag("""{"name":"v1","seq":1}""") == ("v1" -> 1))
+    assert(LogCodec.branchBase("audit", 4) == """{"name":"audit","base_seq":4}""")
+    assert(LogCodec.readBranchBase("""{"name":"audit","base_seq":4}""") == 4)
+    assert(LogCodec.compaction("k1", 2, 1, 6) ==
+      """{"run":"k1","files_before":2,"files_after":1,"rows":6}""")
+    assert(LogCodec.manifestLine("r1", 0, 5, Some((1L, 5L))) ==
+      """{"run":"r1","partition":0,"rows":5,"min_doc_ord":1,"max_doc_ord":5}""")
+    assert(LogCodec.manifestLine("r2", 0, 3, None) ==
+      """{"run":"r2","partition":0,"rows":3,"min_doc_ord":null,"max_doc_ord":null}""")
+
+    // snapshots from before deletes, stats, spec evolution and rollback
+    // carry none of those keys; keys a later writer adds are ignored
+    Seq(
+      """{"seq":7,"run":"old","rows":3,"full":false,"files":["a.parquet","b.parquet"]}""" ->
+        Snapshot(7, "old", Seq("a.parquet", "b.parquet"), 3, full = false),
+      """{"seq":8,"run":"oldest","rows":0,"files":[]}""" ->
+        Snapshot(8, "oldest", Nil, 0, full = false),
+      """{"seq":9,"run":"new","rows":1,"full":true,"files":["c"],"commit":{"ms":5}}""" ->
+        Snapshot(9, "new", Seq("c"), 1, full = true)
+    ).foreach { case (text, want) =>
+      assert(LogCodec.readSnapshot(text) == want, text)
+    }
+    intercept[IllegalArgumentException](
+      LogCodec.readSnapshot("""{"seq":1,"rows":0,"files":[]}"""))
   }
 }
