@@ -31,8 +31,11 @@ import org.apache.spark.storage.StorageLevel
   * only ~2.8x total throughput from 8 -> 32 threads (0.70 ceiling), so NO
   * wall-clock job can reach 0.8 on that pair. The scaling pair is therefore
   * N=2 vs 4N=8 (physical cores; calibrated ceiling ~1.0). Shuffle blocks
-  * go to tmpfs (see session()) so the comparison measures the job rather
-  * than the box's single shared disk.
+  * go to the scratch root (tmpfs when available, see [[LocalSpark]]): on a
+  * single box every shuffle byte crosses ONE shared disk, a resource a
+  * multi-executor cluster scales WITH the node count, so leaving them on
+  * disk would make the N vs 4N comparison measure the box's disk, not the
+  * job.
   *
   * NOISE PROTOCOL (round 4 — the round-3 driver window was ~10x loaded:
   * its artifact recorded full-job efficiency 0.66 against rounds the same
@@ -79,26 +82,14 @@ object Bench {
     * per-task fixed cost dominates, the opposite regime from the 2-core
     * scaling side. */
   private def session(cores: Int, shufflePartitions: Int = 0): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions",
-        math.max(if (shufflePartitions > 0) shufflePartitions else cores, 2))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // Shuffle blocks to tmpfs when available: on this single box every
-    // shuffle byte crosses ONE shared disk, a resource a multi-executor
-    // cluster scales WITH the node count (each executor brings its own
-    // local disks) — leaving it on disk makes the N vs 4N comparison
-    // measure the box's disk, not the job. Opt out: SPARK_GRAFT_DISK_SHUFFLE=1.
-    if (!sys.env.get("SPARK_GRAFT_DISK_SHUFFLE").contains("1") &&
-        java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm"))) {
-      b.config("spark.local.dir", "/dev/shm/graft-bench-shuffle")
+    val b = LocalSpark.builder(s"graft-bench-$cores", cores)
+    if (shufflePartitions > 0) {
+      b.config("spark.sql.shuffle.partitions", math.max(shufflePartitions, 2))
+      // Spark's default coalescing, so scaling rounds compare with earlier ones
+      b.config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
     }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
+    b.getOrCreate()
   }
 
   /** Memory-bandwidth calibration: total streaming-sum passes/sec over

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -23,15 +22,7 @@ object BenchExtra {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val rounds = sys.env.getOrElse("SPARK_GRAFT_EXTRA_ROUNDS", "2").toInt
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-benchextra")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.builder("graft-benchextra", cpus).getOrCreate()
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)

@@ -1106,7 +1106,7 @@ object FixtureQueries {
     def q(s: String): String =
       if (s == null) "NULL" else "'" + s.replace("'", "''") + "'"
     FixtureCorpus.fixtureDocs.map { d =>
-      s"(${q(d.doc_id)}, ${q(SpanDoc.firstPageText(d.spans))})"
+      s"(${q(d.doc_id)}, ${q(SpanDoc.firstPageText(SpanDoc.pages(d.spans)))})"
     }.mkString(",\n  ")
   }
 

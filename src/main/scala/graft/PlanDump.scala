@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool for the optimization rounds (guide §1.1/§7.2): dump
   * `.explain("formatted")` for declared queries to files, so plan shapes
   * (Exchange count, join strategy, PushedFilters/ReadSchema) can be
@@ -21,15 +19,7 @@ object PlanDump {
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_OUT", "/root/repo/plans/r06")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLANS_SUFFIX", "before")
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.builder("graft-plandump", cpus).getOrCreate()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.split(',').exists(n.contains)) }

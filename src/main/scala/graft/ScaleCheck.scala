@@ -38,24 +38,15 @@ import graft.ops.{Components, Dedup, LinkGraph, Similarity}
   */
 object ScaleCheck {
 
-  private def session(cores: Int): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-scale-check")
-      .config("spark.sql.shuffle.partitions", math.max(cores, 2))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+  private def session(cores: Int): SparkSession =
+    LocalSpark.builder("graft-scale-check", cores)
       // the corpora are one ~50 MB file per table: split them across all
       // cores (default 128 MB would hand each table to a single task)
       .config("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
-    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm"))) {
-      b.config("spark.local.dir", "/dev/shm/graft-scale-shuffle")
-    }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+      // Spark's default coalescing, so the scale table compares with earlier rounds
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
+      .getOrCreate()
 
   /** Collects the contraction's round trace: initial deduped edges
     * (round -1), surviving edges after each round, and the local-tail
@@ -199,8 +190,7 @@ object ScaleCheck {
         pairs.count()
         val (tF, cF) = timed { () =>
           Components.incrementalComponents(
-            spark.read.parquet(s"$scratch/prior"), pairs, "doc_a", "doc_b")
-            .count()
+            spark.read.parquet(s"$scratch/prior"), pairs, "doc_a", "doc_b")(_.count())
         }
         pairs.unpersist()
         foldTime = math.min(foldTime, tF); nLabeled = cF

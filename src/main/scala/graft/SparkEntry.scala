@@ -303,10 +303,6 @@ object SparkEntry {
       //      equi-key — no nested loop even though the query never heard
       //      of RangeJoin
       "q28_rangejoin_rule" -> ((s, d) => {
-        if (!s.experimental.extraOptimizations.contains(graft.plans.RangeJoinRewrite))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.RangeJoinRewrite
-        s.conf.set(graft.plans.RangeJoinRewrite.BinWidthKey, "7200")
         val ev = t(s, d, "events")
         val clicks = ev.filter(col("event_type") === "click")
           .select(col("user_id"), unix_timestamp(col("ts")).as("x"),
@@ -712,15 +708,13 @@ object SparkEntry {
           TextAnalysis.fingerprint64(col("text")).as("fp64"))
         graft.io.Bucketed.writeBucketed(left, "graft_x20_left", s"$dir/left", 8, "doc_id")
         graft.io.Bucketed.writeBucketed(right, "graft_x20_right", s"$dir/right", 8, "doc_id")
-        val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
         try {
-          val joined = s.table("graft_x20_left").join(s.table("graft_x20_right"), "doc_id")
+          val joined = s.table("graft_x20_left")
+            .join(s.table("graft_x20_right").hint("merge"), "doc_id") // force SMJ
           val n = joined.count()
           val ex = graft.io.Bucketed.shuffleExchangeCount(joined).toLong
           Seq(("joined_rows", n), ("shuffle_exchanges_join", ex)).toDF("metric", "n")
         } finally {
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
           s.sql("DROP TABLE IF EXISTS graft_x20_left")
           s.sql("DROP TABLE IF EXISTS graft_x20_right")
         }
@@ -876,7 +870,7 @@ object SparkEntry {
         graft.ops.Components.incrementalComponents(prior,
           graft.ops.Dedup.incrementalMinhashPairs(corpus, delta,
             minJaccardBp = 2000L),
-          "doc_a", "doc_b")
+          "doc_a", "doc_b")(_.localCheckpoint()) // materialized before the fold releases its caches
       }),
       // ---- vocabulary coverage: minimal frequency-ranked vocab prefix
       //      covering 95% of token instances — the global cumulative sum
@@ -1412,16 +1406,11 @@ object SparkEntry {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$dir/part-corrupt.parquet"),
           "this is not parquet".getBytes)
-        val prev = s.conf.getOption("spark.sql.files.ignoreCorruptFiles")
-        s.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
-        try {
-          import s.implicits._
-          val (n, tot) = s.read.parquet(dir)
-            .agg(count(lit(1)).cast("long"), sum("n_chars").cast("long"))
-            .as[(Long, Long)].head()
-          Seq((n, tot)).toDF("n_docs", "total_chars")
-        } finally prev.fold(s.conf.unset("spark.sql.files.ignoreCorruptFiles"))(
-          s.conf.set("spark.sql.files.ignoreCorruptFiles", _))
+        import s.implicits._
+        val (n, tot) = s.read.option("ignoreCorruptFiles", "true").parquet(dir)
+          .agg(count(lit(1)).cast("long"), sum("n_chars").cast("long"))
+          .as[(Long, Long)].head()
+        Seq((n, tot)).toDF("n_docs", "total_chars")
       }),
       // ---- overlapping token-window chunking (RAG/context prep):
       //      map-side fan-out only, chunk boundaries a pure function of
@@ -1786,15 +1775,10 @@ object SparkEntry {
       //      output, like x20's exchange count.
       "x47_bloom_join" -> ((s, d) => {
         import s.implicits._
-        val keys = Seq(
-          "spark.sql.autoBroadcastJoinThreshold", // force the shuffle join
-          "spark.sql.optimizer.runtime.bloomFilter.enabled",
-          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-        val prev = keys.map(k => k -> s.conf.getOption(k))
-        s.conf.set(keys(0), "-1")
-        s.conf.set(keys(1), "true")
-        s.conf.set(keys(2), "0")
-        try {
+        ScopedConf(s,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force the shuffle join
+          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
           val facts = t(s, d, "lineitem")
             .select(col("l_partkey"), col("l_extendedprice"))
           val dim = t(s, d, "part").filter(col("p_size") === 1)
@@ -1811,8 +1795,6 @@ object SparkEntry {
             plan.contains("bloom_filter_agg(")) 1L else 0L
           Seq(("n_rows", row.getLong(0)), ("cents", row.getLong(1)),
             ("bloom_filters_injected", injected)).toDF("metric", "n")
-        } finally prev.foreach { case (k, v) =>
-          v.fold(s.conf.unset(k))(s.conf.set(k, _))
         }
       }),
       // ---- exact heavy hitters via Misra-Gries sketch + recount: pass 1
@@ -1874,40 +1856,7 @@ object SparkEntry {
             sum(length(col("text"))).as("total_text_len"))
       }))
 
-    (relational ++ text ++ curation ++ FixtureQueries.queries)
-      .map { case (n, f) => n -> tuned(f) }
-  }
-
-  /** Session tuning applied to every declared query (guide §2.2 / §9):
-    * AQE's partition coalescing defaults to `parallelismFirst=true`, which
-    * refuses to coalesce a post-shuffle stage below the cluster-parallelism
-    * floor — so a reduce stage whose whole input is a few KB still runs
-    * `defaultParallelism` tasks, and an iterative operator pays that tax
-    * per round. Spark's own config reference recommends setting it to
-    * false so partitions are sized by bytes
-    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`, default 64 MB —
-    * the production-sane size; §2.2's "fewer, larger reduce partitions").
-    * Scale-adaptive by construction: big shuffles still split at the
-    * advisory size, tiny ones stop paying 32 empty-task overheads.
-    * Results are partition-count-independent for every declared query
-    * (the full 183-query oracle sweep is the gate for that claim). */
-  private def tuned(fn: (SparkSession, String) => DataFrame)
-      : (SparkSession, String) => DataFrame = (s, d) => {
-    s.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-    // persist()/localCheckpoint() fragments otherwise run WITHOUT AQE
-    // (cached-plan partitioning is pinned by default), so the iterative
-    // operators' per-round materializations kept paying full-parallelism
-    // empty tasks no matter what the coalescing policy said
-    s.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    // streaming replays otherwise create their temp checkpoints (offset/
-    // commit logs + state-store delta files, many small fsync-latency
-    // writes per micro-batch) under java.io.tmpdir — put them on the
-    // scratch root instead (guide §6; Scratch cleans up at JVM exit).
-    // Query names are UUID-suffixed, so one location serves every replay.
-    if (s.conf.getOption("spark.sql.streaming.checkpointLocation").isEmpty)
-      s.conf.set("spark.sql.streaming.checkpointLocation",
-        graft.io.Scratch.dir("stream-ckpt").toString)
-    fn(s, d)
+    relational ++ text ++ curation ++ FixtureQueries.queries
   }
 
   // ====================================================================

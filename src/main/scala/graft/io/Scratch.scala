@@ -1,11 +1,11 @@
 package graft.io
 
 /** Process-scoped scratch root for the temp tables, sinks and streaming
-  * checkpoints the declared queries write and re-read (guide §6: scratch
-  * I/O belongs on the fastest local storage available — on a production
-  * executor its local SSDs; on this single box /dev/shm, the same choice
-  * `Bench.session` makes for shuffle blocks, because the one shared
-  * spinning disk is measurement environment, not job property).
+  * checkpoints the declared queries write and re-read, and for a local
+  * session's shuffle blocks ([[graft.LocalSpark]]) (guide §6: scratch I/O
+  * belongs on the fastest local storage available — on a production
+  * executor its local SSDs; on a single box /dev/shm, because the one
+  * shared disk is measurement environment, not job property).
   *
   * Parameterised for other deployments: `SPARK_GRAFT_SCRATCH_DIR`
   * overrides the root; when /dev/shm is absent (or the override unset on

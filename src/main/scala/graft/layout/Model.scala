@@ -140,13 +140,12 @@ object SpanDoc {
   }
 
   /** Page-1 text for publish-month extraction: concatenation of the first
-    * page's text-span lines, newline-joined (the analog of
+    * of [[pages]]' text-span lines, newline-joined (the analog of
     * page.get_textpage().extractText(), step_6_update_publish_month.py:17). */
-  def firstPageText(spans: Seq[Span]): String = {
-    pages(spans).headOption
+  def firstPageText(pages: Seq[Page]): String =
+    pages.headOption
       .map(_.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
       .getOrElse("")
-  }
 
   /** Approximate "file size": total characters across spans (deterministic
     * stand-in for the PDF byte size in Paper.file_size, step_1:22-25). */

@@ -280,12 +280,14 @@ object Components {
     * relabel against the remap), so it never shuffles; both are pinned in
     * PlanAuditSpec. The contraction itself runs on the SUPER-NODE graph —
     * one node per touched component or new vertex, one edge per delta
-    * pair — whose size is delta-bounded, never corpus-bounded. The two
-    * delta-sized persists stay cached for the life of the returned plan
-    * (they are re-read by both output legs). */
-  def incrementalComponents(prior: DataFrame, newEdges: DataFrame,
+    * pair — whose size is delta-bounded, never corpus-bounded. The
+    * labeling is lent to `use`: its two delta-sized persists (re-read by
+    * both output legs) are released when `use` returns, so `use` must run
+    * every action on the labeling it needs — a fold per micro-batch would
+    * otherwise leave two cached frames behind each batch. */
+  def incrementalComponents[A](prior: DataFrame, newEdges: DataFrame,
       srcCol: String = "src", dstCol: String = "dst",
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None)(use: DataFrame => A): A = {
     val p = prior.select(col(prior.columns.head).cast("long").as("id"),
       col(prior.columns(1)).cast("long").as("component"))
     val e0 = newEdges.select(col(srcCol).cast("long").as("src"),
@@ -319,7 +321,8 @@ object Components {
     val newVerts = endpoints.join(touched.select("id"), Seq("id"), "left_anti")
       .join(broadcast(remap), col("id") === col("old_lbl"), "left")
       .select(col("id"), coalesce(col("new_lbl"), col("id")).as("component"))
-    relabeled.unionByName(newVerts)
+    try use(relabeled.unionByName(newVerts))
+    finally { touched.unpersist(); e0.unpersist() }
   }
 
   /** Cluster summary for a near-dup pair set: one row per component with

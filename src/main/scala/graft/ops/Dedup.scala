@@ -210,16 +210,18 @@ object Dedup {
     * micro-batch-local frame: the plain spelling tokenizes the WHOLE
     * corpus on both join sides per micro-batch (x55's two-batch replay
     * paid four full-corpus tokenizations for a few hundred touched docs).
-    * The candidate frame is persisted for the life of the plan (it feeds
-    * two broadcasts and the touched-id set), and the touched docs'
-    * shingles are computed once and persisted. Row-identical to
+    * The candidate frame is persisted (it feeds two broadcasts and the
+    * touched-id set), and the touched docs' shingles are computed once and
+    * persisted; both are released when `use` returns, so `use` must run
+    * every action on the pairs it needs (a per-micro-batch caller would
+    * otherwise leave two cached frames behind each batch). Row-identical to
     * [[verifyPairs]]: an inner join on doc_a/doc_b never reads a doc no
     * candidate touches. NOT the default for the batch/incremental finders:
     * their candidate pipeline is the expensive end of the plan, and the
     * extra evaluation + cache jobs measured as a net loss there (q58
     * 51→62 jobs). */
-  def verifyPairsPrefiltered(candidates: DataFrame, docs: DataFrame,
-      minJaccardBp: Long, shingleN: Int = 3): DataFrame = {
+  def verifyPairsPrefiltered[A](candidates: DataFrame, docs: DataFrame,
+      minJaccardBp: Long, shingleN: Int = 3)(use: DataFrame => A): A = {
     val cand = candidates.persist(StorageLevel.MEMORY_AND_DISK)
     val touched = cand
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
@@ -229,11 +231,12 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val withA = broadcast(cand)
       .join(sh.toDF("doc_a", "sh_a"), Seq("doc_a"))
-    broadcast(withA)
+    try use(broadcast(withA)
       .join(sh.toDF("doc_b", "sh_b"), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         jaccardBp(col("sh_a"), col("sh_b")).as("jaccard_bp"))
-      .where(col("jaccard_bp") >= minJaccardBp)
+      .where(col("jaccard_bp") >= minJaccardBp))
+    finally { sh.unpersist(); cand.unpersist() }
   }
 
   /** LSH self-audit: measured RECALL of the banded MinHash pipeline

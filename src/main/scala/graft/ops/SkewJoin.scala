@@ -47,19 +47,12 @@ object SkewJoin {
     * it splits oversized shuffle partitions after seeing map output sizes,
     * but only when no downstream operator requires the join key's hash
     * partitioning — salting remains the a-priori fix for those plans. */
-  def withSkewTestConfs[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val confs = Map(
+  def withSkewTestConfs[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T =
+    graft.ScopedConf(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "4KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2KB",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2")
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-    }
-  }
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2")(body)
 
   /** The skewed join AQE must re-plan: 90% of a 200k-row stream collapses
     * onto key 0, joined against a small unique-key dim. Returned

@@ -80,7 +80,7 @@ object Extract {
       }
     }
     val cands = candidates.result()
-    val month = MonthFinder.findMonth(SpanDoc.firstPageText(doc.spans))
+    val month = MonthFinder.findMonth(SpanDoc.firstPageText(pages))
     val stat = PaperStat(
       doc_id = doc.doc_id,
       doc_ord = ord,

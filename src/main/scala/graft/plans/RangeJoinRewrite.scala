@@ -38,8 +38,8 @@ import org.apache.spark.sql.types.LongType
   * Set `spark.graft.rangejoin.enabled=false` to disable.
   *
   * Registered via [[GraftExtensions]]
-  * (`spark.sql.extensions=graft.plans.GraftExtensions`) or
-  * `spark.experimental.extraOptimizations :+= RangeJoinRewrite`.
+  * (`spark.sql.extensions=graft.plans.GraftExtensions`), which
+  * [[graft.LocalSpark]] and scripts/spark-submit-example.sh both set.
   */
 object RangeJoinRewrite extends Rule[LogicalPlan] {
 

@@ -35,12 +35,8 @@ object Events {
     * partitioning is fixed at query start — at the session's 32 partitions
     * a finite replay spends its time ticking ~empty stores through every
     * micro-batch (measured 38s -> 12s for the x24 join at sf0.1). */
-  private[streaming] def withReplayPartitions[A](spark: SparkSession)(body: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try body
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private[streaming] def withReplayPartitions[A](spark: SparkSession)(body: => A): A =
+    graft.ScopedConf(spark, "spark.sql.shuffle.partitions" -> "4")(body)
 
   /** The shared two-batch MemoryStream replay harness: feed `rows` split
     * mid-corpus (so the result must reflect cross-batch behavior — state

@@ -103,7 +103,7 @@ object StreamNearDup {
         .toDF()
     }
     Dedup.verifyPairsPrefiltered(cands.distinct(),
-      spark.createDataset(docs).toDF(), minJaccardBp)
+      spark.createDataset(docs).toDF(), minJaccardBp)(_.localCheckpoint())
   }
 
   /** Live dedup-cluster manifest: the pair stream above folded into a
@@ -163,10 +163,11 @@ object StreamNearDup {
         .toDF()
         .writeStream
         .foreachBatch { (cands: DataFrame, batchId: Long) =>
-          val pairs = Dedup.verifyPairsPrefiltered(cands.distinct(), corpus, minJaccardBp)
-          graft.ops.Components
-            .incrementalComponents(current, pairs, "doc_a", "doc_b")
-            .write.mode("overwrite").parquet(s"$manifestDir/v$batchId")
+          Dedup.verifyPairsPrefiltered(cands.distinct(), corpus, minJaccardBp) { pairs =>
+            graft.ops.Components.incrementalComponents(current, pairs, "doc_a", "doc_b") {
+              _.write.mode("overwrite").parquet(s"$manifestDir/v$batchId")
+            }
+          }
         }
         .start()
       try {

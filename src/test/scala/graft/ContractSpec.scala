@@ -26,4 +26,25 @@ class ContractSpec extends AnyFunSuite {
         s"$name has case-colliding columns: $cols")
     }
   }
+
+  test("declared queries leave the session's conf and optimizer rules as built") {
+    // a fresh session of the suite's context: same recipe conf, own state
+    val s = TestSpark.spark.newSession()
+    val changes = Seq("q01_pricing_summary", "q28_rangejoin_rule",
+        "x20_bucketed_join", "x33_corrupt_file_skip", "x31_aqe_skew_join",
+        "x47_bloom_join", "x13_stream_hourly").flatMap { name =>
+      val conf0 = s.conf.getAll
+      val rules0 = s.experimental.extraOptimizations
+      SparkEntry.queries(name)(s, TestSpark.sfDir)
+        .write.format("noop").mode("overwrite").save()
+      val conf = s.conf.getAll
+      val keys = (conf.keySet ++ conf0.keySet).toSeq.sorted
+        .filter(k => conf.get(k) != conf0.get(k))
+        .map(k => s"$name set $k: ${conf0.get(k)} -> ${conf.get(k)}")
+      val rules = s.experimental.extraOptimizations
+      keys ++ (if (rules == rules0) Nil
+        else Seq(s"$name set optimizer rules: $rules0 -> $rules"))
+    }
+    assert(changes.isEmpty, changes.mkString("\n"))
+  }
 }

@@ -11,7 +11,6 @@ class ExtractMainSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("fresh run -> full commit; re-run -> no-op; grown input -> delta only") {
-    spark.sparkContext.setLogLevel("WARN")
     val base = java.nio.file.Files.createTempDirectory("graft-emain").toString
     val input = s"$base/in"
     val out = s"$base/out"
@@ -86,7 +85,6 @@ class ExtractMainSpec extends AnyFunSuite {
       "keys in order, three-decimal seconds") {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    spark.sparkContext.setLogLevel("WARN")
     val base = java.nio.file.Files.createTempDirectory("graft-emout").toString
     val input = s"$base/in"
     val out = s"$base/out"
@@ -122,7 +120,6 @@ class ExtractMainAuditSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("maintain expire: metadata retention reachable from the ops surface") {
-    spark.sparkContext.setLogLevel("WARN")
     val base = java.nio.file.Files.createTempDirectory("graft-emexp").toString
     val input = s"$base/in"
     val out = s"$base/out"
@@ -145,7 +142,6 @@ class ExtractMainAuditSpec extends AnyFunSuite {
   }
 
   test("maintain rollback: the bad-deploy undo reachable from the ops surface") {
-    spark.sparkContext.setLogLevel("WARN")
     val base = java.nio.file.Files.createTempDirectory("graft-emrb").toString
     val input = s"$base/in"
     val out = s"$base/out"
@@ -165,7 +161,6 @@ class ExtractMainAuditSpec extends AnyFunSuite {
   }
 
   test("maintain branch ops: create, list, fast-forward from the ops surface") {
-    spark.sparkContext.setLogLevel("WARN")
     val base = java.nio.file.Files.createTempDirectory("graft-embr").toString
     val input = s"$base/in"
     val out = s"$base/out"
@@ -194,7 +189,6 @@ class ExtractMainAuditSpec extends AnyFunSuite {
 
   test("audited run: staged, audited, published — same result as plain; " +
       "re-run no-op") {
-    spark.sparkContext.setLogLevel("WARN")
     val base = java.nio.file.Files.createTempDirectory("graft-eaudit").toString
     val input = s"$base/in"; val out = s"$base/out"
     val docs = graft.layout.FixtureCorpus.fixtureDocs
@@ -224,7 +218,6 @@ class ExtractMainAuditSpec extends AnyFunSuite {
   }
 
   test("failed audit abandons both tables: nothing committed, no debris") {
-    spark.sparkContext.setLogLevel("WARN")
     val base = java.nio.file.Files.createTempDirectory("graft-eaudit2").toString
     val input = s"$base/in"; val out = s"$base/out"
     val docs = graft.layout.FixtureCorpus.fixtureDocs
@@ -246,7 +239,6 @@ class ExtractMainAuditSpec extends AnyFunSuite {
   }
 
   test("bench probe: count mode commits nothing, sink mode one table per rep") {
-    spark.sparkContext.setLogLevel("WARN")
     val base = java.nio.file.Files.createTempDirectory("graft-ebench").toString
     val input = s"$base/in"
     spark.createDataset(graft.layout.FixtureCorpus.fixtureDocs.take(6))

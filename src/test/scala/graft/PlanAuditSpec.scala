@@ -424,9 +424,7 @@ class PlanAuditSpec extends AnyFunSuite
     val corpus = spark.table("graft_scrub_bkt_corpus")
     val drops = Seq((5L, Seq(0, 1)), (17L, Seq(2)), (23L, Seq(0)))
       .toDF("doc_id", "drops")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    try {
+    try graft.ScopedConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val out = graft.ops.Dedup.rebuildFromDrops(corpus, drops, unitTokens = 1)
       val sets = shuffleOutputSetsOf(out)
       // exactly one exchange — the drops side aligning to the corpus's
@@ -441,10 +439,7 @@ class PlanAuditSpec extends AnyFunSuite
       assert(got(5L) == "beta gamma delta")
       assert(got(17L) == "tok3 alpha gamma delta")
       assert(got(1L) == "tok1 alpha beta gamma delta")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS graft_scrub_bkt_corpus")
-    }
+    } finally spark.sql("DROP TABLE IF EXISTS graft_scrub_bkt_corpus")
   }
 
   test("q58 incremental components: the corpus-scale prior never shuffles " +
@@ -462,26 +457,27 @@ class PlanAuditSpec extends AnyFunSuite
       (col("id") - pmod(col("id"), lit(5L))).as("component"))
     val delta = Seq((3L, 7L), (10000L, 20002L), (20003L, 30001L),
       (60001L, 60002L), (60002L, 10001L)).toDF("src", "dst")
-    val out = graft.ops.Components.incrementalComponents(prior, delta)
-    out.collect()
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val self = p match { case _: ShuffleExchangeLike => Seq(p); case _ => Nil }
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case o => o.children
+    graft.ops.Components.incrementalComponents(prior, delta) { out =>
+      out.collect()
+      def walk(p: SparkPlan): Seq[SparkPlan] = {
+        val self = p match { case _: ShuffleExchangeLike => Seq(p); case _ => Nil }
+        val kids = p match {
+          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+          case q: QueryStageExec => Seq(q.plan)
+          case o => o.children
+        }
+        self ++ kids.flatMap(walk)
       }
-      self ++ kids.flatMap(walk)
+      val exchanges = walk(out.queryExecution.executedPlan)
+      val shuffledRecords = exchanges.flatMap(_.metrics.collect {
+        case (k, m) if k.toLowerCase.contains("recordswritten") => m.value
+      }).sum
+      assert(shuffledRecords < 5000,
+        s"prior leaked into a shuffle: $shuffledRecords records across " +
+          s"${exchanges.size} exchanges")
+      val plan = out.queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin"), plan.take(3000))
     }
-    val exchanges = walk(out.queryExecution.executedPlan)
-    val shuffledRecords = exchanges.flatMap(_.metrics.collect {
-      case (k, m) if k.toLowerCase.contains("recordswritten") => m.value
-    }).sum
-    assert(shuffledRecords < 5000,
-      s"prior leaked into a shuffle: $shuffledRecords records across " +
-        s"${exchanges.size} exchanges")
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan.take(3000))
   }
 
   test("near-dup bucket joins: no shuffle carries an array or raw-text column") {

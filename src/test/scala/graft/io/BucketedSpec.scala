@@ -17,9 +17,8 @@ class BucketedSpec extends AnyFunSuite {
     Bucketed.writeBucketed(left, "graft_bkt_left", s"$dir/left", 8, "doc_id")
     Bucketed.writeBucketed(right, "graft_bkt_right", s"$dir/right", 8, "doc_id")
     try {
-      val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      try {
+      // force SMJ
+      graft.ScopedConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val joined = spark.table("graft_bkt_left")
           .join(spark.table("graft_bkt_right"), "doc_id")
         assert(joined.count() == 1000)
@@ -33,7 +32,7 @@ class BucketedSpec extends AnyFunSuite {
           .join(spark.read.parquet(s"$dir/pright"), "doc_id")
         assert(plain.count() == 1000)
         assert(Bucketed.shuffleExchangeCount(plain) >= 1)
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+      }
     } finally {
       spark.sql("DROP TABLE IF EXISTS graft_bkt_left")
       spark.sql("DROP TABLE IF EXISTS graft_bkt_right")

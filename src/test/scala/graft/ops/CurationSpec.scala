@@ -169,8 +169,8 @@ class CurationSpec extends AnyFunSuite {
       val delta = Seq.fill(15)((rnd.nextInt(70).toLong, rnd.nextInt(70).toLong))
         .filter(p => p._1 != p._2)
       val prior = Components.connectedComponentsStar(batch.toDF("src", "dst"))
-      val inc = Components.incrementalComponents(prior, delta.toDF("src", "dst"))
-        .as[(Long, Long)].collect().toMap
+      val inc = Components.incrementalComponents(prior, delta.toDF("src", "dst"))(
+        _.as[(Long, Long)].collect().toMap)
       val full = Components.connectedComponentsStar((batch ++ delta).toDF("src", "dst"))
         .as[(Long, Long)].collect().toMap
       assert(inc == full)
@@ -180,19 +180,18 @@ class CurationSpec extends AnyFunSuite {
   test("incrementalComponents: delta merging two components relabels BOTH to the global min") {
     val prior = Seq((1L, 1L), (2L, 1L), (10L, 10L), (11L, 10L)).toDF("id", "component")
     val delta = Seq((2L, 11L)).toDF("src", "dst")
-    val got = Components.incrementalComponents(prior, delta)
-      .as[(Long, Long)].collect().toMap
+    val got = Components.incrementalComponents(prior, delta)(
+      _.as[(Long, Long)].collect().toMap)
     assert(got == Map(1L -> 1L, 2L -> 1L, 10L -> 1L, 11L -> 1L))
   }
 
   test("incrementalComponents: intra-component delta pairs and empty deltas are no-ops") {
     val prior = Seq((1L, 1L), (2L, 1L), (10L, 10L), (11L, 10L)).toDF("id", "component")
     val redundant = Components.incrementalComponents(prior,
-        Seq((1L, 2L)).toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
+        Seq((1L, 2L)).toDF("src", "dst"))(_.as[(Long, Long)].collect().toMap)
     val empty = Components.incrementalComponents(prior,
-        spark.emptyDataset[(Long, Long)].toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
+        spark.emptyDataset[(Long, Long)].toDF("src", "dst"))(
+      _.as[(Long, Long)].collect().toMap)
     val want = Map(1L -> 1L, 2L -> 1L, 10L -> 10L, 11L -> 10L)
     assert(redundant == want && empty == want)
   }
@@ -201,8 +200,8 @@ class CurationSpec extends AnyFunSuite {
     val prior = Seq((5L, 5L), (6L, 5L)).toDF("id", "component")
     // 100-101-102 all new, 102 linking to old vertex 6: one component min 5
     val delta = Seq((100L, 101L), (101L, 102L), (102L, 6L)).toDF("src", "dst")
-    val got = Components.incrementalComponents(prior, delta)
-      .as[(Long, Long)].collect().toMap
+    val got = Components.incrementalComponents(prior, delta)(
+      _.as[(Long, Long)].collect().toMap)
     assert(got == Map(5L -> 5L, 6L -> 5L, 100L -> 5L, 101L -> 5L, 102L -> 5L))
   }
 

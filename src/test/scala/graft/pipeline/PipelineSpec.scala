@@ -10,13 +10,7 @@ object TestSpark {
     * machines where the driver's testdata lives elsewhere. */
   val sfDir: String = sys.env.getOrElse("GRAFT_TESTDATA",
     sys.props.getOrElse("graft.testdata", "/root/testdata/sf0.001"))
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSpark.builder("graft-test", 4).getOrCreate()
 }
 
 class PipelineSpec extends AnyFunSuite {
@@ -24,7 +18,6 @@ class PipelineSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val result = {
-    spark.sparkContext.setLogLevel("WARN")
     val docs = spark.createDataset(FixtureCorpus.fixtureDocs)
     ExtractionPipeline.run(spark, docs)
   }
@@ -255,7 +248,6 @@ class ResumeSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("resume reprocesses only uncommitted docs (anti-join, S3/S4 semantics)") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString + "/stats"
     val docs = spark.createDataset(FixtureCorpus.fixtureDocs)
 
@@ -285,7 +277,6 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("time travel: version 1 sees only the first commit; expired after compaction") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = java.nio.file.Files.createTempDirectory("graft-tt").toString + "/stats"
     val docs = spark.createDataset(FixtureCorpus.fixtureDocs)
     val r1 = ExtractionPipeline.run(spark,
@@ -337,7 +328,6 @@ class ResumeSpec extends AnyFunSuite {
 
   test("upsert replaces matching rows, preserves history until vacuum") {
     import org.apache.spark.sql.functions.{col, upper}
-    spark.sparkContext.setLogLevel("WARN")
     val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/stats"
     val docs = spark.createDataset(FixtureCorpus.fixtureDocs)
     val r = ExtractionPipeline.run(spark, docs, persistIntermediate = false)
@@ -365,7 +355,6 @@ class ResumeSpec extends AnyFunSuite {
 
   test("expireSnapshots: bounded log, loud expired reads, live state intact") {
     import org.apache.spark.sql.functions.col
-    spark.sparkContext.setLogLevel("WARN")
     def frame(lo: Long, hi: Long, mult: Long) =
       spark.range(lo, hi + 1)
         .select(col("id").as("doc_ord"), col("id").as("doc_id"),
@@ -403,7 +392,6 @@ class ResumeSpec extends AnyFunSuite {
 
   test("tags: protect stacks from expiry/vacuum, block compact, loud edges") {
     import org.apache.spark.sql.functions.col
-    spark.sparkContext.setLogLevel("WARN")
     def frame(lo: Long, hi: Long, mult: Long) =
       spark.range(lo, hi + 1)
         .select(col("id").as("doc_ord"), col("id").as("doc_id"),
@@ -438,7 +426,6 @@ class ResumeSpec extends AnyFunSuite {
   test("rollback: metadata-only restore; MoR delete and re-add stack on top; " +
       "expiry and vacuum keep the delegated stack") {
     import org.apache.spark.sql.functions.{col, sum}
-    spark.sparkContext.setLogLevel("WARN")
     def frame(lo: Long, hi: Long, mult: Long) =
       spark.range(lo, hi + 1)
         .select(col("id").as("doc_ord"), col("id").as("doc_id"),
@@ -482,7 +469,6 @@ class ResumeSpec extends AnyFunSuite {
 
   test("readAt refuses a gapped snapshot stack (hand-deleted mid-stack metadata)") {
     import org.apache.spark.sql.functions.col
-    spark.sparkContext.setLogLevel("WARN")
     def frame(lo: Long, hi: Long) =
       spark.range(lo, hi + 1)
         .select(col("id").as("doc_ord"), (col("id") * 3).as("temp"))
@@ -501,7 +487,6 @@ class ResumeSpec extends AnyFunSuite {
 
   test("merge-on-read delete: scan-time removal, re-add survives, compact materializes") {
     import org.apache.spark.sql.functions.{col, upper}
-    spark.sparkContext.setLogLevel("WARN")
     val dir = java.nio.file.Files.createTempDirectory("graft-mor").toString + "/stats"
     val docs = spark.createDataset(FixtureCorpus.fixtureDocs)
     val r = ExtractionPipeline.run(spark, docs, persistIntermediate = false)
@@ -576,7 +561,6 @@ class ResumeSpec extends AnyFunSuite {
 
   test("first commit into a pre-snapshot-era dir adopts the legacy files") {
     import org.apache.spark.sql.functions.{col, lit}
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-legacy").toString + "/t"
     // a table written before the snapshot log existed: raw parquet only
@@ -599,7 +583,6 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("crash debris does not count as committed: resume reprocesses it") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = java.nio.file.Files.createTempDirectory("graft-debris").toString + "/stats"
     val docs = spark.createDataset(FixtureCorpus.fixtureDocs)
     val r1 = ExtractionPipeline.run(spark,
@@ -638,7 +621,6 @@ class FileSkippingSpec extends AnyFunSuite {
       .repartitionByRange(parts, col("doc_ord"))
 
   test("commit records per-file ord stats; narrow range skips disjoint files") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("skip")
     Checkpointing.commit(batch(0 until 100), dir, "b1")
     Checkpointing.commit(batch(100 until 200), dir, "b2")
@@ -660,7 +642,6 @@ class FileSkippingSpec extends AnyFunSuite {
 
   test("poison proof: a skipped file can be garbage on disk — the range " +
       "read never opens it") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("skip-poison")
     Checkpointing.commit(batch(0 until 50), dir, "b1")
     Checkpointing.commit(batch(50 until 100), dir, "b2")
@@ -684,7 +665,6 @@ class FileSkippingSpec extends AnyFunSuite {
 
   test("compaction clusters by doc_ord: rewritten files keep disjoint " +
       "ranges and stay prunable") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("skip-compact")
     // interleaved commits: each covers the WHOLE ord space, so pre-compact
     // stats can prune nothing for a mid-range scan
@@ -708,7 +688,6 @@ class FileSkippingSpec extends AnyFunSuite {
   }
 
   test("readRange still applies merge-on-read deletes") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("skip-mor")
     Checkpointing.commit(batch(0 until 100), dir, "b1")
     Checkpointing.deleteWhere(Seq("doc-42").toDF("doc_id"), dir, "td")
@@ -719,7 +698,6 @@ class FileSkippingSpec extends AnyFunSuite {
 
   test("upsert rebase carries fresh stats; stale pre-rebase stats do not " +
       "leak into pruning") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("skip-upsert")
     Checkpointing.commit(batch(0 until 100), dir, "b1")
     Checkpointing.upsert(
@@ -749,7 +727,6 @@ class WapSpec extends AnyFunSuite {
       .toDF("doc_id", "doc_ord", "payload")
 
   test("staged batch is invisible until publish; publish is metadata-only") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("wap")
     Checkpointing.commit(rows(0 until 10), dir, "base")
     Checkpointing.stage(rows(10 until 20), dir, "wap1")
@@ -776,7 +753,6 @@ class WapSpec extends AnyFunSuite {
   }
 
   test("abandon drops the batch; the table never saw it; vacuum-safe while staged") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("wap-abandon")
     Checkpointing.commit(rows(0 until 10), dir, "base")
     Checkpointing.stage(rows(5 until 15, "dup"), dir, "bad")
@@ -798,7 +774,6 @@ class WapSpec extends AnyFunSuite {
   }
 
   test("publish crash window self-heals: stale marker cleaned, no double publish") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("wap-crash")
     Checkpointing.commit(rows(0 until 5), dir, "base")
     Checkpointing.stage(rows(5 until 8), dir, "w2")
@@ -819,7 +794,6 @@ class WapSpec extends AnyFunSuite {
   }
 
   test("compact refuses while a staged batch is undecided") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("wap-compact")
     Checkpointing.commit(rows(0 until 5), dir, "base")
     Checkpointing.stage(rows(5 until 8), dir, "w3")
@@ -833,7 +807,6 @@ class WapSpec extends AnyFunSuite {
   test("spec evolution: per-snapshot spec round-trips; cross-spec files " +
       "keep conservatively; readRangeBy equals the naive filtered read") {
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("spec-evo")
     def frame(lo: Long, hi: Long, off: Long) =
       spark.range(lo, hi + 1).select(col("id").as("doc_ord"))
@@ -867,7 +840,6 @@ class WapSpec extends AnyFunSuite {
   }
 
   test("runIds with quotes, backslashes and commas round-trip through the log") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("escape")
     val (c, st, d) = ("c\"1,\\x", "s\\\"2,", "d,\"3\\")
     Checkpointing.commit(rows(0 until 4), dir, c)
@@ -889,7 +861,6 @@ class WapSpec extends AnyFunSuite {
   }
 
   test("stage/publish duplicate-run guards") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("wap-guards")
     Checkpointing.commit(rows(0 until 3), dir, "base")
     Checkpointing.stage(rows(3 until 6), dir, "w4")
@@ -906,7 +877,6 @@ class WapSpec extends AnyFunSuite {
   test("merge edges: insert-only merge stays delta-readable; unmatched " +
       "delete flag is a no-op; all-no-op and dup-source merges refuse") {
     import org.apache.spark.sql.functions.col
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("merge-edges")
     Checkpointing.commit(rows(0 until 4), dir, "c1")
     // insert-only: nothing matched, so NO tombstone set is logged — the

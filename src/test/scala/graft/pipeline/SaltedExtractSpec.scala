@@ -26,7 +26,6 @@ class SaltedExtractSpec extends AnyFunSuite {
   }
 
   test("salted pipeline == unsalted pipeline on the fixture corpus") {
-    spark.sparkContext.setLogLevel("WARN")
     val docs = spark.createDataset(FixtureCorpus.fixtureDocs)
     val plain = ExtractionPipeline.run(spark, docs)
     val salted = ExtractionPipeline.run(spark, docs, saltPages = Some(16))

@@ -28,7 +28,6 @@ class SnapshotModelSpec extends AnyFunSuite {
     d.select("doc_ord").as[Long].collect().toSet
 
   test("random commit/compact/upsert/delete/merge/vacuum sequences agree with the in-memory model") {
-    spark.sparkContext.setLogLevel("WARN")
     var mergeRuns = 0
     for (seed <- Seq(1, 2, 3)) {
       val rnd = new scala.util.Random(seed)
@@ -185,7 +184,6 @@ class SnapshotModelSpec extends AnyFunSuite {
   }
 
   test("branches: MoR base, seq ordering across the branch, expiry protection") {
-    spark.sparkContext.setLogLevel("WARN")
     val C = Checkpointing
     val dir = java.nio.file.Files
       .createTempDirectory("graft-branchspec").toString + "/t"
@@ -229,7 +227,6 @@ class SnapshotModelSpec extends AnyFunSuite {
   }
 
   test("upsertToBranch: branch-side MoR rebase; fast-forward carries the deletes") {
-    spark.sparkContext.setLogLevel("WARN")
     val C = Checkpointing
     val dir = java.nio.file.Files
       .createTempDirectory("graft-brupsert").toString + "/t"

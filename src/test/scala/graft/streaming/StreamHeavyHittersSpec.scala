@@ -16,7 +16,6 @@ class StreamHeavyHittersSpec extends AnyFunSuite {
   }
 
   test("streaming sketch + exact recount == batch frequentTokens == truth") {
-    spark.sparkContext.setLogLevel("WARN")
     val docs = corpus
     val got = StreamHeavyHitters.replayFrequentTokens(spark, docs,
         thresholdDen = 400L, sketchK = 600L.toInt)
@@ -31,7 +30,6 @@ class StreamHeavyHittersSpec extends AnyFunSuite {
 
   test("per-shard state stays bounded at <= 2k counters under a flood " +
       "of distinct tokens") {
-    spark.sparkContext.setLogLevel("WARN")
     val k = 5
     var maxState = 0
     // drive the state core directly: 200 distinct tokens + one dominant

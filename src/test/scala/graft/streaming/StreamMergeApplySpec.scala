@@ -26,7 +26,6 @@ class StreamMergeApplySpec extends AnyFunSuite {
 
   test("crash debris self-heal: an unreferenced delete set for this batch id " +
       "is removed and the retry lands") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("smerge-heal")
     base(dir)
     // simulate an attempt that died between writing its delete set and
@@ -51,7 +50,6 @@ class StreamMergeApplySpec extends AnyFunSuite {
 
   test("a delete set REFERENCED by a landed snapshot is never touched: " +
       "the replayed batch is skipped outright") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("smerge-skip")
     base(dir)
     StreamMergeApply.applyBatch(dir)(rows(Seq(1), op = "delete"), 0L)
@@ -71,7 +69,6 @@ class StreamMergeApplySpec extends AnyFunSuite {
       "last-writer-wins instead of wedging the stream") {
     // merge's duplicate-source guard throws inside foreachBatch and the
     // replay re-throws forever — applyBatch must compact first
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("smerge-compact")
     base(dir)
     // doc 1: upsert v2 then delete (seq order) → deleted
@@ -101,7 +98,6 @@ class StreamMergeApplySpec extends AnyFunSuite {
   }
 
   test("empty micro-batch lands no snapshot") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = freshDir("smerge-empty")
     base(dir)
     StreamMergeApply.applyBatch(dir)(

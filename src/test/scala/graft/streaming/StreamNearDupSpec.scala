@@ -23,7 +23,6 @@ class StreamNearDupSpec extends AnyFunSuite {
   }
 
   test("streaming near-dup union == batch minhashLshPairs on the same corpus") {
-    spark.sparkContext.setLogLevel("WARN")
     val docs = corpus
     val got = StreamNearDup.replayNearDupPairs(spark, docs,
         minJaccardBp = 2000L)
@@ -38,7 +37,6 @@ class StreamNearDupSpec extends AnyFunSuite {
 
   test("each pair surfaces in the batch its LATER doc arrives (incremental " +
       "property), state holds ids only") {
-    spark.sparkContext.setLogLevel("WARN")
     val docs = corpus
     val (first, second) = docs.splitAt(docs.length / 2)
     val input =
@@ -86,7 +84,6 @@ class StreamNearDupSpec extends AnyFunSuite {
 
   test("hot bucket: state capped, overflow emits one representative edge, " +
       "cluster stays connected") {
-    spark.sparkContext.setLogLevel("WARN")
     // one viral duplicate: 30 identical docs — every band's bucket is the
     // same hot bucket, the unbounded-state adversary from round 3
     val hot = (0L until 30L).map(i =>
@@ -118,7 +115,6 @@ class StreamNearDupSpec extends AnyFunSuite {
 
   test("live cluster manifest == batch closure over the full pair graph; " +
       "one manifest version per micro-batch") {
-    spark.sparkContext.setLogLevel("WARN")
     val docs = corpus
     val dir = java.nio.file.Files.createTempDirectory("graft-x55-spec-")
     val got = StreamNearDup.replayLiveClusters(spark, docs, dir.toString,
@@ -142,5 +138,23 @@ class StreamNearDupSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     assert(got5 == want)
     assert(new java.io.File(dir5.toString).list().toSeq.sorted.size == 5)
+  }
+
+  test("live cluster replay releases what each micro-batch persists") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-x55-spec-cached-")
+    val before = sc.getPersistentRDDs.keySet
+    StreamNearDup.replayLiveClusters(spark, corpus, dir.toString,
+        minJaccardBp = 2000L, nBatches = 5)
+      .collect()
+    // a batch's local checkpoints are weakly held and go once collected;
+    // a cached frame nobody released stays for the life of the session
+    eventually(timeout(30.seconds), interval(1.second)) {
+      System.gc()
+      val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+      assert(left.isEmpty, left.values.map(r => s"${r.id} ${r.name}").mkString("; "))
+    }
   }
 }

@@ -21,7 +21,6 @@ class StreamSentenceDedupSpec extends AnyFunSuite {
 
   test("replayed union equals the batch operator; cross-batch ownership " +
       "flows through the persisted index") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = java.nio.file.Files
       .createTempDirectory("graft-ssd-spec").toString
     // 3 batches of 2/2/1 docs: doc 3's owner (doc 1) is two batches back,

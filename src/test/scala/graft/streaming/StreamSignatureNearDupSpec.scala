@@ -18,7 +18,6 @@ class StreamSignatureNearDupSpec extends AnyFunSuite {
 
   test("replayed union equals the batch operator; cross-batch pairs flow " +
       "through the persisted band index; one index append per batch") {
-    spark.sparkContext.setLogLevel("WARN")
     val dir = java.nio.file.Files
       .createTempDirectory("graft-ssig-spec").toString
     val got = StreamSignatureNearDup.replaySignaturePairs(

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool, not a test: prints fixture-query outputs as DuckDB VALUES
   * literals for hand-review and pasting into FixtureGoldens. Any fixture
   * or extraction change invalidates the goldens — regenerate with
@@ -25,11 +23,7 @@ object GenGoldens {
     "x17_boilerplate_blocks", "x18_main_spans")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.builder("graft-gengoldens", 8).getOrCreate()
     val wanted =
       if (args.isEmpty) valuesBacked
       else valuesBacked.filter(n => args.exists(n.contains))
