@@ -203,6 +203,8 @@ object ExtractMain {
     * backfill runs in production without exposing wrong data. */
   def run(spark: SparkSession, input: String, out: String,
       saltPages: Int = 64, audit: Boolean = false): (Long, Long) = {
+    require(saltPages >= 1, s"saltPages must be at least 1, got $saltPages\n" +
+      "usage: ExtractMain <inputDir> <outputDir> [saltPages] [audit]")
     import spark.implicits._
     import graft.pipeline.Checkpointing
     // job wall clock from first plan to committed truth, excluding JVM +

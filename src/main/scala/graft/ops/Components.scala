@@ -13,18 +13,15 @@ import org.apache.spark.storage.StorageLevel
   * reference's dedup is per-file content equality, v2_llm/run_claude.py:29-57);
   * engine-only addition per the training-pipeline mandate.
   *
-  * Algorithm: iterative min-label propagation. label(v) starts as v; each
-  * round every vertex takes the min label among itself and its neighbors;
-  * fixpoint when no label changes. Each round is ONE shuffle of
-  * (vertex:long, label:long) rows — 16 bytes, never document payload — and
-  * the round count is bounded by the graph diameter. Dedup graphs are
-  * near-clique clusters with tiny diameter, so a handful of rounds settle
-  * even a 100 TB corpus; for adversarial long-chain graphs the
-  * large-star/small-star variant (Kiveris et al., CCMR) squares path
-  * lengths per round, and this loop is written so that swap-in would only
-  * change the message step. Convergence is detected with a cheap aggregate
-  * (labels decrease monotonically, so an unchanged checksum means a
-  * fixpoint) — no labels are ever collected to the driver.
+  * Algorithm: one labelling, [[connectedComponentsStar]] — large-star /
+  * small-star contraction with a local union-find tail once the contracted
+  * edge set fits the driver. Every operator here (dupClusters,
+  * bestCopyKeepers, incrementalComponents) labels through it. Each round
+  * shuffles (long, long) edges only — never document payload — and the
+  * round count is O(log^2 n) on any graph shape. Convergence is detected
+  * with a cheap aggregate; no labels are collected to the driver except in
+  * the bounded local tail. The tests keep min-label propagation as the
+  * independent reference the contraction is compared against.
   */
 object Components {
 
@@ -45,66 +42,9 @@ object Components {
       case None => false
     }
 
-  /** Component label per vertex. `edges` must have two numeric columns
-    * `srcCol`/`dstCol`; direction is ignored. Output: (id, component)
-    * where component = min vertex id reachable. Vertices appearing only
-    * as dst are included; isolated vertices (no edges) are the caller's
-    * union if wanted.
-    *
-    * Throws if the label fixpoint is not reached within `maxIter` rounds
-    * (one round per hop of graph diameter) — a partially-propagated
-    * result is silently WRONG, so non-convergence must surface. For
-    * graphs whose diameter can exceed `maxIter` use
-    * [[connectedComponentsStar]], whose round count is O(log^2 n)
-    * regardless of diameter. */
-  def connectedComponents(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", maxIter: Int = 25,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val sym0 = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-    val durable = setCheckpointDir(sym0, checkpointDir)
-    val und = sym0.union(sym0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // localCheckpoint each round: an iterative self-referential DataFrame
-    // otherwise DOUBLES its logical plan per round (labels appears in both
-    // the message join and the union), so a 20-round run would carry a
-    // 2^20-node plan — analysis alone OOMs long before any data moves.
-    // Truncating lineage keeps the plan O(1) per round; on a failure the
-    // loop restarts from the last materialized labels. (A durable
-    // checkpoint dir is the cluster-grade variant; same shape.)
-    var labels = truncate(und.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id")), durable)
-    // monotone checksum: sum of labels strictly decreases until fixpoint
-    // (sum over an EMPTY frame is null — Option it, or the compare NPEs)
-    def checksum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prev = checksum(labels)
-    var it = 0
-    var done = labels.isEmpty
-    while (!done && it < maxIter) {
-      val msgs = und.join(labels, und("src") === labels("id"))
-        .select(col("dst").as("id"), col("lbl"))
-      val next = truncate(labels.select("id", "lbl").union(msgs)
-        .groupBy("id").agg(min("lbl").as("lbl")), durable)
-      val cur = checksum(next)
-      labels.unpersist()
-      labels = next
-      done = cur.compareTo(prev) == 0
-      prev = cur
-      it += 1
-    }
-    und.unpersist()
-    require(done, s"connectedComponents did not converge in $maxIter rounds " +
-      "(graph diameter exceeds maxIter) — raise maxIter or use " +
-      "connectedComponentsStar, whose round count is O(log^2 n) on any graph")
-    labels.select(col("id"), col("lbl").as("component"))
-  }
-
   /** Connected components via alternating large-star/small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14) — the 100 TB default. Where min-label propagation
+    * Beyond", SoCC'14) — the only labelling. Where min-label propagation
     * needs one round per hop of graph diameter, star contraction halves
     * path lengths every round pair: O(log^2 n) rounds on ANY graph shape,
     * including the adversarial long chains a crawl near-dup graph can
@@ -113,12 +53,17 @@ object Components {
     * the fixed point is a star forest: every node points directly at its
     * component's min id.
     *
-    * Output matches [[connectedComponents]] row-for-row (property-tested
-    * on random graphs). With the default `localSolveEdges`, driver-scale
-    * inputs finish in the local union-find tail before any distributed
-    * round runs — q37 therefore registers with `localSolveEdges = 0` so
-    * the contraction rounds themselves stay pinned by the cross-engine
-    * recursive-CTE oracle (q53/q57 cover the hybrid tail).
+    * Output: (id, component) per vertex seen in `edges` (either column;
+    * direction is ignored), component = min vertex id reachable; it
+    * matches min-label propagation row-for-row (property-tested on random
+    * graphs against the reference kept in the tests). Throws if the fixed
+    * point is not reached within `maxIter` rounds — a partially contracted
+    * result is silently WRONG. With the default `localSolveEdges`,
+    * driver-scale inputs finish in the local union-find tail before any
+    * distributed round runs — q37 therefore registers with
+    * `localSolveEdges = 0` so the contraction rounds themselves stay
+    * pinned by the cross-engine recursive-CTE oracle (q53/q57 cover the
+    * hybrid tail).
     *
     * `onRound(round, edgesLeft)` fires after every contraction round
     * (round = -1 reports the initial deduped edge count; edgesLeft = -1

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for the training-data pipeline: exact,
   * MinHash+LSH, SimHash, and n-gram Jaccard. Designed for the 100 TB shape:
@@ -12,7 +11,8 @@ import org.apache.spark.storage.StorageLevel
   *    with codegen'd array expressions, banded bucket ids are exploded, and
   *    only same-bucket pairs meet in a shuffle — the classic
   *    shingle -> minhash -> band -> bucket-join plan;
-  *  - candidate pairs are then VERIFIED with exact Jaccard before reporting;
+  *  - candidate pairs are then VERIFIED with exact Jaccard before reporting,
+  *    by one tail for every finder ([[verifyPairs]]);
   *  - SimHash is a per-row 64-bit signature (typed map — a tight bit loop
   *    beats a 64-branch expression tree), blocked by 16-bit bands.
   */
@@ -135,14 +135,6 @@ object Dedup {
     }
   }
 
-  /** MinHash-LSH near-duplicate pairs, verified with exact Jaccard.
-    *
-    * Plan shape: per-row signature+buckets (narrow typed pass) -> explode
-    * bands (narrow) -> self-join on (band, bucket) — the only shuffle, and
-    * its payload is (doc_id, 8-byte bucket), never text or shingles ->
-    * distinct candidate pairs -> re-join the two shingle arrays only for the
-    * (few) candidates -> exact-Jaccard verify -> threshold.
-    */
   /** (doc_id, band, bucket) LSH index rows for a corpus — the narrow
     * (shuffle-free) signature+banding pass shared by the batch and
     * incremental pair finders. At 100 TB this is the frame a persisted
@@ -161,6 +153,14 @@ object Dedup {
       .select(col("doc_id"), posexplode(col("buckets")).as(Seq("band", "bucket")))
   }
 
+  /** MinHash-LSH near-duplicate pairs, verified with exact Jaccard.
+    *
+    * Plan shape: per-row signature+buckets (narrow typed pass) -> explode
+    * bands (narrow) -> self-join on (band, bucket) — the only shuffle, and
+    * its payload is (doc_id, 8-byte bucket), never text or shingles ->
+    * distinct candidate pairs -> re-join the two shingle arrays only for the
+    * (few) candidates -> exact-Jaccard verify -> threshold ([[verifyPairs]]).
+    */
   def minhashLshPairs(
       docs: DataFrame,
       nHashes: Int = 32,
@@ -174,70 +174,42 @@ object Dedup {
       .where(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b")
       .distinct()
-    // verify tail: left to the planner's build-side choice on purpose —
-    // at bench scale it broadcasts the (small) shingle frames so the two
-    // sides build in PARALLEL jobs; forcing broadcast(candidates) here
-    // (verifyPairs' shape) serializes the two shingle passes behind the
-    // candidate pipeline (measured +0.6 s on q15 at sf0.1). At corpus
-    // scale the estimates exceed the broadcast threshold and the planner
-    // flips to broadcasting the candidate side itself.
-    candidates
-      .join(shingleSide(docs, "doc_a", "sh_a"), Seq("doc_a"))
-      .join(shingleSide(docs, "doc_b", "sh_b"), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"), jaccardBp(col("sh_a"), col("sh_b")).as("jaccard_bp"))
-      .where(col("jaccard_bp") >= minJaccardBp)
+    verifyPairs(candidates, docs, minJaccardBp)
   }
 
   /** Exact-Jaccard verification of candidate id pairs against a document
-    * frame — the shared tail of every near-dup finder (batch, incremental,
-    * streaming). Candidates broadcast; the documents' shingle arrays never
-    * cross an exchange. */
+    * frame — the one verify tail of every near-dup finder (batch,
+    * incremental, streaming).
+    *
+    * Both build sides are left to the planner on purpose: at bench scale it
+    * broadcasts the (small) shingle frames, so the two sides build in
+    * PARALLEL jobs; forcing broadcast(candidates) instead serializes the two
+    * shingle passes behind the candidate pipeline (measured +0.6 s on q15 at
+    * sf0.1). No frame carrying shingle arrays is broadcast by hint, so a
+    * growing candidate set cannot blow the broadcast limit. When the
+    * planner broadcasts nothing, both joins sort-merge and shuffle the
+    * shingle side of every doc in `docs`: callers whose candidates touch a
+    * small part of `docs` (the incremental and streaming finders) pass
+    * [[touchedDocs]] instead, which bounds that shuffle — and the
+    * tokenize — by the candidates. */
   def verifyPairs(candidates: DataFrame, docs: DataFrame,
-      minJaccardBp: Long, shingleN: Int = 3): DataFrame = {
-    val withA = broadcast(candidates)
+      minJaccardBp: Long, shingleN: Int = 3): DataFrame =
+    candidates
       .join(shingleSide(docs, "doc_a", "sh_a", shingleN), Seq("doc_a"))
-    broadcast(withA)
       .join(shingleSide(docs, "doc_b", "sh_b", shingleN), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         jaccardBp(col("sh_a"), col("sh_b")).as("jaccard_bp"))
       .where(col("jaccard_bp") >= minJaccardBp)
-  }
 
-  /** [[verifyPairs]] with the docs side PREFILTERED to candidate-touched
-    * ids before any tokenize (guide §2.3 "project before the exchange"),
-    * for callers whose candidate frame is ALREADY MATERIALIZED and cheap
-    * to re-evaluate — the streaming replays, where candidates are a
-    * micro-batch-local frame: the plain spelling tokenizes the WHOLE
-    * corpus on both join sides per micro-batch (x55's two-batch replay
-    * paid four full-corpus tokenizations for a few hundred touched docs).
-    * The candidate frame is persisted (it feeds two broadcasts and the
-    * touched-id set), and the touched docs' shingles are computed once and
-    * persisted; both are released when `use` returns, so `use` must run
-    * every action on the pairs it needs (a per-micro-batch caller would
-    * otherwise leave two cached frames behind each batch). Row-identical to
-    * [[verifyPairs]]: an inner join on doc_a/doc_b never reads a doc no
-    * candidate touches. NOT the default for the batch/incremental finders:
-    * their candidate pipeline is the expensive end of the plan, and the
-    * extra evaluation + cache jobs measured as a net loss there (q58
-    * 51→62 jobs). */
-  def verifyPairsPrefiltered[A](candidates: DataFrame, docs: DataFrame,
-      minJaccardBp: Long, shingleN: Int = 3)(use: DataFrame => A): A = {
-    val cand = candidates.persist(StorageLevel.MEMORY_AND_DISK)
-    val touched = cand
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      .distinct()
-    val docsTouched = docs.join(broadcast(touched), Seq("doc_id"), "left_semi")
-    val sh = shingleSide(docsTouched, "doc_id", "sh", shingleN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val withA = broadcast(cand)
-      .join(sh.toDF("doc_a", "sh_a"), Seq("doc_a"))
-    try use(broadcast(withA)
-      .join(sh.toDF("doc_b", "sh_b"), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        jaccardBp(col("sh_a"), col("sh_b")).as("jaccard_bp"))
-      .where(col("jaccard_bp") >= minJaccardBp))
-    finally { sh.unpersist(); cand.unpersist() }
-  }
+  /** `docs` restricted to the ids some candidate pair names: an ids-only
+    * broadcast left-semi join, map-side on the docs. Row-identical input
+    * for [[verifyPairs]] (its inner joins never read a doc no candidate
+    * names), for candidates bounded by a delta or a micro-batch rather
+    * than by the corpus. */
+  def touchedDocs(candidates: DataFrame, docs: DataFrame): DataFrame =
+    docs.join(broadcast(candidates
+        .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))),
+      Seq("doc_id"), "left_semi")
 
   /** LSH self-audit: measured RECALL of the banded MinHash pipeline
     * against exact ground truth on a bounded probe slice — the production
@@ -290,7 +262,9 @@ object Dedup {
     * corpus∪delta index map-side — the index never shuffles (a shuffle of
     * the index would be the full-corpus cost this operator exists to
     * avoid). Candidate id pairs are canonicalized (least/greatest),
-    * deduped, and verified with exact Jaccard like the batch finder.
+    * deduped, and verified with exact Jaccard like the batch finder —
+    * against only the docs they name ([[touchedDocs]]), so the verify
+    * tokenizes and, with nothing broadcast, shuffles O(candidates) docs.
     * Equivalence contract (the q55 oracle): identical to the full-corpus
     * [[minhashLshPairs]] restricted to pairs touching the delta. */
   def incrementalMinhashPairs(
@@ -311,12 +285,22 @@ object Dedup {
       .unionByName(bandBuckets(delta, nHashes, bands, seed))
     val probe = bandBuckets(delta, nHashes, bands, seed)
       .select(col("band"), col("bucket"), col("doc_id").as("probe_id"))
-    val candidates = index.join(broadcast(probe), Seq("band", "bucket"))
+    val candidates0 = index.join(broadcast(probe), Seq("band", "bucket"))
       .where(col("doc_id") =!= col("probe_id"))
       .select(least(col("doc_id"), col("probe_id")).as("doc_a"),
         greatest(col("doc_id"), col("probe_id")).as("doc_b"))
       .distinct()
-    verifyPairs(candidates, corpus.unionByName(delta), minJaccardBp)
+    // two readers of the candidates below: the verify joins and the id list
+    // in touchedDocs. The optimizer pushes filters it infers from the docs
+    // frames (a doc_id split like q55's) into the verify's copy only, so the
+    // copies differ and the index probe ran twice (q55 at sf0.01: 11 jobs,
+    // not 10); no filter passes a typed map, so both read one plan
+    val candidates = {
+      import candidates0.sparkSession.implicits._
+      candidates0.as[(Long, Long)].map(identity).toDF("doc_a", "doc_b")
+    }
+    verifyPairs(candidates,
+      touchedDocs(candidates, corpus).unionByName(delta), minJaccardBp)
   }
 
   /** Exact n-gram Jaccard over candidate pairs from a cheap blocking key:
@@ -367,12 +351,7 @@ object Dedup {
       .where(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b")
       .distinct()
-    // verify tail: planner-chosen build side (see minhashLshPairs)
-    cand
-      .join(shingleSide(docs, "doc_a", "sh_a", shingleN), Seq("doc_a"))
-      .join(shingleSide(docs, "doc_b", "sh_b", shingleN), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"), jaccardBp(col("sh_a"), col("sh_b")).as("jaccard_bp"))
-      .where(col("jaccard_bp") >= minJaccardBp)
+    verifyPairs(cand, docs, minJaccardBp, shingleN)
   }
 
   // ------------------------------------------------------------ simhash

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import graft.layout.PaperStat
 import graft.pipeline.Checkpointing
 
@@ -49,7 +50,9 @@ object StreamMergeApply {
     * column is dropped before the merge); without one, by arrival order
     * within the batch (partition-major — deterministic for a
     * single-partition source, best-effort otherwise, so upstreams with
-    * cross-partition ordering needs must supply seqCol). The compaction
+    * cross-partition ordering needs must supply seqCol). Equal seq values
+    * are broken by a hash of the change row, so the winner depends only on
+    * the batch's content, never on its row order. The compaction
     * shuffles only the batch (never the table) on doc_id. */
   def applyBatch(dir: String, opCol: String = "op",
       seqCol: Option[String] = None)(
@@ -68,27 +71,36 @@ object StreamMergeApply {
     }
     if (!batch.isEmpty) {
       val seq = "__graft_change_seq"
-      val arrival = "__graft_change_arrival"
-      // arrival id as the SECONDARY key under seqCol: two changes to the
-      // same doc_id carrying EQUAL seq values would otherwise pick a
-      // partition-order-dependent winner (a batch that failed before
-      // committing could land differently on retry) — last-arrival-wins
-      // is the deterministic tiebreak for any fixed batch partitioning
-      val ordered = (seqCol match {
-        case Some(c) => batch.withColumn(seq, col(c))
-        case None => batch.withColumn(seq, monotonically_increasing_id())
-      }).withColumn(arrival, monotonically_increasing_id())
+      val ordered =
+        batch.withColumn(seq, seqCol.fold(monotonically_increasing_id())(col))
+      // under seqCol, a hash of the whole change row as the SECONDARY key:
+      // two changes to the same doc_id carrying EQUAL seq values then pick
+      // the same winner whatever the batch's row order or partitioning (an
+      // arrival id would let a retried batch land differently); rows with
+      // equal hashes are, short of a 64-bit collision, the same change, so
+      // either one wins. Spark cannot hash a map, so a column holding one
+      // hashes through its JSON form. Arrival ids never tie: no tiebreak.
+      val tiebreak = seqCol.toSeq.map(_ => xxhash64(batch.schema.fields.toSeq
+        .map(f => if (holdsMap(f.dataType)) to_json(col(f.name)) else col(f.name))
+        : _*).desc)
       val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id").orderBy(col(seq).desc, col(arrival).desc)
+        .partitionBy("doc_id").orderBy(col(seq).desc +: tiebreak: _*)
       val compacted = ordered
         .withColumn("__graft_rn", row_number().over(w))
         .filter(col("__graft_rn") === 1)
-        .drop("__graft_rn", seq, arrival)
+        .drop("__graft_rn", seq)
         .drop(seqCol.toSeq: _*)
       Checkpointing.merge(compacted, dir, runId,
         deleteWhen = col(opCol) === "delete")
       ()
     }
+  }
+
+  private def holdsMap(t: DataType): Boolean = t match {
+    case _: MapType => true
+    case a: ArrayType => holdsMap(a.elementType)
+    case s: StructType => s.fields.exists(f => holdsMap(f.dataType))
+    case _ => false
   }
 
   /** The production surface: a continuous change stream applied to the

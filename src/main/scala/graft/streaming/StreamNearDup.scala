@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.storage.StorageLevel
 import graft.ops.Dedup
 
 /** Streaming near-duplicate detection: the MinHash-LSH index of
@@ -21,11 +22,12 @@ import graft.ops.Dedup
   * construction; the raw text and signatures never enter the store).
   *
   * Candidates then verify with exact Jaccard against the landed corpus
-  * ([[graft.ops.Dedup.verifyPairs]]) — in production a foreachBatch join
-  * against the committed document table; in the replay harness, the finite
-  * input. On a finite replay the verified union across batches must equal
-  * the batch operator exactly, which gives the streaming variant q15's
-  * DuckDB oracle (driver query x51).
+  * ([[graft.ops.Dedup.verifyPairs]], the batch finders' tail) restricted to
+  * the docs the candidates touch ([[graft.ops.Dedup.touchedDocs]]) — in
+  * production a foreachBatch join against the committed document table; in
+  * the replay harness, the finite input. On a finite replay the verified
+  * union across batches must equal the batch operator exactly, which gives
+  * the streaming variant q15's DuckDB oracle (driver query x51).
   *
   * STATE BOUND: an infinite stream with one viral duplicate would
   * otherwise grow a single bucket's doc list — and its per-arrival pair
@@ -102,8 +104,8 @@ object StreamNearDup {
           GroupStateTimeout.NoTimeout)(emitPairs(maxBucketDocs))
         .toDF()
     }
-    Dedup.verifyPairsPrefiltered(cands.distinct(),
-      spark.createDataset(docs).toDF(), minJaccardBp)(_.localCheckpoint())
+    Dedup.verifyPairs(cands.distinct(),
+      Dedup.touchedDocs(cands, spark.createDataset(docs).toDF()), minJaccardBp)
   }
 
   /** Live dedup-cluster manifest: the pair stream above folded into a
@@ -111,7 +113,9 @@ object StreamNearDup {
     * of the incremental-ingest story (q55 finds a delta's pairs without
     * re-pairing the corpus; q58 folds them in without re-clustering it;
     * this runs that fold continuously). Inside `foreachBatch` each batch's
-    * candidates verify with exact Jaccard and merge into the manifest via
+    * candidates are persisted once (the touched-id set and the verify both
+    * read them; released when the batch ends), verify with exact Jaccard
+    * and merge into the manifest via
     * [[graft.ops.Components.incrementalComponents]] — the manifest (the
     * only corpus-scale frame) is touched by two broadcast joins and never
     * shuffles, so each micro-batch costs O(batch), never O(corpus).
@@ -124,7 +128,7 @@ object StreamNearDup {
     *
     * On a finite two-batch replay every pair surfaces exactly once (in
     * its later doc's batch), so the final manifest must equal the
-    * from-scratch min-label closure over the FULL batch pair graph —
+    * from-scratch closure over the FULL batch pair graph —
     * q15's graph — which is driver query x55's DuckDB oracle. */
   def replayLiveClusters(spark: SparkSession, docs: Seq[Doc],
       manifestDir: String,
@@ -162,12 +166,15 @@ object StreamNearDup {
           GroupStateTimeout.NoTimeout)(emitPairs(maxBucketDocs))
         .toDF()
         .writeStream
-        .foreachBatch { (cands: DataFrame, batchId: Long) =>
-          Dedup.verifyPairsPrefiltered(cands.distinct(), corpus, minJaccardBp) { pairs =>
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val cands = batch.distinct().persist(StorageLevel.MEMORY_AND_DISK)
+          try {
+            val pairs = Dedup.verifyPairs(cands, Dedup.touchedDocs(cands, corpus),
+              minJaccardBp)
             graft.ops.Components.incrementalComponents(current, pairs, "doc_a", "doc_b") {
               _.write.mode("overwrite").parquet(s"$manifestDir/v$batchId")
             }
-          }
+          } finally cands.unpersist()
         }
         .start()
       try {

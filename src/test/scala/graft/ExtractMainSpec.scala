@@ -81,6 +81,21 @@ class ExtractMainSpec extends AnyFunSuite {
       ExtractMain.maintain(spark, out, Array("defrag")))
   }
 
+  test("a saltPages below 1 is refused before any table is touched") {
+    val base = java.nio.file.Files.createTempDirectory("graft-emain-salt").toString
+    val input = s"$base/in"
+    val out = s"$base/out"
+    spark.createDataset(graft.layout.FixtureCorpus.fixtureDocs.take(2))
+      .write.parquet(input)
+    Seq(0, -3).foreach { bad =>
+      val e = intercept[IllegalArgumentException](
+        ExtractMain.run(spark, input, out, saltPages = bad))
+      assert(e.getMessage.contains(s"saltPages must be at least 1, got $bad"))
+      assert(e.getMessage.contains("usage: ExtractMain"))
+      assert(!new java.io.File(out).exists(), s"$out created for saltPages=$bad")
+    }
+  }
+
   test("stdout of run and maintain snapshots: one JSON object per line, " +
       "keys in order, three-decimal seconds") {
     import org.json4s._

@@ -383,13 +383,27 @@ class PlanAuditSpec extends AnyFunSuite
     shuffleOutputSetsOf(SparkEntry.queries(name)(spark, sf))
 
   private def shuffleOutputSetsOf(df: org.apache.spark.sql.DataFrame)
-      : Seq[Seq[(String, org.apache.spark.sql.types.DataType)]] = {
+      : Seq[Seq[(String, org.apache.spark.sql.types.DataType)]] =
+    exchangeOutputSetsOf(df,
+      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
+
+  /** Output attributes of every node `keep` selects in the FINALIZED (AQE)
+    * plan, query stages included: one inner Seq per node. */
+  private def exchangeOutputSetsOf(df: org.apache.spark.sql.DataFrame,
+      keep: org.apache.spark.sql.execution.SparkPlan => Boolean)
+      : Seq[Seq[(String, org.apache.spark.sql.types.DataType)]] =
+    nodesOf(df, keep).map(_.output.map(a => a.name -> a.dataType))
+
+  /** Every node `keep` selects in the FINALIZED (AQE) plan of `df`, query
+    * stages included; runs `df` first. */
+  private def nodesOf(df: org.apache.spark.sql.DataFrame,
+      keep: org.apache.spark.sql.execution.SparkPlan => Boolean)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     df.collect()
     def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val self = p match { case _: ShuffleExchangeLike => Seq(p); case _ => Nil }
+      val self = if (keep(p)) Seq(p) else Nil
       val kids = p match {
         case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
         case q: QueryStageExec => Seq(q.plan)
@@ -398,7 +412,6 @@ class PlanAuditSpec extends AnyFunSuite
       self ++ kids.flatMap(walk)
     }
     walk(df.queryExecution.executedPlan)
-      .map(_.output.map(a => a.name -> a.dataType))
   }
   private def shuffleOutputs(name: String)
       : Seq[(String, org.apache.spark.sql.types.DataType)] =
@@ -514,6 +527,49 @@ class PlanAuditSpec extends AnyFunSuite
       val names = s.map(_._1).toSet
       assert(names.subsetOf(Set("doc_a", "doc_b")),
         s"exchange carries more than the id pair: $names")
+    }
+  }
+
+  test("near-dup verify: no broadcast carries a shingle array, and the " +
+      "incremental verify shuffles O(delta) records, even when the planner " +
+      "may broadcast nothing") {
+    // with size-based broadcast off — the regime of a corpus too large to
+    // broadcast — only hinted broadcasts remain; a hint on a frame holding
+    // shingle arrays would ship corpus-sized arrays to every executor (and
+    // through the driver) once candidates grow. The verify tail leaves its
+    // build sides to the planner, so none is left.
+    import org.apache.spark.sql.functions.{col, concat_ws, lit, pmod}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.types.ArrayType
+    graft.ScopedConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      Seq("q55_incremental_neardup", "q79_lsh_recall_audit").foreach { q =>
+        val arrays = exchangeOutputSetsOf(SparkEntry.queries(q)(spark, sf),
+          _.isInstanceOf[BroadcastExchangeLike]).flatten
+          .filter(_._2.isInstanceOf[ArrayType])
+        assert(arrays.isEmpty, s"$q broadcasts array columns: $arrays")
+      }
+      // the verify sort-merges here, so every doc on its docs side crosses
+      // an exchange: 20k corpus docs of 8 scattered words, a delta of 20
+      // exact copies of corpus docs. Verifying against the whole corpus
+      // would shuffle >= 40k shingle rows; restricted to the touched docs
+      // the total stays in the hundreds.
+      def words(id: org.apache.spark.sql.Column) = concat_ws(" ",
+        (1 to 8).map(k => concat_ws("", lit("w"),
+          pmod(id * (7919L * k) + k * 104729L, lit(1000003L)).cast("string"))): _*)
+      val corpus = spark.range(20000L)
+        .select(col("id").as("doc_id"), words(col("id")).as("text"))
+      val delta = spark.range(20L).select((col("id") + 100000L).as("doc_id"),
+        words(col("id") * 100L).as("text"))
+      val pairs = graft.ops.Dedup.incrementalMinhashPairs(corpus, delta,
+        minJaccardBp = 2000L)
+      val shuffles = nodesOf(pairs, _.isInstanceOf[ShuffleExchangeLike])
+      assert(pairs.count() == 20, pairs.collect().toSeq)
+      val shuffledRecords = shuffles.flatMap(_.metrics.collect {
+        case (k, m) if k.toLowerCase.contains("recordswritten") => m.value
+      }).sum
+      assert(shuffledRecords < 1000,
+        s"the corpus reached the verify shuffle: $shuffledRecords records " +
+          s"across ${shuffles.size} exchanges")
     }
   }
 

@@ -10,26 +10,33 @@ class CurationSpec extends AnyFunSuite {
 
   // ---- connected components -------------------------------------------
 
+  // the product labelling through both of its paths: the local union-find
+  // tail (the default at this size) and the pure contraction rounds
+  private def starLabels(edges: org.apache.spark.sql.DataFrame): Seq[Map[Long, Long]] =
+    Seq(200000L, 0L).map(n => Components.connectedComponentsStar(edges,
+      localSolveEdges = n).as[(Long, Long)].collect().toMap)
+
   test("components: transitivity across pairs that were never candidates") {
     // a-b, b-c, plus an unrelated d-e: two components {1,2,3} and {7,8}
     val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("src", "dst")
-    val got = Components.connectedComponents(edges)
-      .as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
+    starLabels(edges).foreach { got =>
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
+    }
   }
 
   test("components: long chain converges (diameter rounds, not 1)") {
     val chain = (0L until 12L).sliding(2).map(s => (s(0), s(1))).toSeq
       .toDF("src", "dst")
-    val got = Components.connectedComponents(chain)
-      .as[(Long, Long)].collect().toMap
-    assert(got.values.toSet == Set(0L) && got.size == 12)
+    starLabels(chain).foreach { got =>
+      assert(got.values.toSet == Set(0L) && got.size == 12)
+    }
   }
 
   test("components: direction and duplicate edges are irrelevant") {
     val e1 = Seq((5L, 4L), (4L, 5L), (5L, 4L), (4L, 3L)).toDF("src", "dst")
-    val got = Components.connectedComponents(e1).as[(Long, Long)].collect().toMap
-    assert(got == Map(3L -> 3L, 4L -> 3L, 5L -> 3L))
+    starLabels(e1).foreach { got =>
+      assert(got == Map(3L -> 3L, 4L -> 3L, 5L -> 3L))
+    }
   }
 
   test("bestCopyKeepers: highest score wins, ties to lowest id, isolated " +
@@ -80,7 +87,7 @@ class CurationSpec extends AnyFunSuite {
       val edges = Seq.fill(50)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(p => p._1 != p._2)
       val df = edges.toDF("src", "dst")
-      val prop = Components.connectedComponents(df).as[(Long, Long)].collect().toMap
+      val prop = MinLabelComponents.connectedComponents(df).as[(Long, Long)].collect().toMap
       // default = hybrid (local union-find tail); localSolveEdges = 0
       // forces the pure-distributed contraction — all three row-identical
       val star = Components.connectedComponentsStar(df).as[(Long, Long)].collect().toMap
@@ -206,11 +213,14 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("components: partial propagation FAILS loudly instead of returning wrong labels") {
-    // diameter 11 > maxIter 3: the result would be silently wrong — require fires
+    // one contraction round cannot reach the star forest of an 11-hop
+    // chain: the result would be silently wrong — require fires
+    // (localSolveEdges = 0 keeps the local tail from finishing the job)
     val chain = (0L until 12L).sliding(2).map(s => (s(0), s(1))).toSeq
       .toDF("src", "dst")
     val e = intercept[IllegalArgumentException] {
-      Components.connectedComponents(chain, maxIter = 3).collect()
+      Components.connectedComponentsStar(chain, maxIter = 1,
+        localSolveEdges = 0L).collect()
     }
     assert(e.getMessage.contains("did not converge"))
   }
@@ -221,7 +231,7 @@ class CurationSpec extends AnyFunSuite {
     val edges = Seq.fill(40)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
       .filter(p => p._1 != p._2)
     val df = edges.toDF("src", "dst")
-    val prop = Components.connectedComponents(df, checkpointDir = Some(dir))
+    val prop = MinLabelComponents.connectedComponents(df, checkpointDir = Some(dir))
       .as[(Long, Long)].collect().toMap
     val star = Components.connectedComponentsStar(df, checkpointDir = Some(dir))
       .as[(Long, Long)].collect().toMap
@@ -420,7 +430,7 @@ class CurationSpec extends AnyFunSuite {
 
   test("components: empty edge set yields an empty labeling, no hang") {
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
-    assert(Components.connectedComponents(empty).count() == 0)
+    assert(MinLabelComponents.connectedComponents(empty).count() == 0)
     assert(Components.connectedComponentsStar(empty).count() == 0)
   }
 

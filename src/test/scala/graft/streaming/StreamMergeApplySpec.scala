@@ -97,6 +97,54 @@ class StreamMergeApplySpec extends AnyFunSuite {
       .select("payload").as[String].head() == "second-1")
   }
 
+  test("equal seq values pick the same winner whatever the batch's row " +
+      "order or partitioning") {
+    val changes = Seq(
+      ("upsert", "doc-1", 1L, "left-1", 7L),
+      ("upsert", "doc-1", 1L, "right-1", 7L))
+    def landed(batch: org.apache.spark.sql.DataFrame): String = {
+      val dir = freshDir("smerge-tie")
+      base(dir)
+      StreamMergeApply.applyBatch(dir, seqCol = Some("change_seq"))(
+        batch.toDF("op", "doc_id", "doc_ord", "payload", "change_seq"), 0L)
+      Checkpointing.readAt(spark, dir, 2).filter(col("doc_ord") === 1L)
+        .select("payload").as[String].head()
+    }
+    val winners = Seq(
+      changes.toDF().coalesce(1),
+      changes.reverse.toDF().coalesce(1),
+      spark.sparkContext.parallelize(changes.reverse, 2).toDF())
+      .map(landed)
+    assert(winners.distinct.size == 1, winners)
+  }
+
+  test("a change stream with a map column compacts, with and without seqCol") {
+    // Spark refuses to hash a map: the tiebreak must not hash it raw, and
+    // the arrival-order path must not hash at all
+    val dir = freshDir("smerge-map")
+    Checkpointing.commit(Seq(("doc-0", Map("k" -> "a")), ("doc-1", Map("k" -> "b")))
+      .toDF("doc_id", "attrs"), dir, "base")
+    StreamMergeApply.applyBatch(dir)(
+      Seq(("upsert", "doc-1", Map("k" -> "c")), ("upsert", "doc-1", Map("k" -> "d")))
+        .toDF("op", "doc_id", "attrs").coalesce(1), 0L)
+    def attrs(v: Int): Map[String, String] =
+      Checkpointing.readAt(spark, dir, v).filter(col("doc_id") === "doc-1")
+        .select("attrs").as[Map[String, String]].head()
+    assert(attrs(2) == Map("k" -> "d"))
+    val tied = Seq(("upsert", "doc-1", Map("k" -> "e"), 7L),
+      ("upsert", "doc-1", Map("k" -> "f"), 7L))
+    val winners = Seq(tied, tied.reverse).zipWithIndex.map { case (b, i) =>
+      val d = freshDir(s"smerge-map-tie$i")
+      Checkpointing.commit(Seq(("doc-1", Map("k" -> "a"))).toDF("doc_id", "attrs"),
+        d, "base")
+      StreamMergeApply.applyBatch(d, seqCol = Some("change_seq"))(
+        b.toDF("op", "doc_id", "attrs", "change_seq").coalesce(1), 0L)
+      Checkpointing.readAt(spark, d, 2).select("attrs")
+        .as[Map[String, String]].head()
+    }
+    assert(winners.distinct.size == 1, winners)
+  }
+
   test("empty micro-batch lands no snapshot") {
     val dir = freshDir("smerge-empty")
     base(dir)
