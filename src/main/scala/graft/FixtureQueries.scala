@@ -463,7 +463,7 @@ object FixtureQueries {
       val diff = graft.ops.Spans.spanDiff(
         unnestSpans(Checkpointing.readAt(s, dir, 1)),
         unnestSpans(Checkpointing.readBranch(s, dir, "ci")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager = true)
       val regressions = diff.filter(!col("equal")).count()
       require(regressions > 0, "the CI gate must detect the perturbation")
       // gate verdict: reject — drop the branch; main must be untouched

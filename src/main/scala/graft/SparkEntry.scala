@@ -523,11 +523,11 @@ object SparkEntry {
           .agg(expr("hll_sketch_agg(user_id, 14)").as("sk"))
         val merged = perDay
           .agg(expr("hll_sketch_estimate(hll_union_agg(sk, true))"))
-          .head.getLong(0)
+          .head().getLong(0)
         val single = ev
           .agg(expr("hll_sketch_estimate(hll_sketch_agg(user_id, 14))"))
-          .head.getLong(0)
-        val exact = ev.agg(countDistinct(col("user_id"))).head.getLong(0)
+          .head().getLong(0)
+        val exact = ev.agg(countDistinct(col("user_id"))).head().getLong(0)
         Seq((exact,
           if ((merged - exact).abs * 100 <= 3 * exact) 1L else 0L,
           if (merged == single) 1L else 0L))
@@ -1647,7 +1647,7 @@ object SparkEntry {
         graft.pipeline.Checkpointing.commitWithSpec(
           frame(201, 300, o => o + lit(1800L)), dir, "c3", "temp")
         val (kept, skipped) = graft.pipeline.Checkpointing
-          .pruneInfoBy(dir, 3, "temp", 1000L, 1100L)
+          .pruneInfo(dir, 3, 1000L, 1100L, spec = "temp")
         val c1Files = graft.pipeline.Checkpointing.snapshots(dir)
           .find(_.runId == "c1").get.files.toSet
         require(c1Files.subsetOf(kept.toSet),
@@ -1655,7 +1655,7 @@ object SparkEntry {
         skipped.foreach(n => java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$dir/$n"), "poison".getBytes("UTF-8")))
         val rows = graft.pipeline.Checkpointing
-          .readRangeBy(s, dir, 3, "temp", 1000L, 1100L).count()
+          .readRange(s, dir, 3, 1000L, 1100L, spec = "temp").count()
         Seq(
           ("files_total", 6L), ("files_kept", kept.size.toLong),
           ("files_skipped", skipped.size.toLong),

@@ -409,9 +409,10 @@ object Curation {
     require(trainPct >= 0 && trainPct <= 100, s"trainPct=$trainPct")
     // the pair dataflow (near-dup candidate generation) is the expensive
     // input and is consumed by BOTH the contraction and the audit join —
-    // materialize it once (the semanticDedup pattern)
-    val p = pairs.select(col(aCol), col(bCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // materialize it once. A local checkpoint, not a persist: its blocks
+    // go with the returned frame, and a persisted plan would stay in the
+    // session's cache for later queries over the same tables to match.
+    val p = pairs.select(col(aCol), col(bCol)).localCheckpoint(eager = true)
     val assigned = assignClusterSplits(docs, p, trainPct, salt, aCol, bCol)
     val splits = assigned.select(col("doc_id"), col("split"))
     val leaks = p

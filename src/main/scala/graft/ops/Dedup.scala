@@ -763,9 +763,6 @@ object Dedup {
   def signatureNearDupPairs(sigs: DataFrame, maxHamming: Int): DataFrame =
     bandedSimhashPairs(sigs, maxHamming, exactBands(maxHamming))
 
-  /** Band-join + exact-verify core over precomputed (doc_id, sig) rows —
-    * split out so the band-completeness boundary is unit-testable on
-    * hand-built signatures. */
   /** (doc_id, sig, band, bits) rows for a (doc_id, sig) frame at the
     * given band count — the banding pass shared by the batch and
     * incremental signature finders, and the frame a persisted signature
@@ -854,6 +851,9 @@ object Dedup {
       .distinct()
   }
 
+  /** Band-join + exact-verify core over precomputed (doc_id, sig) rows —
+    * split out so the band-completeness boundary is unit-testable on
+    * hand-built signatures. */
   private[ops] def bandedSimhashPairs(sigs: DataFrame, maxHamming: Int,
       nBands: Int): DataFrame = {
     val banded = signatureBandRows(sigs, nBands)

@@ -124,12 +124,10 @@ object Packing {
       // Materialize the OUTPUT (not just the input) before dropping the
       // input cache: a later recompute of the output would re-run the
       // range partitioner, whose SAMPLED boundaries could differ from the
-      // ones pass 1's totals were measured on. MEMORY_AND_DISK spills
-      // rather than evicting-to-recompute, so the pinned result stays
-      // consistent for every downstream consumer.
-      val out = packed.persist(StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      out
+      // ones pass 1's totals were measured on. A local checkpoint cuts the
+      // lineage, so the pinned result stays consistent for every
+      // downstream consumer, and its blocks go with the returned frame.
+      packed.localCheckpoint(eager = true)
     } finally {
       parted.unpersist(blocking = false)
       ()

@@ -35,7 +35,7 @@ object SkewJoin {
       saltFactor: Int): DataFrame = {
     require(saltFactor > 0, s"saltFactor must be positive, got $saltFactor")
     val salted = big.withColumn("__salt",
-      pmod(xxhash64(struct(big.columns.map(col): _*)), lit(saltFactor.toLong)))
+      pmod(xxhash64(struct(big.columns.toSeq.map(col): _*)), lit(saltFactor.toLong)))
     val replicated = small.withColumn("__salt",
       explode(sequence(lit(0L), lit(saltFactor.toLong - 1))))
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")

@@ -32,14 +32,16 @@ object Checkpointing {
     * travel). Compaction rewrites the data files and logs a fresh
     * snapshot of the compacted state; older versions become EXPIRED (their
     * files are gone) and readAt fails loudly for them, which is Iceberg's
-    * expire-snapshots contract. */
-  /** `full` = the file list is the COMPLETE table state (a compaction
+    * expire-snapshots contract.
+    *
+    * `full` = the file list is the COMPLETE table state (a compaction
     * rebase), not a delta on top of earlier snapshots. `deletes` = names
     * of equality-delete sets (under `<dir>_deletes/<name>`) this snapshot
     * ADDED — merge-on-read row-level deletes, applied at scan time to rows
     * committed by EARLIER snapshots only (Iceberg's sequence-number rule),
-    * so a doc re-extracted after its takedown is visible again. */
-  /** `stats` = per-FILE (min, max) ranges on this snapshot's `spec`
+    * so a doc re-extracted after its takedown is visible again.
+    *
+    * `stats` = per-FILE (min, max) ranges on this snapshot's `spec`
     * column for the files it added, when known — the Iceberg manifest
     * column-stats analog that [[readRange]] prunes with. Files without an
     * entry (no spec column, legacy adoption) are conservatively never
@@ -51,16 +53,17 @@ object Checkpointing {
     * columns — Iceberg's partition-spec evolution: each file prunes under
     * the spec it was WRITTEN with, and a predicate on a column some
     * snapshot never tracked keeps that snapshot's files conservatively
-    * ([[pruneInfoBy]]). Old data is never rewritten when the spec
-    * changes. */
-  /** `rollbackOf` = Some(v) marks a ROLLBACK snapshot (Iceberg's
+    * ([[pruneInfo]]). Old data is never rewritten when the spec
+    * changes.
+    *
+    * `rollbackOf` = Some(v) marks a ROLLBACK snapshot (Iceberg's
     * rollback_to_snapshot): a metadata-only commit whose table state IS
     * version v's — readAt resolves it by substituting v's effective stack,
     * so no data file is copied or rewritten. It is `full` (it rebases the
     * stack: nothing between v and it contributes), and later deltas stack
     * on top of the restored state. */
   final case class Snapshot(seq: Int, runId: String, files: Seq[String],
-      rows: Long, full: Boolean, deletes: Seq[String] = Nil,
+      rows: Long, full: Boolean = false, deletes: Seq[String] = Nil,
       stats: Map[String, (Long, Long)] = Map.empty,
       spec: String = "doc_ord", rollbackOf: Option[Int] = None)
 
@@ -75,40 +78,53 @@ object Checkpointing {
     ()
   }
 
-  private def writeSnapshot(dir: String, runId: String, added: Seq[String],
-      rows: Long, full: Boolean = false, deletes: Seq[String] = Nil,
-      stats: Map[String, (Long, Long)] = Map.empty,
-      spec: String = "doc_ord", rollbackOf: Option[Int] = None): Snapshot =
-    writeSnapshotAt(Paths.get(dir + "_manifest"),
-      snapshots(dir).lastOption.map(_.seq).getOrElse(0) + 1,
-      runId, added, rows, full, deletes, stats, spec, rollbackOf)
+  private def manifestDir(dir: String) = new java.io.File(dir + "_manifest")
 
-  /** [[writeSnapshot]] with the log location and seq made explicit — the
-    * shared writer for the main log and branch logs (a branch log lives
-    * under the main manifest dir and numbers its snapshots CONTINUING from
-    * the branch base, so merge-on-read seq ordering stays global). */
-  private def writeSnapshotAt(manifestDir: java.nio.file.Path, seq: Int,
-      runId: String, added: Seq[String],
-      rows: Long, full: Boolean = false, deletes: Seq[String] = Nil,
-      stats: Map[String, (Long, Long)] = Map.empty,
-      spec: String = "doc_ord", rollbackOf: Option[Int] = None): Snapshot = {
-    Files.createDirectories(manifestDir)
-    val s = Snapshot(seq, runId, added.sorted, rows, full, deletes.sorted,
-      stats, spec, rollbackOf)
-    Files.writeString(manifestDir.resolve(f"snapshot-$seq%05d-$runId.json"),
-      LogCodec.snapshot(s))
-    s
+  /** The one listing of a log dir (the manifest dir or a branch log): its
+    * entries named `<prefix><key><suffix>`, by name, as (key, file). */
+  private def logEntries(logDir: java.io.File, prefix: String,
+      suffix: String = ".json"): Seq[(String, java.io.File)] =
+    Option(logDir.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
+      .filter(f => f.getName.startsWith(prefix) && f.getName.endsWith(suffix))
+      .sortBy(_.getName)
+      .map(f => f.getName.stripPrefix(prefix).stripSuffix(suffix) -> f)
+
+  /** A log dir's snapshot files, oldest first, with the seq each name
+    * carries (`snapshot-<seq>-<runId>.json`) — names only, no JSON read. */
+  private def snapshotFiles(logDir: java.io.File): Seq[(Int, java.io.File)] =
+    logEntries(logDir, "snapshot-").map { case (key, f) =>
+      key.takeWhile(_.isDigit).toInt -> f
+    }
+
+  private def parseLog(files: Seq[(Int, java.io.File)]): Seq[Snapshot] =
+    files.map { case (_, f) => LogCodec.readSnapshot(Files.readString(f.toPath)) }
+
+  /** The seq the next snapshot of `logDir` takes: one past the last one
+    * listed. */
+  private def nextSeq(logDir: java.io.File): Int =
+    snapshotFiles(logDir).lastOption.fold(0)(_._1) + 1
+
+  /** The one snapshot writer, for the main log and branch logs: `s` is
+    * logged under the seq it carries (a branch log numbers its snapshots
+    * CONTINUING from the branch base, so merge-on-read seq ordering stays
+    * global). */
+  private def writeSnapshot(logDir: java.io.File, s: Snapshot): Unit = {
+    Files.createDirectories(logDir.toPath)
+    Files.writeString(
+      logDir.toPath.resolve(f"snapshot-${s.seq}%05d-${s.runId}.json"),
+      LogCodec.snapshot(s.copy(files = s.files.sorted, deletes = s.deletes.sorted)))
+    ()
   }
 
   /** The snapshot log, oldest first (empty when the dir has no commits). */
   def snapshots(dir: String): Seq[Snapshot] =
-    snapshotsAt(new java.io.File(dir + "_manifest"))
+    parseLog(snapshotFiles(manifestDir(dir)))
 
-  private def snapshotsAt(manifestDir: java.io.File): Seq[Snapshot] = {
-    Option(manifestDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("snapshot-") && f.getName.endsWith(".json"))
-      .sortBy(_.getName)
-      .map(f => LogCodec.readSnapshot(Files.readString(f.toPath))).toSeq
+  /** [[snapshots]] of a table that must have committed. */
+  private def committedLog(dir: String): Seq[Snapshot] = {
+    val snaps = snapshots(dir)
+    require(snaps.nonEmpty, s"no snapshots under ${dir}_manifest")
+    snaps
   }
 
   /** Read the table as of snapshot `version` (1-based commit sequence).
@@ -126,16 +142,21 @@ object Checkpointing {
     * files are never rewritten or shuffled. With no live deletes the plan
     * collapses to the plain multi-file parquet scan. */
   def readAt(spark: SparkSession, dir: String, version: Int): DataFrame =
-    assemble(spark, dir, version, effectiveSnaps(dir, version))
+    readLogAt(spark, dir, committedLog(dir), version)
 
-  /** The snapshot stack that defines table state at `version`: everything
-    * from the most recent full (compaction/upsert) rebase at or before it,
-    * plus the deltas on top. */
-  private def effectiveSnaps(dir: String, version: Int): Seq[Snapshot] = {
-    val snaps = snapshots(dir)
-    require(snaps.nonEmpty, s"no snapshots under ${dir}_manifest")
-    require(version >= 1 && version <= snaps.last.seq,
-      s"version $version out of range 1..${snaps.last.seq}")
+  /** [[readAt]] over a log the caller has already parsed. */
+  private def readLogAt(spark: SparkSession, dir: String,
+      snaps: Seq[Snapshot], version: Int): DataFrame =
+    assemble(spark, dir, version, effectiveSnaps(snaps, version))
+
+  /** The snapshot stack of the parsed log `snaps` that defines table state
+    * at `version`: everything from the most recent full (compaction/upsert)
+    * rebase at or before it, plus the deltas on top. */
+  private def effectiveSnaps(snaps: Seq[Snapshot], version: Int)
+      : Seq[Snapshot] = {
+    val head = snaps.lastOption.fold(0)(_.seq)
+    require(version >= 1 && version <= head,
+      s"version $version out of range 1..$head")
     val upTo = snaps.filter(_.seq <= version)
     require(upTo.lastOption.exists(_.seq == version),
       s"snapshot $version is expired (metadata removed by expireSnapshots)")
@@ -156,7 +177,7 @@ object Checkpointing {
     // a post-rollback delete still removes resurrected rows, and a delete
     // in the rolled-back-away range is correctly gone.
     eff.head.rollbackOf match {
-      case Some(target) => effectiveSnaps(dir, target) ++ eff.tail
+      case Some(target) => effectiveSnaps(snaps, target) ++ eff.tail
       case None => eff
     }
   }
@@ -204,28 +225,22 @@ object Checkpointing {
     spark.read.parquet(s"${dir}_deletes/" +
       name.replaceAll("""([\\{}\[\]*?])""", """\\$1"""))
 
-  /** The manifest-stats file-skipping decision for a doc_ord range scan of
-    * version `version`: (kept, skipped) file names. A file is skipped ONLY
-    * when its snapshot recorded a doc_ord range for it and that range
-    * cannot intersect [loOrd, hiOrd] — files without stats (no doc_ord
-    * column, legacy adoption) are conservatively kept. Exposed separately
-    * so specs and queries can pin that planning-time skipping actually
-    * happened (the poison-file proof: a skipped file can be garbage on
-    * disk and the range read must still succeed). */
-  def pruneInfo(dir: String, version: Int, loOrd: Long, hiOrd: Long)
-      : (Seq[String], Seq[String]) =
-    pruneInfoBy(dir, version, "doc_ord", loOrd, hiOrd)
+  /** The manifest-stats file-skipping decision for a `spec`-column range
+    * scan of version `version`: (kept, skipped) file names. A file is
+    * skipped ONLY when the snapshot that WROTE it recorded a range on
+    * `spec` and that range cannot intersect [lo, hi] — files without stats
+    * and files written under another spec column are conservatively kept
+    * (Iceberg's cross-spec scan: evolving the spec never rewrites old
+    * data). Exposed so specs and queries can pin that planning-time
+    * skipping happened (the poison-file proof: a skipped file can be
+    * garbage on disk and the range read must still succeed). */
+  def pruneInfo(dir: String, version: Int, lo: Long, hi: Long,
+      spec: String = "doc_ord"): (Seq[String], Seq[String]) =
+    prune(effectiveSnaps(committedLog(dir), version), spec, lo, hi)
 
-  /** [[pruneInfo]] under partition-spec evolution: each file prunes by
-    * the stats of the SNAPSHOT THAT WROTE IT, and only when that
-    * snapshot's spec column matches the predicate column — files written
-    * under a different (older/newer) spec are kept conservatively, which
-    * is exactly Iceberg's cross-spec scan behavior: evolving the spec
-    * never rewrites old data, it changes how NEW files prune. */
-  def pruneInfoBy(dir: String, version: Int, specCol: String,
-      lo: Long, hi: Long): (Seq[String], Seq[String]) = {
-    require(lo <= hi, s"empty $specCol range [$lo, $hi]")
-    val effective = effectiveSnaps(dir, version)
+  private def prune(effective: Seq[Snapshot], spec: String, lo: Long,
+      hi: Long): (Seq[String], Seq[String]) = {
+    require(lo <= hi, s"empty $spec range [$lo, $hi]")
     val kept = Seq.newBuilder[String]
     val skipped = Seq.newBuilder[String]
     val seen = scala.collection.mutable.Set[String]()
@@ -233,7 +248,7 @@ object Checkpointing {
       s.files.foreach { f =>
         if (seen.add(f)) {
           val keep =
-            if (s.spec != specCol) true
+            if (s.spec != spec) true
             else s.stats.get(f) match {
               case Some((mn, mx)) => mx >= lo && mn <= hi
               case None => true
@@ -246,27 +261,40 @@ object Checkpointing {
   }
 
   /** Range scan with Iceberg-style manifest pruning: read version `version`
-    * restricted to `doc_ord BETWEEN loOrd AND hiOrd`, planning the scan
-    * over ONLY the files whose recorded ord range intersects — at 100 TB
+    * restricted to `spec BETWEEN lo AND hi`, planning the scan over ONLY
+    * the files whose recorded range intersects ([[pruneInfo]]) — at 100 TB
     * the driver skips whole files from the listing, so a narrow range
     * costs the matching files, not a table scan + filter. The residual
     * exact filter still applies (file ranges are coarse); merge-on-read
     * deletes still apply (see [[assemble]]). */
   def readRange(spark: SparkSession, dir: String, version: Int,
-      loOrd: Long, hiOrd: Long): DataFrame =
-    readRangeBy(spark, dir, version, "doc_ord", loOrd, hiOrd)
+      lo: Long, hi: Long, spec: String = "doc_ord"): DataFrame = {
+    val effective = effectiveSnaps(committedLog(dir), version)
+    val kept = prune(effective, spec, lo, hi)._1.toSet
+    assemble(spark, dir, version,
+        effective.map(s => s.copy(files = s.files.filter(kept))))
+      .filter(col(spec).between(lo, hi))
+  }
 
-  /** [[readRange]] on an arbitrary spec column — the spec-evolution read
-    * path: files prune under whatever spec they were written with
-    * ([[pruneInfoBy]]); the residual exact filter still applies. */
-  def readRangeBy(spark: SparkSession, dir: String, version: Int,
-      specCol: String, lo: Long, hi: Long): DataFrame = {
-    val (kept, _) = pruneInfoBy(dir, version, specCol, lo, hi)
-    val keptSet = kept.toSet
-    val pruned = effectiveSnaps(dir, version)
-      .map(s => s.copy(files = s.files.filter(keptSet)))
-    assemble(spark, dir, version, pruned)
-      .filter(col(specCol).between(lo, hi))
+  /** Snapshots `fromExclusive+1 .. toInclusive` of the parsed log, the
+    * range check of [[changesBetween]] and [[cdcBetween]]: every seq in it
+    * must still have metadata (an expired one would silently drop its
+    * delta), and none may be a full rebase (no per-commit identity). */
+  private def deltaRange(snaps: Seq[Snapshot], fromExclusive: Int,
+      toInclusive: Int): Seq[Snapshot] = {
+    val head = snaps.last.seq
+    require(fromExclusive >= 0 && toInclusive > fromExclusive &&
+      toInclusive <= head,
+      s"bad range ($fromExclusive, $toInclusive] over 1..$head")
+    val range = snaps.filter(s => s.seq > fromExclusive && s.seq <= toInclusive)
+    require(range.size == toInclusive - fromExclusive,
+      s"range ($fromExclusive, $toInclusive] has expired snapshots — " +
+        s"present seqs: ${range.map(_.seq).mkString(",")}")
+    require(!range.exists(_.full),
+      s"range ($fromExclusive, $toInclusive] crosses a full rebase " +
+        "(compact/upsert/rollback) — per-commit change identity is gone; " +
+        "resume from the rebase snapshot")
+    range
   }
 
   /** Incremental read: the rows ADDED by snapshots `fromExclusive+1 ..
@@ -278,20 +306,7 @@ object Checkpointing {
     * is gone there — resume from the rebase instead). */
   def changesBetween(spark: SparkSession, dir: String,
       fromExclusive: Int, toInclusive: Int): DataFrame = {
-    val snaps = snapshots(dir)
-    require(snaps.nonEmpty, s"no snapshots under ${dir}_manifest")
-    require(fromExclusive >= 0 && toInclusive > fromExclusive &&
-      toInclusive <= snaps.last.seq,
-      s"bad range ($fromExclusive, $toInclusive] over 1..${snaps.last.seq}")
-    val range = snaps.filter(s => s.seq > fromExclusive && s.seq <= toInclusive)
-    // every seq in the range must still have metadata — an expired
-    // snapshot inside the range would silently drop its delta
-    require(range.size == toInclusive - fromExclusive,
-      s"range ($fromExclusive, $toInclusive] has expired snapshots — " +
-        s"present seqs: ${range.map(_.seq).mkString(",")}")
-    require(!range.exists(_.full),
-      s"range ($fromExclusive, $toInclusive] crosses a compaction rebase — " +
-        "per-commit deltas are gone; resume from the rebase snapshot")
+    val range = deltaRange(committedLog(dir), fromExclusive, toInclusive)
     // a delete snapshot is a retraction, not an append — an append-only
     // delta consumer would silently keep rows the table no longer has;
     // consume `<dir>_deletes/<runId>` explicitly instead
@@ -340,19 +355,8 @@ object Checkpointing {
     * there — resume from the rebase. */
   def cdcBetween(spark: SparkSession, dir: String,
       fromExclusive: Int, toInclusive: Int): DataFrame = {
-    val snaps = snapshots(dir)
-    require(snaps.nonEmpty, s"no snapshots under ${dir}_manifest")
-    require(fromExclusive >= 0 && toInclusive > fromExclusive &&
-      toInclusive <= snaps.last.seq,
-      s"bad range ($fromExclusive, $toInclusive] over 1..${snaps.last.seq}")
-    val range = snaps.filter(s => s.seq > fromExclusive && s.seq <= toInclusive)
-    require(range.size == toInclusive - fromExclusive,
-      s"range ($fromExclusive, $toInclusive] has expired snapshots — " +
-        s"present seqs: ${range.map(_.seq).mkString(",")}")
-    require(!range.exists(_.full),
-      s"range ($fromExclusive, $toInclusive] crosses a full rebase " +
-        "(compact/upsert/rollback) — per-row change identity is gone; " +
-        "resume from the rebase snapshot")
+    val snaps = committedLog(dir)
+    val range = deltaRange(snaps, fromExclusive, toInclusive)
     val legs = range.flatMap { s =>
       val ins =
         if (s.files.isEmpty) Nil
@@ -370,7 +374,7 @@ object Checkpointing {
             .reduce(_ unionByName _).select("doc_id")
           // pre-state rows are all committed before this snapshot, so the
           // sequence rule (delete only earlier commits) is the semi-join
-          Seq(readAt(spark, dir, s.seq - 1)
+          Seq(readLogAt(spark, dir, snaps, s.seq - 1)
             .join(broadcast(keys), Seq("doc_id"), "left_semi")
             .withColumn("_change_type", lit("delete"))
             .withColumn("_commit_seq", lit(s.seq)))
@@ -402,15 +406,17 @@ object Checkpointing {
       .filter(col("count") > 1).count()
     require(nDups == 0,
       s"upsert input has $nDups doc_ids with multiple rows — dedupe first")
-    val cur = readAt(spark, dir, snaps.last.seq)
+    val cur = readLogAt(spark, dir, snaps, snaps.last.seq)
     val kept = cur.join(broadcast(df.select("doc_id").distinct()),
       Seq("doc_id"), "left_anti")
     // instrumented write: rows + per-file ord stats come from the write
     // job's own accumulator instead of a separate read-back scan of the
     // freshly-written files (one job + one shuffle fewer per upsert)
     val (rows, added, stats) = writeInstrumented(
-      kept.unionByName(df.select(cur.columns.map(col): _*)), dir, runId)
-    writeSnapshot(dir, runId, added, rows, full = true, stats = stats)
+      kept.unionByName(df.select(cur.columns.toSeq.map(col): _*)), dir, runId)
+    val m = manifestDir(dir)
+    writeSnapshot(m, Snapshot(nextSeq(m), runId, added, rows, full = true,
+      stats = stats))
     rows
   }
 
@@ -431,28 +437,31 @@ object Checkpointing {
     * re-extracted by the next run — for a permanent takedown, remove the
     * doc from the input corpus too. */
   def deleteWhere(ids: DataFrame, dir: String, runId: String): Long = {
-    val spark = ids.sparkSession
-    val snaps = snapshots(dir)
-    require(snaps.nonEmpty, s"deleteWhere needs a committed table at $dir")
+    val m = manifestDir(dir)
+    require(snapshotFiles(m).nonEmpty,
+      s"deleteWhere needs a committed table at $dir")
+    val n = writeDeleteSet(ids.select("doc_id").distinct(), dir, runId)
+    writeSnapshot(m, Snapshot(nextSeq(m), runId, Nil, n, deletes = Seq(runId)))
+    n
+  }
+
+  /** Write `keys` (distinct doc_ids) as the new delete set `runId` in ONE
+    * job: the key count comes from the written file's footer, not from a
+    * second count() job. An empty set is removed and refused, so no empty
+    * delete snapshot is ever logged. Returns the key count. */
+  private def writeDeleteSet(keys: DataFrame, dir: String,
+      runId: String): Long = {
     val delDir = s"${dir}_deletes/$runId"
     require(!Files.exists(Paths.get(delDir)),
       s"delete set $runId already exists at $delDir")
-    val keys = ids.select("doc_id").distinct()
-    // ONE job: write the set, then read the key count from the written
-    // file's parquet footer (metadata-only) — previously a separate
-    // count() action ran the whole distinct first and the write ran it
-    // again. The empty-tombstone refusal is enforced after the write by
-    // removing the empty set — same contract (no empty delete snapshot is
-    // ever logged).
     keys.coalesce(1).write.parquet(delDir)
     val n = parquetNames(delDir).toSeq
       .map(f => footerStats(s"$delDir/$f", "doc_id")._1).sum
     if (n == 0) {
       deleteRecursively(new java.io.File(delDir))
-      require(n > 0, s"deleteWhere matched no doc_ids — refusing to log " +
-        "an empty delete snapshot")
+      require(n > 0, s"delete set $runId matched no doc_ids — refusing to " +
+        "log an empty delete snapshot")
     }
-    writeSnapshot(dir, runId, Nil, n, deletes = Seq(runId))
     n
   }
 
@@ -491,10 +500,7 @@ object Checkpointing {
       .filter(col("count") > 1).count()
     require(nDups == 0,
       s"merge source has $nDups doc_ids with multiple rows — dedupe first")
-    val delDir = s"${dir}_deletes/$runId"
-    require(!Files.exists(Paths.get(delDir)),
-      s"delete set $runId already exists at $delDir")
-    val cur = readAt(spark, dir, snaps.last.seq)
+    val cur = readLogAt(spark, dir, snaps, snaps.last.seq)
     // one pass over the current state, source ids broadcast; the result is
     // at most source-sized, persisted so the consumers below don't
     // re-scan the table per leg
@@ -520,6 +526,13 @@ object Checkpointing {
       val (nUpd, nDel, nIns) = (cnt(0), cnt(1), cnt(2))
       require(nUpd + nDel + nIns > 0,
         "merge matched nothing and inserts nothing — refusing an empty snapshot")
+      // the tombstones land before the appends, so a clashing delete set
+      // is refused before any data file is written
+      val deletes =
+        if (nUpd + nDel > 0) {
+          writeDeleteSet(matchedIds, dir, runId)
+          Seq(runId)
+        } else Nil
       val matched = source.join(broadcast(matchedIds), Seq("doc_id"), "left_semi")
       val updates = matched.filter(!deleteWhen)
       val inserts = source
@@ -532,11 +545,9 @@ object Checkpointing {
       // write job itself — the separate read-back stats scan (one extra
       // job + shuffle per merge) is gone
       val (nApp, added, stats) = writeInstrumented(appends, dir, runId)
-      if (nUpd + nDel > 0) {
-        matchedIds.coalesce(1).write.parquet(delDir)
-        writeSnapshot(dir, runId, added, nApp, deletes = Seq(runId),
-          stats = stats)
-      } else writeSnapshot(dir, runId, added, nApp, stats = stats)
+      val m = manifestDir(dir)
+      writeSnapshot(m, Snapshot(nextSeq(m), runId, added, nApp,
+        deletes = deletes, stats = stats))
       (nUpd, nDel, nIns)
     } finally {
       matchedIds.unpersist(blocking = false)
@@ -558,26 +569,24 @@ object Checkpointing {
     require(snaps.nonEmpty, s"vacuum needs a snapshot log under ${dir}_manifest")
     // the live stack resolves a rollback head to its target's stack — a
     // rollback snapshot itself lists no files, but the state it restores
-    // is live and its files must not be vacuumed as orphans
-    val liveSnaps = effectiveSnaps(dir, snaps.last.seq)
+    // is live and its files must not be vacuumed as orphans; tagged
+    // versions stay readable until their tag is dropped, and live branches
+    // keep their own commits AND their base stacks readable, so those
+    // stacks' files (and delete sets, below) are live too
+    val liveSnaps = effectiveSnaps(snaps, snaps.last.seq) ++
+      refStacks(dir, snaps)
     // staged (write-audit-publish) batches are live-until-decided: their
     // files are referenced by staged markers, not snapshots — vacuum must
-    // not destroy a batch an auditor is still looking at. (staged() also
-    // self-heals here: a stale marker left by a crashed publish is dropped
-    // from the listing, so ITS files are protected via the snapshot.)
-    val stagedLive = staged(dir).flatMap(_.files).toSet
-    // tagged versions stay readable until their tag is dropped: their
-    // stacks' files (and delete sets, below) are live too
-    val tagged = taggedStacks(dir, snaps)
-    // live branches keep their own commits AND their base stacks readable
-    val branched = branchStacks(dir, snaps)
-    val live = (liveSnaps ++ tagged ++ branched).flatMap(_.files).toSet ++
-      stagedLive
+    // not destroy a batch an auditor is still looking at. (A stale marker
+    // left by a crashed publish is not a staged batch, so ITS files are
+    // protected via the snapshot.)
+    val stagedLive = stagedIn(dir, snaps).flatMap(_.files).toSet
+    val live = liveSnaps.flatMap(_.files).toSet ++ stagedLive
     val orphans = (parquetNames(dir) -- live).toSeq.sorted
     orphans.foreach(n => Files.deleteIfExists(Paths.get(s"$dir/$n")))
     // delete sets referenced by no live snapshot (expired by a rebase, or
     // debris of a crashed deleteWhere) go the same way
-    val liveDels = (liveSnaps ++ tagged ++ branched).flatMap(_.deletes).toSet
+    val liveDels = liveSnaps.flatMap(_.deletes).toSet
     val delRoot = new java.io.File(s"${dir}_deletes")
     val delOrphans = Option(delRoot.listFiles()).getOrElse(Array.empty)
       .collect { case f if !liveDels.contains(f.getName) => f.getName }
@@ -585,19 +594,12 @@ object Checkpointing {
     delOrphans.foreach(n => deleteRecursively(new java.io.File(delRoot, n)))
     // stale staged markers (publish crashed after its snapshot write)
     // are metadata debris — the snapshot owns the files now
-    val publishedRuns = snaps.map(_.runId).toSet
-    val staleMarkers = Option(new java.io.File(dir + "_manifest").listFiles())
-      .getOrElse(Array.empty)
-      .collect { case f if f.getName.startsWith("staged-") &&
-          f.getName.endsWith(".json") &&
-          publishedRuns.contains(
-            f.getName.stripPrefix("staged-").stripSuffix(".json")) =>
-        f.getName
-      }.toSeq.sorted
-    staleMarkers.foreach(n =>
-      Files.deleteIfExists(Paths.get(s"${dir}_manifest/$n")))
+    val published = snaps.map(_.runId).toSet
+    val staleMarkers = logEntries(manifestDir(dir), "staged-")
+      .collect { case (run, f) if published(run) => f }
+    staleMarkers.foreach(f => Files.deleteIfExists(f.toPath))
     orphans ++ delOrphans.map(n => s"_deletes/$n") ++
-      staleMarkers.map(n => s"_manifest/$n")
+      staleMarkers.map(f => s"_manifest/${f.getName}")
   }
 
   // ------------------------------------------------------------ tags
@@ -623,12 +625,9 @@ object Checkpointing {
   }
 
   /** All tags: name -> pinned version. */
-  def tags(dir: String): Map[String, Int] = {
-    val manifestDir = new java.io.File(dir + "_manifest")
-    Option(manifestDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("tag-") && f.getName.endsWith(".json"))
-      .map(f => LogCodec.readTag(Files.readString(f.toPath))).toMap
-  }
+  def tags(dir: String): Map[String, Int] =
+    logEntries(manifestDir(dir), "tag-")
+      .map { case (_, f) => LogCodec.readTag(Files.readString(f.toPath)) }.toMap
 
   def dropTag(dir: String, name: String): Unit = {
     val p = Paths.get(s"${dir}_manifest/tag-$name.json")
@@ -643,14 +642,18 @@ object Checkpointing {
     readAt(spark, dir, t(name))
   }
 
-  /** The effective stacks of every tagged version — the snapshots (and
-    * through them, files + delete sets) that tags protect. */
-  private def taggedStacks(dir: String, snaps: Seq[Snapshot]): Seq[Snapshot] =
-    tags(dir).values.toSeq.distinct.flatMap { v =>
-      // same resolution as the read path — a tag on (or above) a rollback
-      // protects the delegated target stack too
-      effectiveSnaps(dir, v)
-    }
+  /** The snapshots (and through them, files + delete sets) that refs keep
+    * alive in the parsed log `snaps`: the effective stack of every tagged
+    * version, and of every live branch its base version's effective stack
+    * plus its own commits. */
+  private def refStacks(dir: String, snaps: Seq[Snapshot]): Seq[Snapshot] =
+    // same resolution as the read path — a tag on (or above) a rollback
+    // protects the delegated target stack too
+    tags(dir).values.toSeq.distinct.flatMap(effectiveSnaps(snaps, _)) ++
+      branchDirs(dir).flatMap { case (name, b) =>
+        effectiveSnaps(snaps, branchBase(dir, name)) ++
+          parseLog(snapshotFiles(b))
+      }
 
   // ------------------------------------------------------------ branches
   /** Iceberg-style BRANCHES: a writable named ref. Where a tag ([[tag]])
@@ -678,36 +681,37 @@ object Checkpointing {
     require(snaps.exists(_.seq == version),
       s"cannot branch at version $version: unknown or expired " +
         s"(present: ${snaps.map(_.seq).mkString(",")})")
-    effectiveSnaps(dir, version) // base must be readable NOW — fail here
-    val d = Paths.get(branchPath(dir, name))
+    effectiveSnaps(snaps, version) // base must be readable NOW — fail here
+    val d = branchDir(dir, name).toPath
     require(!Files.exists(d), s"branch '$name' already exists — dropBranch first")
     Files.createDirectories(d)
     Files.writeString(d.resolve("base.json"), LogCodec.branchBase(name, version))
     ()
   }
 
-  private def branchPath(dir: String, name: String) =
-    s"${dir}_manifest/branch-$name"
+  private def branchDir(dir: String, name: String) =
+    new java.io.File(manifestDir(dir), s"branch-$name")
+
+  /** Live branch logs: (name, log dir). */
+  private def branchDirs(dir: String): Seq[(String, java.io.File)] =
+    logEntries(manifestDir(dir), "branch-", suffix = "").filter {
+      case (_, f) => f.isDirectory && new java.io.File(f, "base.json").exists
+    }
 
   /** Live branches: name → (base version, number of branch commits). */
-  def branches(dir: String): Map[String, (Int, Int)] = {
-    val manifestDir = new java.io.File(dir + "_manifest")
-    Option(manifestDir.listFiles()).getOrElse(Array.empty)
-      .collect { case f if f.isDirectory && f.getName.startsWith("branch-") &&
-          Files.exists(f.toPath.resolve("base.json")) =>
-        val name = f.getName.stripPrefix("branch-")
-        name -> (branchBase(dir, name), snapshotsAt(f).size)
-      }.toMap
-  }
+  def branches(dir: String): Map[String, (Int, Int)] =
+    branchDirs(dir).map { case (name, b) =>
+      name -> (branchBase(dir, name), snapshotFiles(b).size)
+    }.toMap
 
   private def branchBase(dir: String, name: String): Int = {
-    val p = Paths.get(branchPath(dir, name), "base.json")
+    val p = branchDir(dir, name).toPath.resolve("base.json")
     require(Files.exists(p), s"no such branch: '$name'")
     LogCodec.readBranchBase(Files.readString(p))
   }
 
   private def branchSnaps(dir: String, name: String): Seq[Snapshot] =
-    snapshotsAt(new java.io.File(branchPath(dir, name)))
+    parseLog(snapshotFiles(branchDir(dir, name)))
 
   /** Append a batch to the branch: data files land in the table dir, the
     * snapshot lands in the branch log only — invisible to main readers. */
@@ -715,10 +719,9 @@ object Checkpointing {
       runId: String): Long = {
     val base = branchBase(dir, name)
     val (rows, added, stats) = writeInstrumented(df, dir, runId)
-    val seq = math.max(base, branchSnaps(dir, name).lastOption
-      .map(_.seq).getOrElse(0)) + 1
-    writeSnapshotAt(Paths.get(branchPath(dir, name)), seq, runId, added,
-      rows, stats = stats)
+    val b = branchDir(dir, name)
+    writeSnapshot(b, Snapshot(math.max(base + 1, nextSeq(b)), runId, added,
+      rows, stats = stats))
     rows
   }
 
@@ -732,17 +735,10 @@ object Checkpointing {
   def upsertToBranch(df: DataFrame, dir: String, name: String,
       runId: String): Long = {
     val base = branchBase(dir, name)
-    val keys = df.select("doc_id").distinct()
-    val delDir = s"${dir}_deletes/$runId"
-    require(!Files.exists(Paths.get(delDir)),
-      s"delete set $runId already exists at $delDir")
-    val n = keys.count()
-    require(n > 0, "upsertToBranch with no rows — nothing to rebase")
-    keys.coalesce(1).write.parquet(delDir)
-    val seqDel = math.max(base, branchSnaps(dir, name).lastOption
-      .map(_.seq).getOrElse(0)) + 1
-    writeSnapshotAt(Paths.get(branchPath(dir, name)), seqDel, s"$runId-del",
-      Nil, n, deletes = Seq(runId))
+    val n = writeDeleteSet(df.select("doc_id").distinct(), dir, runId)
+    val b = branchDir(dir, name)
+    writeSnapshot(b, Snapshot(math.max(base + 1, nextSeq(b)), s"$runId-del",
+      Nil, n, deletes = Seq(runId)))
     commitToBranch(df, dir, name, runId)
   }
 
@@ -750,7 +746,7 @@ object Checkpointing {
     * branch commit on top. */
   def readBranch(spark: SparkSession, dir: String, name: String): DataFrame = {
     val base = branchBase(dir, name)
-    val stack = effectiveSnaps(dir, base) ++ branchSnaps(dir, name)
+    val stack = effectiveSnaps(snapshots(dir), base) ++ branchSnaps(dir, name)
     assemble(spark, dir, base, stack)
   }
 
@@ -763,34 +759,25 @@ object Checkpointing {
     * Returns main's new head version. */
   def fastForward(dir: String, name: String): Int = {
     val base = branchBase(dir, name)
-    val head = snapshots(dir).last.seq
+    val m = manifestDir(dir)
+    val head = nextSeq(m) - 1
     require(head == base,
       s"cannot fast-forward '$name': main advanced to $head past the " +
         s"branch base $base — drop the branch and re-stage the audit")
     val bs = branchSnaps(dir, name)
     require(bs.nonEmpty, s"branch '$name' has no commits to land")
-    bs.foreach { s =>
-      writeSnapshot(dir, s.runId, s.files, s.rows, s.full, s.deletes,
-        s.stats, s.spec, s.rollbackOf)
-    }
+    bs.foreach(writeSnapshot(m, _))
     dropBranch(dir, name)
-    snapshots(dir).last.seq
+    bs.last.seq
   }
 
   /** Discard the branch: its log disappears; its data files become
     * orphans for the next [[vacuum]] to reclaim. */
   def dropBranch(dir: String, name: String): Unit = {
-    val d = new java.io.File(branchPath(dir, name))
+    val d = branchDir(dir, name)
     require(d.isDirectory, s"no such branch: '$name'")
     deleteRecursively(d)
   }
-
-  /** Every snapshot a live branch keeps alive: its own commits plus its
-    * base version's effective stack. */
-  private def branchStacks(dir: String, snaps: Seq[Snapshot]): Seq[Snapshot] =
-    branches(dir).keys.toSeq.flatMap { n =>
-      effectiveSnaps(dir, branchBase(dir, n)) ++ branchSnaps(dir, n)
-    }
 
   /** Iceberg `rollback_to_snapshot` — restore the table to an earlier
     * version as a NEW commit, metadata-only. One snapshot file is written;
@@ -804,16 +791,18 @@ object Checkpointing {
     * a rollback: recording the restored row count would take a table scan,
     * defeating metadata-only. Returns the new snapshot's seq. */
   def rollback(dir: String, toVersion: Int, runId: String): Int = {
-    val snaps = snapshots(dir)
-    require(snaps.nonEmpty, s"no snapshots under ${dir}_manifest")
+    val snaps = committedLog(dir)
     require(toVersion < snaps.last.seq,
       s"rollback target $toVersion is not an earlier version " +
         s"(current: ${snaps.last.seq})")
     // the target must be readable NOW — fail at rollback time with the
     // real reason (expired metadata, gapped stack), not at first read
-    effectiveSnaps(dir, toVersion)
-    writeSnapshot(dir, runId, Nil, rows = 0L, full = true,
-      rollbackOf = Some(toVersion)).seq
+    effectiveSnaps(snaps, toVersion)
+    val m = manifestDir(dir)
+    val seq = nextSeq(m)
+    writeSnapshot(m, Snapshot(seq, runId, Nil, rows = 0L, full = true,
+      rollbackOf = Some(toVersion)))
+    seq
   }
 
   /** Iceberg `expire_snapshots` — retention for the snapshot LOG itself.
@@ -834,7 +823,8 @@ object Checkpointing {
     * state and nothing may expire. */
   def expireSnapshots(dir: String, keepLast: Int = 1): Seq[String] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val snaps = snapshots(dir)
+    val files = snapshotFiles(manifestDir(dir))
+    val snaps = parseLog(files)
     require(snaps.nonEmpty, s"no snapshots under ${dir}_manifest")
     val baseIdx = snaps.lastIndexWhere(_.full)
     if (baseIdx < 0) return Nil
@@ -843,19 +833,17 @@ object Checkpointing {
     // tags protect their whole effective stack (protecting the tagged seq
     // alone could leave it unreadable — its deltas-below would be gone);
     // branches protect their base stacks the same way
-    val tagProtected = (taggedStacks(dir, snaps) ++ branchStacks(dir, snaps))
-      .map(_.seq).toSet
+    val tagProtected = refStacks(dir, snaps).map(_.seq).toSet
     // the LIVE stack is protected too: when the latest rebase is a
     // rollback, the state it restores lives in snapshots BELOW baseSeq —
     // expiring them would break every future read of the current table
-    val liveProtected = effectiveSnaps(dir, snaps.last.seq).map(_.seq).toSet
-    val expired = snaps.filter(s => s.seq < baseSeq && s.seq < keepFromSeq &&
-      !tagProtected(s.seq) && !liveProtected(s.seq))
-    expired.foreach { s =>
-      Files.deleteIfExists(Paths.get(
-        f"${dir}_manifest/snapshot-${s.seq}%05d-${s.runId}.json"))
+    val liveProtected = effectiveSnaps(snaps, snaps.last.seq).map(_.seq).toSet
+    val expired = files.zip(snaps).collect {
+      case ((_, f), s) if s.seq < baseSeq && s.seq < keepFromSeq &&
+          !tagProtected(s.seq) && !liveProtected(s.seq) => f -> s.runId
     }
-    expired.map(_.runId)
+    expired.foreach { case (f, _) => Files.deleteIfExists(f.toPath) }
+    expired.map(_._2)
   }
 
   /** Docs not yet present in the committed output. "Committed" is defined
@@ -869,10 +857,11 @@ object Checkpointing {
     import spark.implicits._
     val snaps = snapshots(committedDir)
     val committed =
-      if (snaps.nonEmpty) Some(readAt(spark, committedDir, snaps.last.seq))
+      if (snaps.nonEmpty)
+        Some(readLogAt(spark, committedDir, snaps, snaps.last.seq))
       // a dir whose ONLY content is staged (unpublished) batches has no
       // committed rows — the raw-dir legacy fallback must not count them
-      else if (staged(committedDir).nonEmpty) None
+      else if (stagedIn(committedDir, snaps).nonEmpty) None
       else if (Files.exists(Paths.get(committedDir)))
         Some(spark.read.parquet(committedDir))
       else None
@@ -897,10 +886,11 @@ object Checkpointing {
   def compact(spark: SparkSession, dir: String, partitions: Int,
       runId: String): (Int, Int, Long) = {
     require(partitions > 0)
+    val snaps = snapshots(dir)
     // the rewrite swaps the whole data dir — an undecided staged batch
     // (write-audit-publish) lives in that dir outside any snapshot and
     // would be silently destroyed; decide the audit first
-    val pending = staged(dir)
+    val pending = stagedIn(dir, snaps)
     require(pending.isEmpty, "compact with undecided staged batches " +
       s"(${pending.map(_.runId).mkString(", ")}) — publish or abandon first")
     // compact deletes superseded files OUTRIGHT — it would destroy the
@@ -915,15 +905,12 @@ object Checkpointing {
     val live = branches(dir)
     require(live.isEmpty, "compact would delete files live branches need " +
       s"(branches: ${live.keys.mkString(", ")}) — fastForward or dropBranch first")
-    def parquetFiles(d: java.io.File): Int =
-      Option(d.listFiles()).map(_.count(f => f.getName.endsWith(".parquet"))).getOrElse(0)
-    val before = parquetFiles(new java.io.File(dir))
+    val before = parquetNames(dir).size
     // compact the COMMITTED state, not the raw directory: after an
     // un-vacuumed upsert the dir still holds pre-rebase files (raw scan
     // would duplicate rows), and live delete sets must be materialized
     // into the rewrite — readAt(latest) is both, by definition
-    val curSnaps = snapshots(dir)
-    val df = if (curSnaps.nonEmpty) readAt(spark, dir, curSnaps.last.seq)
+    val df = if (snaps.nonEmpty) readLogAt(spark, dir, snaps, snaps.last.seq)
              else spark.read.parquet(dir)
     val tmp = s"${dir}_compact-$runId"
     // the rewrite CLUSTERS by doc_ord when the column exists (Iceberg's
@@ -948,19 +935,20 @@ object Checkpointing {
     require(old.renameTo(aside), s"rename $dir -> $aside failed")
     require(new java.io.File(tmp).renameTo(old), s"rename $tmp -> $dir failed")
     deleteRecursively(aside)
-    val manifestDir = Paths.get(dir + "_manifest")
-    Files.createDirectories(manifestDir)
-    Files.writeString(manifestDir.resolve(s"compaction-$runId.json"),
-      LogCodec.compaction(runId, before, parquetFiles(old), rows))
+    val after = parquetNames(dir)
+    val m = manifestDir(dir)
+    Files.createDirectories(m.toPath)
+    Files.writeString(m.toPath.resolve(s"compaction-$runId.json"),
+      LogCodec.compaction(runId, before, after.size, rows))
     // the compacted state is a NEW snapshot (full file listing); earlier
     // versions are now expired — readAt tells the caller so. File names
     // survive the directory rename, so the tmp-scan stats carry over.
-    writeSnapshot(dir, s"compact-$runId", parquetNames(dir).toSeq, rows,
-      full = true, stats = tmpStats)
+    writeSnapshot(m, Snapshot(nextSeq(m), s"compact-$runId", after.toSeq,
+      rows, full = true, stats = tmpStats))
     // the rewrite materialized every live delete; no snapshot references
     // the sets any more (compact expires aggressively, unlike upsert)
     deleteRecursively(new java.io.File(s"${dir}_deletes"))
-    (before, parquetFiles(old), rows)
+    (before, after.size, rows)
   }
 
   /** Append a batch and write its lineage manifest. Returns rows written.
@@ -984,14 +972,15 @@ object Checkpointing {
     * orphans. */
   def commit(df: DataFrame, dir: String, runId: String): Long = {
     val (rows, added, stats) = writeInstrumented(df, dir, runId)
-    writeSnapshot(dir, runId, added, rows, stats = stats)
+    val m = manifestDir(dir)
+    writeSnapshot(m, Snapshot(nextSeq(m), runId, added, rows, stats = stats))
     rows
   }
 
   /** [[commit]] under an EVOLVED partition spec: per-file stats are
     * captured on `specCol` instead of doc_ord and the snapshot records
     * which spec its files prune under. Earlier commits keep their own
-    * spec — nothing is rewritten; [[readRangeBy]] prunes each file under
+    * spec — nothing is rewritten; [[readRange]] prunes each file under
     * the spec it was written with. */
   def commitWithSpec(df: DataFrame, dir: String, runId: String,
       specCol: String): Long = {
@@ -1003,7 +992,9 @@ object Checkpointing {
       s"spec column $specCol must be BIGINT (stats are long ranges), got " +
         df.schema(specCol).dataType.simpleString)
     val (rows, added, stats) = writeInstrumented(df, dir, runId, specCol)
-    writeSnapshot(dir, runId, added, rows, stats = stats, spec = specCol)
+    val m = manifestDir(dir)
+    writeSnapshot(m, Snapshot(nextSeq(m), runId, added, rows, stats = stats,
+      spec = specCol))
     rows
   }
 
@@ -1015,24 +1006,25 @@ object Checkpointing {
       : (Long, Seq[String], Map[String, (Long, Long)]) = {
     val spark = df.sparkSession
     val filesBefore = parquetNames(dir)
-    if (snapshots(dir).isEmpty && filesBefore.nonEmpty) {
+    val m = manifestDir(dir)
+    if (snapshotFiles(m).isEmpty && filesBefore.nonEmpty) {
       val legacyRows = spark.read
         .parquet(filesBefore.toSeq.map(n => s"$dir/$n"): _*).count()
-      writeSnapshot(dir, "legacy-adopt", filesBefore.toSeq, legacyRows)
+      writeSnapshot(m, Snapshot(1, "legacy-adopt", filesBefore.toSeq,
+        legacyRows))
     }
     df.write.mode(SaveMode.Append).parquet(dir)
     val added = (parquetNames(dir) -- filesBefore).toSeq.sorted
     // per-file rows + statsCol ranges from the footers (metadata-only)
     val perFile = added.map(n => n -> footerStats(s"$dir/$n", statsCol))
     if (writeManifest) {
-      val manifestDir = Paths.get(dir + "_manifest")
-      Files.createDirectories(manifestDir)
+      Files.createDirectories(m.toPath)
       val lines = perFile.map { case (name, (rows, range)) =>
         val part = """part-(\d+)-""".r.findFirstMatchIn(name)
           .map(_.group(1).toInt).getOrElse(-1)
         LogCodec.manifestLine(runId, part, rows, range)
       }
-      Files.write(manifestDir.resolve(s"manifest-$runId.jsonl"),
+      Files.write(m.toPath.resolve(s"manifest-$runId.jsonl"),
         lines.mkString("\n").getBytes("UTF-8"),
         StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     }
@@ -1109,28 +1101,32 @@ object Checkpointing {
     * has a snapshot is the debris of a publish that crashed between
     * snapshot write and marker cleanup — filtered out here (the publish
     * DID happen; the next publish/abandon call or vacuum clears it). */
-  def staged(dir: String): Seq[Staged] = {
-    val published = snapshots(dir).map(_.runId).toSet
-    Option(new java.io.File(dir + "_manifest").listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("staged-") && f.getName.endsWith(".json"))
-      .sortBy(_.getName)
-      .map(f => LogCodec.readStaged(Files.readString(f.toPath))).toSeq
-      .filterNot(s => published.contains(s.runId))
+  def staged(dir: String): Seq[Staged] = stagedIn(dir, snapshots(dir))
+
+  /** [[staged]] against the parsed log `snaps`: markers whose runId it
+    * has not published. */
+  private def stagedIn(dir: String, snaps: Seq[Snapshot]): Seq[Staged] = {
+    val published = snaps.map(_.runId).toSet
+    logEntries(manifestDir(dir), "staged-").collect {
+      case (run, f) if !published(run) =>
+        LogCodec.readStaged(Files.readString(f.toPath))
+    }
   }
+
+  private def stagedBatch(dir: String, snaps: Seq[Snapshot],
+      runId: String): Staged = stagedIn(dir, snaps).find(_.runId == runId)
+    .getOrElse(throw new IllegalArgumentException(s"no staged batch $runId at $dir"))
 
   /** The auditor's view: the current committed table PLUS the staged
     * batch — what the table WOULD be after publish. Audit invariants
     * (row counts, no duplicate doc_ids, quality gates) run here before
     * any reader can see the rows. */
   def readStaged(spark: SparkSession, dir: String, runId: String): DataFrame = {
-    val st = staged(dir).find(_.runId == runId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no staged batch $runId at $dir"))
-    val batch = spark.read.parquet(st.files.map(n => s"$dir/$n"): _*)
     val snaps = snapshots(dir)
+    val st = stagedBatch(dir, snaps, runId)
+    val batch = spark.read.parquet(st.files.map(n => s"$dir/$n"): _*)
     if (snaps.isEmpty) batch
-    else readAt(spark, dir, snaps.last.seq).unionByName(batch)
+    else readLogAt(spark, dir, snaps, snaps.last.seq).unionByName(batch)
   }
 
   /** Write-audit-publish, step 3a: promote the staged batch to a real
@@ -1138,26 +1134,25 @@ object Checkpointing {
     * against the crash window: if the runId is already published, only the
     * stale marker is cleaned up. */
   def publish(dir: String, runId: String): Long = {
-    val already = snapshots(dir).find(_.runId == runId)
-    if (already.isDefined) {
-      Files.deleteIfExists(stagedPath(dir, runId))
-      return already.get.rows
+    val snaps = snapshots(dir)
+    val rows = snaps.find(_.runId == runId) match {
+      case Some(published) => published.rows // only the marker is left
+      case None =>
+        val st = stagedBatch(dir, snaps, runId)
+        val m = manifestDir(dir)
+        writeSnapshot(m, Snapshot(nextSeq(m), runId, st.files, st.rows,
+          stats = st.stats))
+        st.rows
     }
-    val st = staged(dir).find(_.runId == runId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no staged batch $runId at $dir"))
-    writeSnapshot(dir, runId, st.files, st.rows, stats = st.stats)
     Files.deleteIfExists(stagedPath(dir, runId))
-    st.rows
+    rows
   }
 
   /** Write-audit-publish, step 3b: the audit failed — drop the marker and
     * the batch's data files. The committed table never saw the rows.
     * Returns the removed file names. */
   def abandon(dir: String, runId: String): Seq[String] = {
-    val st = staged(dir).find(_.runId == runId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no staged batch $runId at $dir"))
+    val st = stagedBatch(dir, snapshots(dir), runId)
     Files.deleteIfExists(stagedPath(dir, runId))
     st.files.foreach(n => Files.deleteIfExists(Paths.get(s"$dir/$n")))
     st.files

@@ -154,7 +154,7 @@ object PhysicalAsOf {
     val rp0 = right.queryExecution.analyzed
     val rp =
       if (rp0.outputSet.intersect(lp.outputSet).isEmpty) rp0
-      else right.select(right.columns.map(c =>
+      else right.select(right.columns.toSeq.map(c =>
         org.apache.spark.sql.functions.col(c).as(c)): _*)
         .queryExecution.analyzed
     val plan = AsOfJoinPlan(lp, rp,

@@ -549,6 +549,30 @@ class CurationSpec extends AnyFunSuite {
     }
   }
 
+  test("leakageSafeSplit and packSegments release what they materialize") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val docs = (0L until 40L).map(i => (i, s"doc $i", 100L + i))
+      .toDF("doc_id", "text", "n_chars")
+    val pairs = Seq((0L, 1L), (1L, 2L), (10L, 11L)).toDF("doc_a", "doc_b")
+    val weights = (0L until 200L).map(i => (i, (i * 7 % 23) + 1))
+      .toDF("doc_id", "n_tokens")
+    val before = sc.getPersistentRDDs.keySet
+    (1 to 3).foreach { _ =>
+      Curation.leakageSafeSplit(docs, pairs, trainPct = 50).collect()
+      Packing.packSegments(weights, "doc_id", "n_tokens", budget = 16).collect()
+    }
+    // a local checkpoint is weakly held and goes once its frame is
+    // collected; a cached frame nobody released stays for the session,
+    // where later queries over the same tables match it
+    eventually(timeout(30.seconds), interval(1.second)) {
+      System.gc()
+      val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+      assert(left.isEmpty, left.values.map(r => s"${r.id} ${r.name}").mkString("; "))
+    }
+  }
+
   test("hybridRrf: fused ranking equals manual RRF of the two legs; leg-null semantics") {
     val corpus = Seq(
       (1L, "join join join join join"),

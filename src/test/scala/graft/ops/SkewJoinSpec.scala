@@ -27,7 +27,7 @@ class SkewJoinSpec extends AnyFunSuite {
   test("the hot key actually spreads across salts") {
     val big = Seq.tabulate(4000)(i => (i.toLong, 7L)).toDF("row_id", "k")
     val perSalt = big.withColumn("__salt",
-        pmod(xxhash64(struct(big.columns.map(col): _*)), lit(8L)))
+        pmod(xxhash64(struct(big.columns.toSeq.map(col): _*)), lit(8L)))
       .groupBy("__salt").count().as[(Long, Long)].collect().toMap
     assert(perSalt.size == 8, s"expected 8 salt buckets, got $perSalt")
     // hash salting: no bucket should hold more than ~2x the fair share
@@ -37,10 +37,10 @@ class SkewJoinSpec extends AnyFunSuite {
   test("salt is deterministic across re-execution (no random())") {
     val big = Seq.tabulate(100)(i => (i.toLong, i % 5L)).toDF("row_id", "k")
     val salts1 = big.withColumn("s",
-        pmod(xxhash64(struct(big.columns.map(col): _*)), lit(8L)))
+        pmod(xxhash64(struct(big.columns.toSeq.map(col): _*)), lit(8L)))
       .select("row_id", "s").as[(Long, Long)].collect().sorted
     val salts2 = big.withColumn("s",
-        pmod(xxhash64(struct(big.columns.map(col): _*)), lit(8L)))
+        pmod(xxhash64(struct(big.columns.toSeq.map(col): _*)), lit(8L)))
       .select("row_id", "s").as[(Long, Long)].collect().sorted
     assert(salts1.sameElements(salts2))
   }

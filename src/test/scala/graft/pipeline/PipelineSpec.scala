@@ -390,6 +390,40 @@ class ResumeSpec extends AnyFunSuite {
     assert(Checkpointing.expireSnapshots(d2, keepLast = 2) == Nil)
   }
 
+  test("changesBetween and cdcBetween refuse the same bad ranges with the " +
+      "same message") {
+    import org.apache.spark.sql.functions.col
+    def frame(lo: Long, hi: Long) =
+      spark.range(lo, hi + 1)
+        .select(col("id").as("doc_ord"), col("id").as("doc_id"))
+    // seqs 1, 2 (expired below) | 3 full rebase | 4, 5 deltas
+    val d = java.nio.file.Files.createTempDirectory("graft-range").toString + "/t"
+    Checkpointing.commit(frame(1, 10), d, "a")
+    Checkpointing.commit(frame(11, 20), d, "b")
+    Checkpointing.upsert(frame(5, 15), d, "fix")
+    Checkpointing.commit(frame(21, 30), d, "c")
+    Checkpointing.commit(frame(31, 40), d, "e")
+    assert(Checkpointing.expireSnapshots(d, keepLast = 2) == Seq("a", "b"))
+    Seq(
+      ("empty range", 3, 3, "bad range"),
+      ("negative start", -1, 4, "bad range"),
+      ("end past the head", 4, 6, "bad range"),
+      ("expired seq inside", 0, 4, "has expired snapshots"),
+      ("crosses a full rebase", 2, 4, "crosses a full rebase")
+    ).foreach { case (what, from, to, want) =>
+      val msgs = Seq(
+        intercept[IllegalArgumentException](
+          Checkpointing.changesBetween(spark, d, from, to)),
+        intercept[IllegalArgumentException](
+          Checkpointing.cdcBetween(spark, d, from, to))).map(_.getMessage)
+      assert(msgs.distinct.size == 1, s"$what: $msgs")
+      assert(msgs.head.contains(want), s"$what: ${msgs.head}")
+    }
+    // the deltas above the rebase still read through both
+    assert(Checkpointing.changesBetween(spark, d, 3, 5).count() == 20)
+    assert(Checkpointing.cdcBetween(spark, d, 3, 5).count() == 20)
+  }
+
   test("tags: protect stacks from expiry/vacuum, block compact, loud edges") {
     import org.apache.spark.sql.functions.col
     def frame(lo: Long, hi: Long, mult: Long) =
@@ -818,18 +852,18 @@ class WapSpec extends AnyFunSuite {
     val snaps = Checkpointing.snapshots(dir)
     assert(snaps.map(_.spec) == Seq("doc_ord", "temp", "temp"))
     // predicate on temp: old-spec files kept conservatively, new2 pruned
-    val (kept, skipped) = Checkpointing.pruneInfoBy(dir, 3, "temp", 1051L, 1100L)
+    val (kept, skipped) = Checkpointing.pruneInfo(dir, 3, 1051L, 1100L, spec = "temp")
     val oldFiles = snaps.find(_.runId == "old").get.files.toSet
     val new2Files = snaps.find(_.runId == "new2").get.files.toSet
     assert(oldFiles.subsetOf(kept.toSet))
     assert(new2Files.subsetOf(skipped.toSet))
     // the pruned read returns exactly the naive filtered table
-    val got = Checkpointing.readRangeBy(spark, dir, 3, "temp", 1051L, 1100L)
+    val got = Checkpointing.readRange(spark, dir, 3, 1051L, 1100L, spec = "temp")
       .select("doc_ord").as[Long].collect().toSet
     assert(got == (51L to 100L).toSet)
     // predicate on doc_ord still prunes the doc_ord-spec files and keeps
     // the temp-spec files conservatively (symmetric direction)
-    val (k2, s2) = Checkpointing.pruneInfoBy(dir, 3, "doc_ord", 1L, 25L)
+    val (k2, s2) = Checkpointing.pruneInfo(dir, 3, 1L, 25L, spec = "doc_ord")
     assert(snaps.find(_.runId == "new1").get.files.toSet.subsetOf(k2.toSet))
     assert(s2.nonEmpty) // the second half of the old commit prunes
     // non-long spec column refused loudly
