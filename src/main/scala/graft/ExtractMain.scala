@@ -255,10 +255,8 @@ object ExtractMain {
       }
     // committed truth, not the raw dir: after an upsert/delete the raw
     // directory still holds pre-rebase files / un-applied tombstones
-    val snaps = graft.pipeline.Checkpointing.snapshots(statsDir)
-    val total = if (snaps.isEmpty) 0L else graft.pipeline.Checkpointing
-      .readAt(spark, statsDir, snaps.last.seq).count()
-    val nSnaps = snaps.size
+    val (nSnaps, head) = Checkpointing.readHead(spark, statsDir)
+    val total = head.fold(0L)(_.count())
     val secs = (System.nanoTime() - t0) / 1e9
     emit(("run" -> runId) ~ ("docs_committed" -> committed) ~
       ("total_committed" -> total) ~ ("snapshots" -> nSnaps) ~

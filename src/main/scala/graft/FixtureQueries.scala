@@ -27,6 +27,28 @@ object FixtureQueries {
       ExtractionPipeline.run(s, s.createDataset(FixtureCorpus.fixtureDocs))
     })
 
+  /** The committed-stats projection the lifecycle queries return
+    * (x01's columns). */
+  private def statCols(stats: DataFrame): DataFrame = stats.select(
+    col("doc_id"), col("page_size"), col("criterion_tables_count"),
+    col("merged_tables_count"), col("merged_rows_count"),
+    col("merged_table_start_page"), col("merged_table_end_page"),
+    col("publish_month"))
+
+  /** The two-run stats table at `dir`: docs 1..9 committed as `run1`,
+    * then the rest, found by `resumeFilter`, as `run2`. */
+  private def twoRunStats(s: SparkSession, dir: String): Unit = {
+    import s.implicits._
+    val docs = s.createDataset(FixtureCorpus.fixtureDocs)
+    val r1 = ExtractionPipeline.run(s,
+      docs.filter(d => SpanDoc.docOrd(d.doc_id) <= 9), persistIntermediate = false)
+    Checkpointing.commit(r1.stats.toDF(), dir, "run1")
+    val r2 = ExtractionPipeline.run(s,
+      Checkpointing.resumeFilter(s, docs, dir), persistIntermediate = false)
+    Checkpointing.commit(r2.stats.toDF(), dir, "run2")
+    ()
+  }
+
   /** The real extracted span sequence in long format (x05's frame). */
   private def fixtureSpans(s: SparkSession): DataFrame =
     result(s).outSpans.toDF().select(
@@ -123,11 +145,7 @@ object FixtureQueries {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "x01_fixture_stats" -> ((s, _) =>
-      result(s).stats.toDF().select(
-        col("doc_id"), col("page_size"), col("criterion_tables_count"),
-        col("merged_tables_count"), col("merged_rows_count"),
-        col("merged_table_start_page"), col("merged_table_end_page"),
-        col("publish_month"))),
+      result(s).stats.toDF().transform(statCols)),
     "x02_fixture_corpus" -> ((s, _) =>
       result(s).corpus.select(
         col("doc_ord"), col("row_idx"), col("Criterion"), col("FileName"),
@@ -503,11 +521,7 @@ object FixtureQueries {
         s"merge verb counts off: upd=$nU del=$nD ins=$nI")
       require(Checkpointing.snapshots(dir).size == 2,
         "three DML verbs must land as ONE snapshot")
-      Checkpointing.readAt(s, dir, 2).select(
-        col("doc_id"), col("page_size"), col("criterion_tables_count"),
-        col("merged_tables_count"), col("merged_rows_count"),
-        col("merged_table_start_page"), col("merged_table_end_page"),
-        col("publish_month"))
+      Checkpointing.readAt(s, dir, 2).transform(statCols)
     }),
     // STREAMING CDC APPLY — the x75 consumption loop as a Structured
     // Streaming sink, each micro-batch landing through merge's atomic
@@ -544,11 +558,7 @@ object FixtureQueries {
         s.createDataset(b0).select(col("op"), col("stat.*")), 0L)
       require(Checkpointing.snapshots(dir).size == 3,
         "replayed micro-batch must be skipped")
-      Checkpointing.readAt(s, dir, 3).select(
-        col("doc_id"), col("page_size"), col("criterion_tables_count"),
-        col("merged_tables_count"), col("merged_rows_count"),
-        col("merged_table_start_page"), col("merged_table_end_page"),
-        col("publish_month"))
+      Checkpointing.readAt(s, dir, 3).transform(statCols)
     }),
     // ROLLBACK (Iceberg rollback_to_snapshot) — the ACT step after x71's
     // detect step: the v2 "bad parser deploy" is undone by ONE metadata
@@ -589,16 +599,9 @@ object FixtureQueries {
     // pre-state), the re-add carries the rewritten month.
     "x73_cdc_read" -> ((s, _) => {
       import s.implicits._
-      val docs = s.createDataset(FixtureCorpus.fixtureDocs)
       val dir = graft.io.Scratch.dir("graft-x73")
         .toString + "/stats"
-      val r1 = ExtractionPipeline.run(s,
-        docs.filter(d => SpanDoc.docOrd(d.doc_id) <= 9),
-        persistIntermediate = false)
-      Checkpointing.commit(r1.stats.toDF(), dir, "run1")
-      val r2 = ExtractionPipeline.run(s,
-        Checkpointing.resumeFilter(s, docs, dir), persistIntermediate = false)
-      Checkpointing.commit(r2.stats.toDF(), dir, "run2")
+      twoRunStats(s, dir)
       Checkpointing.deleteWhere(
         Seq("2.f02_crosspage.pdf", "12.f12_nomonth.pdf").toDF("doc_id"),
         dir, "takedown")
@@ -620,16 +623,9 @@ object FixtureQueries {
     // rewritten month) — the takedown-propagation loop, closed.
     "x75_cdc_mirror" -> ((s, _) => {
       import s.implicits._
-      val docs = s.createDataset(FixtureCorpus.fixtureDocs)
       val base = graft.io.Scratch.dir("graft-x75").toString
       val up = s"$base/up"; val mir = s"$base/mirror"
-      val r1 = ExtractionPipeline.run(s,
-        docs.filter(d => SpanDoc.docOrd(d.doc_id) <= 9),
-        persistIntermediate = false)
-      Checkpointing.commit(r1.stats.toDF(), up, "run1")
-      val r2 = ExtractionPipeline.run(s,
-        Checkpointing.resumeFilter(s, docs, up), persistIntermediate = false)
-      Checkpointing.commit(r2.stats.toDF(), up, "run2")
+      twoRunStats(s, up)
       Checkpointing.deleteWhere(
         Seq("2.f02_crosspage.pdf", "12.f12_nomonth.pdf").toDF("doc_id"),
         up, "takedown")
@@ -650,11 +646,7 @@ object FixtureQueries {
         ()
       }
       Checkpointing.readAt(s, mir,
-        Checkpointing.snapshots(mir).last.seq).select(
-        col("doc_id"), col("page_size"), col("criterion_tables_count"),
-        col("merged_tables_count"), col("merged_rows_count"),
-        col("merged_table_start_page"), col("merged_table_end_page"),
-        col("publish_month"))
+        Checkpointing.snapshots(mir).last.seq).transform(statCols)
     }),
     // DESCRIBE HISTORY: the snapshot log as a DataFrame — the audit
     // surface consulted before time travel / rollback / incremental
@@ -706,20 +698,9 @@ object FixtureQueries {
     // the directory now holds all of them (the Iceberg-shaped read side of
     // the north rule's lineage manifests)
     "x39_time_travel" -> ((s, _) => {
-      import s.implicits._
-      val docs = s.createDataset(FixtureCorpus.fixtureDocs)
       val dir = graft.io.Scratch.dir("graft-x39").toString + "/stats"
-      val r1 = ExtractionPipeline.run(s,
-        docs.filter(d => SpanDoc.docOrd(d.doc_id) <= 9), persistIntermediate = false)
-      Checkpointing.commit(r1.stats.toDF(), dir, "run1")
-      val pending = Checkpointing.resumeFilter(s, docs, dir)
-      val r2 = ExtractionPipeline.run(s, pending, persistIntermediate = false)
-      Checkpointing.commit(r2.stats.toDF(), dir, "run2")
-      Checkpointing.readAt(s, dir, 1).select(
-        col("doc_id"), col("page_size"), col("criterion_tables_count"),
-        col("merged_tables_count"), col("merged_rows_count"),
-        col("merged_table_start_page"), col("merged_table_end_page"),
-        col("publish_month"))
+      twoRunStats(s, dir)
+      Checkpointing.readAt(s, dir, 1).transform(statCols)
     }),
     // the streaming ingest wired to the committed sink: one snapshot per
     // micro-batch via foreachBatch + Checkpointing.commit, then time
@@ -730,30 +711,15 @@ object FixtureQueries {
       graft.streaming.StreamExtract.replayCommittedStats(s, FixtureCorpus.fixtureDocs, dir)
       require(Checkpointing.snapshots(dir).map(_.seq) == Seq(1, 2),
         "expected one snapshot per micro-batch")
-      Checkpointing.readAt(s, dir, 1).select(
-        col("doc_id"), col("page_size"), col("criterion_tables_count"),
-        col("merged_tables_count"), col("merged_rows_count"),
-        col("merged_table_start_page"), col("merged_table_end_page"),
-        col("publish_month"))
+      Checkpointing.readAt(s, dir, 1).transform(statCols)
     }),
     // Iceberg-style INCREMENTAL read: the delta of snapshot 2 over
     // snapshot 1 = exactly run2's documents (a downstream consumer
     // processes each commit without rescanning the table)
     "x42_incremental_read" -> ((s, _) => {
-      import s.implicits._
-      val docs = s.createDataset(FixtureCorpus.fixtureDocs)
       val dir = graft.io.Scratch.dir("graft-x42").toString + "/stats"
-      val r1 = ExtractionPipeline.run(s,
-        docs.filter(d => SpanDoc.docOrd(d.doc_id) <= 9), persistIntermediate = false)
-      Checkpointing.commit(r1.stats.toDF(), dir, "run1")
-      val r2 = ExtractionPipeline.run(s,
-        Checkpointing.resumeFilter(s, docs, dir), persistIntermediate = false)
-      Checkpointing.commit(r2.stats.toDF(), dir, "run2")
-      Checkpointing.changesBetween(s, dir, 1, 2).select(
-        col("doc_id"), col("page_size"), col("criterion_tables_count"),
-        col("merged_tables_count"), col("merged_rows_count"),
-        col("merged_table_start_page"), col("merged_table_end_page"),
-        col("publish_month"))
+      twoRunStats(s, dir)
+      Checkpointing.changesBetween(s, dir, 1, 2).transform(statCols)
     }),
     // copy-on-write UPSERT — the "re-extract after a parser fix" path:
     // docs 1..3 get rewritten rows (publish_month uppercased as the
@@ -769,11 +735,7 @@ object FixtureQueries {
         .filter(expr("CAST(split_part(doc_id, '.', 1) AS INT) <= 3"))
         .withColumn("publish_month", upper(col("publish_month")))
       Checkpointing.upsert(fixed, dir, "refix")
-      Checkpointing.readAt(s, dir, 2).select(
-        col("doc_id"), col("page_size"), col("criterion_tables_count"),
-        col("merged_tables_count"), col("merged_rows_count"),
-        col("merged_table_start_page"), col("merged_table_end_page"),
-        col("publish_month"))
+      Checkpointing.readAt(s, dir, 2).transform(statCols)
     }),
     // merge-on-read delete — the takedown path: two docs deleted WITHOUT
     // rewriting any data file (scan-time broadcast anti-join), then doc 2
@@ -793,11 +755,7 @@ object FixtureQueries {
         .filter(col("doc_id") === "2.f02_crosspage.pdf")
         .withColumn("publish_month", upper(col("publish_month")))
       Checkpointing.commit(redo, dir, "re2")
-      Checkpointing.readAt(s, dir, 3).select(
-        col("doc_id"), col("page_size"), col("criterion_tables_count"),
-        col("merged_tables_count"), col("merged_rows_count"),
-        col("merged_table_start_page"), col("merged_table_end_page"),
-        col("publish_month"))
+      Checkpointing.readAt(s, dir, 3).transform(statCols)
     }),
     // bounded backfill: the landed fixture corpus (8 parquet files)
     // consumed by a file-source stream at maxFilesPerTrigger=3 under
@@ -815,11 +773,7 @@ object FixtureQueries {
         s, s"$base/landing", s"$base/ckpt", dir, maxFilesPerTrigger = 3)
       require(batches >= 3,
         s"rate limit ignored: 8 files at 3/trigger gave $batches batches")
-      Checkpointing.readAt(s, dir, batches).select(
-        col("doc_id"), col("page_size"), col("criterion_tables_count"),
-        col("merged_tables_count"), col("merged_rows_count"),
-        col("merged_table_start_page"), col("merged_table_end_page"),
-        col("publish_month"))
+      Checkpointing.readAt(s, dir, batches).transform(statCols)
     }),
     // Iceberg-style data skipping over the committed table: three commits
     // with disjoint doc_ord ranges, then a range scan of ords 6..9 that
@@ -848,11 +802,7 @@ object FixtureQueries {
         s"stats pruning regressed: kept=$kept skipped=$skipped")
       skipped.foreach(n => java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$dir/$n"), "poison".getBytes("UTF-8")))
-      Checkpointing.readRange(s, dir, 3, 6, 9).select(
-        col("doc_id"), col("page_size"), col("criterion_tables_count"),
-        col("merged_tables_count"), col("merged_rows_count"),
-        col("merged_table_start_page"), col("merged_table_end_page"),
-        col("publish_month"))
+      Checkpointing.readRange(s, dir, 3, 6, 9).transform(statCols)
     }),
     // write-audit-publish — the risky-backfill flow: docs 10..16 are
     // STAGED (data files on disk, invisible to every reader — pinned),
@@ -885,11 +835,7 @@ object FixtureQueries {
       require(dupes == 3, s"audit should catch 3 duplicate ids, got $dupes")
       Checkpointing.abandon(dir, "redo")
       require(Checkpointing.vacuum(dir).isEmpty, "abandon left debris")
-      Checkpointing.readAt(s, dir, 2).select(
-        col("doc_id"), col("page_size"), col("criterion_tables_count"),
-        col("merged_tables_count"), col("merged_rows_count"),
-        col("merged_table_start_page"), col("merged_table_end_page"),
-        col("publish_month"))
+      Checkpointing.readAt(s, dir, 2).transform(statCols)
     }),
     // C12: per-file status counts (main_parse_pdfs.py:520-532)
     "x12_status_counts" -> ((s, _) =>

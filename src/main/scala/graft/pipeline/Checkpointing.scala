@@ -144,6 +144,13 @@ object Checkpointing {
   def readAt(spark: SparkSession, dir: String, version: Int): DataFrame =
     readLogAt(spark, dir, committedLog(dir), version)
 
+  /** The snapshot count and the table at the log's head (None before the
+    * first commit), from one parse of the log. */
+  def readHead(spark: SparkSession, dir: String): (Int, Option[DataFrame]) = {
+    val snaps = snapshots(dir)
+    (snaps.size, snaps.lastOption.map(s => readLogAt(spark, dir, snaps, s.seq)))
+  }
+
   /** [[readAt]] over a log the caller has already parsed. */
   private def readLogAt(spark: SparkSession, dir: String,
       snaps: Seq[Snapshot], version: Int): DataFrame =

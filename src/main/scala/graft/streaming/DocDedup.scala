@@ -32,7 +32,7 @@ object DocDedup {
     * would readStream from the ingest source. */
   def replayDupGroups(spark: SparkSession, docs: Dataset[Doc]): DataFrame = {
     import spark.implicits._
-    Events.replayTwoBatches(spark, docs.collect().toSeq, "graft_x21_",
+    Replay.replayToMemory(spark, Replay.slices(docs.collect().toSeq, 2),
       "complete")(in => graft.ops.Dedup.exactGroups(in.toDF()))
       .select("fp", "n_docs", "keeper_doc_id")
   }

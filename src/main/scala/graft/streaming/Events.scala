@@ -28,46 +28,6 @@ object Events {
   final case class SessState(start: Long, last: Long, n: Long, errors: Long,
       cents: Long)
 
-
-  /** Replay harnesses pin `spark.sql.shuffle.partitions` low for the
-    * duration of the streaming query: stateful operators open state stores
-    * PER shuffle partition (a two-sided join opens four each), and state
-    * partitioning is fixed at query start — at the session's 32 partitions
-    * a finite replay spends its time ticking ~empty stores through every
-    * micro-batch (measured 38s -> 12s for the x24 join at sf0.1). */
-  private[streaming] def withReplayPartitions[A](spark: SparkSession)(body: => A): A =
-    graft.ScopedConf(spark, "spark.sql.shuffle.partitions" -> "4")(body)
-
-  /** The shared two-batch MemoryStream replay harness: feed `rows` split
-    * mid-corpus (so the result must reflect cross-batch behavior — state
-    * merging for stateful pipelines, consistent appends for stateless
-    * ones), run `pipeline` as a streaming query in `outputMode`, return
-    * the memory-sink table. One implementation for every streaming shadow
-    * (DocDedup, StreamCuration, StreamExtract) so the replay protocol
-    * cannot drift between them. */
-  private[streaming] def replayTwoBatches[T](spark: SparkSession, rows: Seq[T],
-      namePrefix: String, outputMode: String)(
-      pipeline: org.apache.spark.sql.Dataset[T] => DataFrame)(
-      implicit enc: org.apache.spark.sql.Encoder[T]): DataFrame = {
-    require(rows.nonEmpty, s"$namePrefix replay needs a non-empty batch")
-    withReplayPartitions(spark) {
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T](spark)
-      val qname = namePrefix + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = pipeline(input.toDS())
-        .writeStream.format("memory").queryName(qname).outputMode(outputMode)
-        .start()
-      try {
-        val (first, second) = rows.splitAt(rows.length / 2)
-        input.addData(first)
-        q.processAllAvailable()
-        input.addData(second)
-        q.processAllAvailable()
-      } finally q.stop()
-      spark.table(qname)
-    }
-  }
-
   /** Batch gap-based sessionization: a new session starts when the gap from
     * the previous event of the same user exceeds `gapMinutes`. Output: one
     * row per session with stats. Monetary/value sums are in integer cents
@@ -126,27 +86,15 @@ object Events {
   def replayHourly(spark: SparkSession, events: Dataset[Event]): DataFrame = {
     import spark.implicits._
     val rows = events.collect().toSeq
-    require(rows.nonEmpty, "replayHourly needs a non-empty batch")
-    val maxTs = rows.iterator.map(_.ts.getTime).max
+    val maxTs = rows.iterator.map(_.ts.getTime).maxOption.getOrElse(0L)
     def sentinel(i: Int) = Event(-i.toLong,
       new Timestamp(maxTs + (9 + i) * 3600 * 1000L), -1L, "__sentinel", 0.0, "")
-    withReplayPartitions(spark) {
-      val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event](spark)
-      val qname = "graft_x13_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = streamingHourlyCounts(input.toDF())
-        .writeStream.format("memory").queryName(qname).outputMode("append").start()
-      try {
-        input.addData(rows)
-        q.processAllAvailable()
-        input.addData(Seq(sentinel(1))) // advance the watermark past all windows
-        q.processAllAvailable()
-        input.addData(Seq(sentinel(2))) // run one batch WITH the advanced watermark
-        q.processAllAvailable()
-      } finally q.stop()
-      spark.table(qname)
-        .filter(col("event_type") =!= "__sentinel")
-        .select(col("hour"), col("event_type"), col("n"), col("value_cents"))
-    }
+    // sentinel 1 advances the watermark past all windows; sentinel 2 runs
+    // one batch WITH the advanced watermark
+    Replay.replayToMemory(spark, Seq(rows, Seq(sentinel(1)), Seq(sentinel(2))),
+      "append")(in => streamingHourlyCounts(in.toDF()))
+      .filter(col("event_type") =!= "__sentinel")
+      .select(col("hour"), col("event_type"), col("n"), col("value_cents"))
   }
 
   /** Drive [[sessionizeStreaming]] over a FINITE batch of events: two
@@ -160,29 +108,17 @@ object Events {
       gapMinutes: Int = 30): DataFrame = {
     import spark.implicits._
     val rows = events.collect().toSeq
-    require(rows.nonEmpty, "replaySessions needs a non-empty batch")
-    val maxTs = rows.iterator.map(_.ts.getTime).max
+    val maxTs = rows.iterator.map(_.ts.getTime).maxOption.getOrElse(0L)
     val gapMs = gapMinutes * 60 * 1000L
     def sentinel(i: Int) = Event(-i.toLong,
       new Timestamp(maxTs + (10 + i) * gapMs), -1L, "__sentinel", 0.0, "")
-    withReplayPartitions(spark) {
-      val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event](spark)
-      val qname = "graft_x15_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = sessionizeStreaming(input.toDS(), gapMinutes)
-        .writeStream.format("memory").queryName(qname).outputMode("append").start()
-      try {
-        input.addData(rows)
-        q.processAllAvailable()
-        input.addData(Seq(sentinel(1))) // advance the watermark past all deadlines
-        q.processAllAvailable()
-        input.addData(Seq(sentinel(2))) // run a batch that fires the timeouts
-        q.processAllAvailable()
-      } finally q.stop()
-      spark.table(qname)
-        .filter(col("user_id") =!= -1L)
-        .select(col("user_id"), col("session_start"), col("n_events"),
-          col("n_errors"), col("value_cents"))
-    }
+    // sentinel 1 advances the watermark past all deadlines; sentinel 2 runs
+    // a batch that fires the timeouts
+    Replay.replayToMemory(spark, Seq(rows, Seq(sentinel(1)), Seq(sentinel(2))),
+      "append")(sessionizeStreaming(_, gapMinutes).toDF())
+      .filter(col("user_id") =!= -1L)
+      .select(col("user_id"), col("session_start"), col("n_events"),
+        col("n_errors"), col("value_cents"))
   }
 
   /** Stream-stream INTERVAL join: each purchase joined to the same user's
@@ -214,25 +150,15 @@ object Events {
 
   /** Drive [[streamAttribution]] over a FINITE batch of events. Inner
     * stream-stream joins emit matches as soon as both rows have arrived,
-    * so a full feed + processAllAvailable yields every pair — no sentinel
-    * machinery. */
+    * so one micro-batch yields every pair — no sentinel machinery. Clicks
+    * and purchases are both filtered from ONE source, so the two sides
+    * always arrive in the same micro-batch. */
   def replayAttribution(spark: SparkSession, events: Dataset[Event]): DataFrame = {
     import spark.implicits._
-    val rows = events.collect().toSeq
-    require(rows.nonEmpty, "replayAttribution needs a non-empty batch")
-    withReplayPartitions(spark) {
-      val clicks = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event](spark)
-      val purchases = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event](spark)
-      val qname = "graft_x24_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = streamAttribution(clicks.toDS(), purchases.toDS())
-        .writeStream.format("memory").queryName(qname).outputMode("append").start()
-      try {
-        clicks.addData(rows.filter(_.event_type == "click"))
-        purchases.addData(rows.filter(_.event_type == "purchase"))
-        q.processAllAvailable()
-      } finally q.stop()
-      spark.table(qname).select("purchase_id", "click_id")
-    }
+    Replay.replayToMemory(spark, Seq(events.collect().toSeq), "append") { in =>
+      streamAttribution(in.filter(col("event_type") === "click"),
+        in.filter(col("event_type") === "purchase"))
+    }.select("purchase_id", "click_id")
   }
 
   /** Streaming sessionization via flatMapGroupsWithState: event-time gap

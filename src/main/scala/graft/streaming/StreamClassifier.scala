@@ -33,36 +33,19 @@ object StreamClassifier {
   def replayScore(spark: SparkSession, corpus: DataFrame, docs: Seq[Doc],
       workDir: String, nBatches: Int = 3,
       threshBp: Long = Classifier.DefaultSeedThreshBp): DataFrame = {
-    require(nBatches >= 1, s"need at least one batch, got $nBatches")
-    require(docs.nonEmpty, "empty replay corpus — nothing to stream")
     import spark.implicits._
+    val batches = Replay.slices(docs.sortBy(_.doc_id), nBatches)
     // train once, persist: the artifact a production ingest reads
     Classifier.trainTokenLr(Classifier.seedLabeled(corpus, threshBp))
       .write.mode("overwrite").parquet(s"$workDir/model")
     val model = spark.read.parquet(s"$workDir/model")
-    Events.withReplayPartitions(spark) {
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Doc](spark)
-      val q = input.toDS().toDF()
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Classifier.scoreTokenLr(
-            Classifier.seedLabeled(batch, threshBp), model)
-            .write.mode("overwrite").parquet(s"$workDir/out/v$batchId")
-          ()
-        }
-        .start()
-      try {
-        val sorted = docs.sortBy(_.doc_id)
-        val per = math.max(1, (sorted.length + nBatches - 1) / nBatches)
-        sorted.grouped(per).foreach { batch =>
-          input.addData(batch)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    }
-    val outDirs = Option(new java.io.File(s"$workDir/out").list()).toSeq.flatten
-      .collect { case n if n.startsWith("v") => s"$workDir/out/$n" }
-    spark.read.parquet(outDirs: _*)
+    val out = Replay.Versioned(s"$workDir/out")
+    Replay.replay(spark, batches)(_.toDF().writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        out.write(Classifier.scoreTokenLr(
+          Classifier.seedLabeled(batch, threshBp), model), batchId)
+      }
+      .start())
+    out.union(spark).get // the replay refuses empty input: >= 1 version
   }
 }

@@ -24,7 +24,7 @@ object StreamCuration {
   def replayCuratedDupGroups(spark: SparkSession,
       docs: Dataset[DocDedup.Doc]): DataFrame = {
     import spark.implicits._
-    Events.replayTwoBatches(spark, docs.collect().toSeq, "graft_x32_",
+    Replay.replayToMemory(spark, Replay.slices(docs.collect().toSeq, 2),
       "complete") { in =>
         Dedup.exactGroups(Curation.gateKeep(in.toDF())
           .filter(col("curation_keep")).drop("curation_keep"))
@@ -52,8 +52,8 @@ object StreamCuration {
       budgets: Map[String, Long], defaultBudget: Long): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    Events.replayTwoBatches(spark,
-      docs.sortBy(_.doc_id), "graft_x57_", "append") { in =>
+    Replay.replayToMemory(spark, Replay.slices(docs.sortBy(_.doc_id), 2),
+      "append") { in =>
         in.groupByKey(_.source)
           .flatMapGroupsWithState(OutputMode.Append,
             GroupStateTimeout.NoTimeout) {

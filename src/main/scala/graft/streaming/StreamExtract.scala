@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.layout.{CandidateTable, DocRow}
-import graft.pipeline.Extract
+import graft.pipeline.{Checkpointing, Extract, ExtractionPipeline}
 
 /** The flagship extraction as a Structured Streaming job — the shape the
   * reference's DB-state-driven incremental loop (step_2's per-paper
@@ -39,7 +39,7 @@ object StreamExtract {
     * from different micro-batches land in one consistent sink. */
   def replayCandidates(spark: SparkSession, docs: Seq[DocRow]): DataFrame = {
     import spark.implicits._
-    Events.replayTwoBatches(spark, docs, "graft_x28_", "append")(in =>
+    Replay.replayToMemory(spark, Replay.slices(docs, 2), "append")(in =>
       in.flatMap(d => Extract.extractDoc(d).candidates.map(candidateRow))
         .toDF(CandidateCols: _*))
   }
@@ -62,7 +62,7 @@ object StreamExtract {
   def backfillCommittedStats(spark: SparkSession, landing: String,
       checkpoint: String, dir: String, maxFilesPerTrigger: Int): Int = {
     import spark.implicits._
-    Events.withReplayPartitions(spark) {
+    Replay.withReplayPartitions(spark) {
       val q = spark.readStream
         .schema(implicitly[org.apache.spark.sql.Encoder[DocRow]].schema)
         .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -71,25 +71,28 @@ object StreamExtract {
         .writeStream
         .option("checkpointLocation", checkpoint)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[DocRow], id: Long) =>
-          // foreachBatch is at-least-once: a crash between our commit()
-          // and the engine's own commit log replays this id on restart —
-          // the snapshot log (keyed by batch id) makes the replay a no-op
-          // instead of a duplicated micro-batch
-          val runId = f"backfill-$id%03d"
-          if (!graft.pipeline.Checkpointing.snapshots(dir)
-              .exists(_.runId == runId)) {
-            val r = graft.pipeline.ExtractionPipeline
-              .run(spark, batch, persistIntermediate = false)
-            graft.pipeline.Checkpointing.commit(r.stats.toDF(), dir, runId)
-          }
-          ()
+        .foreachBatch { (batch: Dataset[DocRow], id: Long) =>
+          commitOnce(spark, dir, f"backfill-$id%03d")(batch)
         }
         .start()
       try q.awaitTermination() finally q.stop()
     }
-    graft.pipeline.Checkpointing.snapshots(dir).size
+    Checkpointing.snapshots(dir).size
   }
+
+  /** One micro-batch of the committed sink: run the batch pipeline and
+    * commit its stats as `runId`, a pure function of the batch id.
+    * foreachBatch is at-least-once — a crash between this commit and the
+    * engine's own commit log replays the batch id on restart — so a runId
+    * the snapshot log already holds is skipped instead of committed twice
+    * (the per-batch-id idempotent write of Delta Lake's streaming sink). */
+  private def commitOnce(spark: SparkSession, dir: String, runId: String)(
+      batch: Dataset[DocRow]): Unit =
+    if (!Checkpointing.snapshots(dir).exists(_.runId == runId)) {
+      val r = ExtractionPipeline.run(spark, batch, persistIntermediate = false)
+      Checkpointing.commit(r.stats.toDF(), dir, runId)
+      ()
+    }
 
   /** The streaming ingest wired to the RESUMABLE COMMITTED sink: each
     * micro-batch runs the full batch pipeline via foreachBatch and lands
@@ -98,33 +101,15 @@ object StreamExtract {
     * — one snapshot per micro-batch, `readAt(v)` time travel included.
     * This is the production bridge from a continuous source to an
     * Iceberg-shaped table (the engine-side analog of a streaming Iceberg
-    * sink's per-epoch commits). Two-batch finite replay; returns the
-    * committed stats directory. */
+    * sink's per-epoch commits). Two-batch finite replay into the table at
+    * `dir`. */
   def replayCommittedStats(spark: SparkSession, docs: Seq[DocRow],
       dir: String): Unit = {
     import spark.implicits._
-    Events.withReplayPartitions(spark) {
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[DocRow](spark)
-      val q = input.toDS().writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[DocRow], id: Long) =>
-          // idempotent per batch id (foreachBatch is at-least-once)
-          if (!graft.pipeline.Checkpointing.snapshots(dir)
-              .exists(_.runId == s"batch-$id")) {
-            val r = graft.pipeline.ExtractionPipeline
-              .run(spark, batch, persistIntermediate = false)
-            graft.pipeline.Checkpointing.commit(r.stats.toDF(), dir, s"batch-$id")
-          }
-          ()
-        }
-        .start()
-      try {
-        val (first, second) = docs.splitAt(docs.length / 2)
-        input.addData(first)
-        q.processAllAvailable()
-        input.addData(second)
-        q.processAllAvailable()
-      } finally q.stop()
-    }
+    Replay.replay(spark, Replay.slices(docs, 2))(_.writeStream
+      .foreachBatch { (batch: Dataset[DocRow], id: Long) =>
+        commitOnce(spark, dir, s"batch-$id")(batch)
+      }
+      .start())
   }
 }

@@ -62,14 +62,14 @@ object StreamHeavyHitters {
     require(sketchK + 1 >= thresholdDen,
       s"sketch too small for threshold: need k+1 >= $thresholdDen")
     import spark.implicits._
-    val candidates = Events.replayTwoBatches(spark, docs, "graft_x56_", "append") {
-      in =>
-        in.flatMap(d => tokensOf(d.text).iterator
-            .map(t => Tok(math.floorMod(t.hashCode, shards), t)))
-          .groupByKey(_.shard)
-          .flatMapGroupsWithState(OutputMode.Append,
-            GroupStateTimeout.NoTimeout)(updateSketch(sketchK))
-          .toDF("term")
+    val candidates = Replay.replayToMemory(spark, Replay.slices(docs, 2),
+      "append") { in =>
+      in.flatMap(d => tokensOf(d.text).iterator
+          .map(t => Tok(math.floorMod(t.hashCode, shards), t)))
+        .groupByKey(_.shard)
+        .flatMapGroupsWithState(OutputMode.Append,
+          GroupStateTimeout.NoTimeout)(updateSketch(sketchK))
+        .toDF("term")
     }.distinct().as[String].collect().toSet
     // exact recount over the landed corpus: candidate filter prunes
     // map-side before the (<= |candidates|-group) shuffle, like pass 2 of

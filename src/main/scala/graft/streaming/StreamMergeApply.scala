@@ -123,22 +123,12 @@ object StreamMergeApply {
   def replayStatChanges(spark: SparkSession, dir: String,
       batches: Seq[Seq[StatChange]]): Seq[String] = {
     import spark.implicits._
-    require(batches.nonEmpty && batches.forall(_.nonEmpty),
-      "replay needs non-empty change batches")
     val before = Checkpointing.snapshots(dir).size
-    Events.withReplayPartitions(spark) {
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StatChange](spark)
-      val q = input.toDS()
-        .select(col("op"), col("stat.*"))
-        .writeStream
-        .foreachBatch { (b: DataFrame, id: Long) => applyBatch(dir)(b, id) }
-        .start()
-      try batches.foreach { b =>
-        input.addData(b)
-        q.processAllAvailable()
-      } finally q.stop()
-    }
+    Replay.replay(spark, batches)(_
+      .select(col("op"), col("stat.*"))
+      .writeStream
+      .foreachBatch { (b: DataFrame, id: Long) => applyBatch(dir)(b, id) }
+      .start())
     Checkpointing.snapshots(dir).drop(before).map(_.runId)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.storage.StorageLevel
 import graft.ops.Dedup
@@ -81,6 +81,25 @@ object StreamNearDup {
     amongNew ++ vsSeen ++ overflowEdges
   }
 
+  /** The candidate-pair stream of arriving docs: each doc's banded
+    * bucket ids, then [[emitPairs]] per (band, bucket). */
+  private def candidatePairs(in: Dataset[Doc], nHashes: Int, bands: Int,
+      seed: Long, maxBucketDocs: Int): DataFrame = {
+    import in.sparkSession.implicits._
+    val params = Dedup.hashParams(nHashes, seed)
+    val rowsPerBand = nHashes / bands
+    in
+      .flatMap { d =>
+        Dedup.minhashBuckets(d.text, 3, params, bands, rowsPerBand)
+          .iterator.zipWithIndex
+          .map { case (b, band) => BucketRow(band, b, d.doc_id) }
+      }
+      .groupByKey(r => (r.band, r.bucket))
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.NoTimeout)(emitPairs(maxBucketDocs))
+      .toDF()
+  }
+
   /** Drive the stateful near-dup over a FINITE corpus replayed in two
     * micro-batches and return the verified pairs. The collect is inherent
     * to the replay harness — production would readStream from the ingest
@@ -90,20 +109,8 @@ object StreamNearDup {
       seed: Long = 42L,
       maxBucketDocs: Int = DefaultMaxBucketDocs): DataFrame = {
     import spark.implicits._
-    val params = Dedup.hashParams(nHashes, seed)
-    val rowsPerBand = nHashes / bands
-    val cands = Events.replayTwoBatches(spark, docs, "graft_x51_", "append") {
-      in =>
-        in.flatMap { d =>
-          Dedup.minhashBuckets(d.text, 3, params, bands, rowsPerBand)
-            .iterator.zipWithIndex
-            .map { case (b, band) => BucketRow(band, b, d.doc_id) }
-        }
-        .groupByKey(r => (r.band, r.bucket))
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout)(emitPairs(maxBucketDocs))
-        .toDF()
-    }
+    val cands = Replay.replayToMemory(spark, Replay.slices(docs, 2), "append")(
+      candidatePairs(_, nHashes, bands, seed, maxBucketDocs))
     Dedup.verifyPairs(cands.distinct(),
       Dedup.touchedDocs(cands, spark.createDataset(docs).toDF()), minJaccardBp)
   }
@@ -136,58 +143,27 @@ object StreamNearDup {
       seed: Long = 42L,
       maxBucketDocs: Int = DefaultMaxBucketDocs,
       nBatches: Int = 2): DataFrame = {
-    require(nBatches >= 1, s"need at least one batch, got $nBatches")
     import spark.implicits._
-    val params = Dedup.hashParams(nHashes, seed)
-    val rowsPerBand = nHashes / bands
+    // nBatches even slices, each its own micro-batch -> its own fold and
+    // manifest version (every pair still surfaces exactly once, in its
+    // later doc's batch)
+    val batches = Replay.slices(docs, nBatches)
     val corpus = spark.createDataset(docs).toDF()
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(manifestDir))
-    def versions: Seq[Long] = {
-      val d = new java.io.File(manifestDir)
-      Option(d.list()).toSeq.flatten.collect {
-        case n if n.startsWith("v") => n.drop(1).toLong
-      }.sorted
-    }
-    def current: DataFrame = versions.lastOption match {
-      case Some(v) => spark.read.parquet(s"$manifestDir/v$v")
-      case None => spark.emptyDataset[(Long, Long)].toDF("id", "component")
-    }
-    Events.withReplayPartitions(spark) {
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Doc](spark)
-      val q = input.toDS()
-        .flatMap { d =>
-          Dedup.minhashBuckets(d.text, 3, params, bands, rowsPerBand)
-            .iterator.zipWithIndex
-            .map { case (b, band) => BucketRow(band, b, d.doc_id) }
-        }
-        .groupByKey(r => (r.band, r.bucket))
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout)(emitPairs(maxBucketDocs))
-        .toDF()
-        .writeStream
+    val manifest = Replay.Versioned(manifestDir)
+    def current: DataFrame = manifest.latest(spark)
+      .getOrElse(spark.emptyDataset[(Long, Long)].toDF("id", "component"))
+    Replay.replay(spark, batches)(
+      candidatePairs(_, nHashes, bands, seed, maxBucketDocs).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val cands = batch.distinct().persist(StorageLevel.MEMORY_AND_DISK)
           try {
-            val pairs = Dedup.verifyPairs(cands, Dedup.touchedDocs(cands, corpus),
-              minJaccardBp)
-            graft.ops.Components.incrementalComponents(current, pairs, "doc_a", "doc_b") {
-              _.write.mode("overwrite").parquet(s"$manifestDir/v$batchId")
-            }
+            val pairs = Dedup.verifyPairs(cands,
+              Dedup.touchedDocs(cands, corpus), minJaccardBp)
+            graft.ops.Components.incrementalComponents(current, pairs,
+              "doc_a", "doc_b")(manifest.write(_, batchId))
           } finally cands.unpersist()
         }
-        .start()
-      try {
-        // nBatches even slices, each its own micro-batch -> its own fold
-        // and manifest version (every pair still surfaces exactly once,
-        // in its later doc's batch)
-        val per = math.max(1, (docs.length + nBatches - 1) / nBatches)
-        docs.grouped(per).foreach { batch =>
-          input.addData(batch)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    }
+        .start())
     current
   }
 }

@@ -28,49 +28,22 @@ object StreamSentenceDedup {
 
   def replaySentenceDedup(spark: SparkSession, docs: Seq[Doc],
       workDir: String, unitTokens: Int = 12, nBatches: Int = 3): DataFrame = {
-    require(nBatches >= 1, s"need at least one batch, got $nBatches")
-    require(docs.nonEmpty, "empty replay corpus — nothing to stream")
     import spark.implicits._
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"$workDir/index"))
-    def indexVersions: Seq[Long] = {
-      val d = new java.io.File(s"$workDir/index")
-      Option(d.list()).toSeq.flatten.collect {
-        case n if n.startsWith("v") => n.drop(1).toLong
-      }.sorted
-    }
-    def currentIndex: DataFrame = {
-      val vs = indexVersions
-      if (vs.isEmpty) spark.emptyDataset[Long].toDF("h")
-      else spark.read.parquet(vs.map(v => s"$workDir/index/v$v"): _*)
-        .distinct()
-    }
-    Events.withReplayPartitions(spark) {
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Doc](spark)
-      val q = input.toDS().toDF()
-        .writeStream
+    val out = Replay.Versioned(s"$workDir/out")
+    val index = Replay.Versioned(s"$workDir/index")
+    Replay.replay(spark, Replay.slices(docs.sortBy(_.doc_id), nBatches))(
+      _.toDF().writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val b = batch.persist()
-          Dedup.incrementalSentenceDedupIndexed(currentIndex, b, unitTokens)
-            .write.mode("overwrite").parquet(s"$workDir/out/v$batchId")
-          Dedup.sentenceUnitIndex(b, unitTokens)
-            .write.mode("overwrite").parquet(s"$workDir/index/v$batchId")
+          val current = index.union(spark).fold(
+            spark.emptyDataset[Long].toDF("h"))(_.distinct())
+          out.write(
+            Dedup.incrementalSentenceDedupIndexed(current, b, unitTokens), batchId)
+          index.write(Dedup.sentenceUnitIndex(b, unitTokens), batchId)
           b.unpersist()
           ()
         }
-        .start()
-      try {
-        val sorted = docs.sortBy(_.doc_id)
-        val per = math.max(1, (sorted.length + nBatches - 1) / nBatches)
-        sorted.grouped(per).foreach { batch =>
-          input.addData(batch)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    }
-    val outDirs = Option(new java.io.File(s"$workDir/out").list()).toSeq.flatten
-      .collect { case n if n.startsWith("v") => s"$workDir/out/$n" }
-    spark.read.parquet(outDirs: _*)
+        .start())
+    out.union(spark).get // the replay refuses empty input: >= 1 version
   }
 }

@@ -29,50 +29,25 @@ object StreamSignatureNearDup {
 
   def replaySignaturePairs(spark: SparkSession, rows: Seq[SigRow],
       workDir: String, maxHamming: Int, nBatches: Int = 3): DataFrame = {
-    require(nBatches >= 1, s"need at least one batch, got $nBatches")
-    require(rows.nonEmpty, "empty replay corpus — nothing to stream")
     import spark.implicits._
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"$workDir/index"))
-    def currentIndex: DataFrame = {
-      val d = new java.io.File(s"$workDir/index")
-      val vs = Option(d.list()).toSeq.flatten
-        .collect { case n if n.startsWith("v") => s"$workDir/index/$n" }
-      if (vs.isEmpty)
-        spark.emptyDataset[(Long, Long, Int, Long)]
-          .toDF("doc_id", "sig", "band", "bits")
-      else spark.read.parquet(vs: _*)
-    }
-    Events.withReplayPartitions(spark) {
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[SigRow](spark)
-      val q = input.toDS().toDF()
-        .writeStream
+    val out = Replay.Versioned(s"$workDir/out")
+    val index = Replay.Versioned(s"$workDir/index")
+    Replay.replay(spark, Replay.slices(rows.sortBy(_.doc_id), nBatches))(
+      _.toDF().writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val b = batch.persist()
+          val current = index.union(spark).getOrElse(
+            spark.emptyDataset[(Long, Long, Int, Long)]
+              .toDF("doc_id", "sig", "band", "bits"))
           // corpusSigs is unused when prebuiltIndex is given (the index
           // IS the corpus); pass the empty frame to make that explicit
-          Dedup.incrementalSignaturePairs(
-              b.limit(0), b, maxHamming,
-              prebuiltIndex = Some(currentIndex))
-            .write.mode("overwrite").parquet(s"$workDir/out/v$batchId")
-          Dedup.signatureBandIndex(b, maxHamming)
-            .write.mode("overwrite").parquet(s"$workDir/index/v$batchId")
+          out.write(Dedup.incrementalSignaturePairs(
+            b.limit(0), b, maxHamming, prebuiltIndex = Some(current)), batchId)
+          index.write(Dedup.signatureBandIndex(b, maxHamming), batchId)
           b.unpersist()
           ()
         }
-        .start()
-      try {
-        val sorted = rows.sortBy(_.doc_id)
-        val per = math.max(1, (sorted.length + nBatches - 1) / nBatches)
-        sorted.grouped(per).foreach { batch =>
-          input.addData(batch)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    }
-    val outDirs = Option(new java.io.File(s"$workDir/out").list()).toSeq.flatten
-      .collect { case n if n.startsWith("v") => s"$workDir/out/$n" }
-    spark.read.parquet(outDirs: _*)
+        .start())
+    out.union(spark).get // the replay refuses empty input: >= 1 version
   }
 }

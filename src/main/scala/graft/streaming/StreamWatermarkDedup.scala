@@ -40,7 +40,7 @@ object StreamWatermarkDedup {
   def replayDistinctFp(spark: SparkSession, rows: Seq[Stamped],
       delaySeconds: Long): DataFrame = {
     import spark.implicits._
-    Events.replayTwoBatches(spark, rows, "graft_x78_", "append") { in =>
+    Replay.replayToMemory(spark, Replay.slices(rows, 2), "append") { in =>
       in.withWatermark("ts", s"$delaySeconds seconds")
         .dropDuplicatesWithinWatermark("fp")
         .toDF()

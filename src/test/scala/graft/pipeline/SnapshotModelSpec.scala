@@ -33,6 +33,8 @@ class SnapshotModelSpec extends AnyFunSuite {
       val rnd = new scala.util.Random(seed)
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft-snapmodel$seed").toString + "/t"
+      val (n0, head0) = Checkpointing.readHead(spark, dir)
+      assert(n0 == 0 && head0.isEmpty, "readHead of a table with no commits")
       // model: snapshot seq i+1 ADDS adds(i) and DELETES dels(i);
       // visible state at version v = fold of (s ++ adds) -- dels over 1..v
       var adds = Vector.empty[Set[Long]]
@@ -133,6 +135,9 @@ class SnapshotModelSpec extends AnyFunSuite {
         // invariant 1: latest version = the model fold, in ids AND count
         val snaps = Checkpointing.snapshots(dir)
         assert(snaps.length == adds.length, s"seed=$seed step=$step")
+        val (nHead, head) = Checkpointing.readHead(spark, dir)
+        assert(nHead == adds.length &&
+          head.map(idsOf).contains(visible(adds.length)), s"seed=$seed step=$step")
 
         // invariant 2: every LIVE version v = fold over 1..v; count check
         // catches duplication (e.g. compacting an un-vacuumed upsert's raw

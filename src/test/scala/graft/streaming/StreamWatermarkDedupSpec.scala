@@ -9,26 +9,16 @@ class StreamWatermarkDedupSpec extends AnyFunSuite {
 
   private def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
 
-  /** Hand-rolled N-batch replay (the shared harness fixes two batches;
-    * eviction needs three). */
+  /** An N-batch replay through the shared harness (eviction needs three
+    * batches). */
   private def replay(batches: Seq[Seq[Stamped]], delaySec: Long)
       : Seq[String] = {
     import spark.implicits._
-    Events.withReplayPartitions(spark) {
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[Stamped](spark)
-      val qname = "graft_wmdd_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = in.toDS()
-        .withWatermark("ts", s"$delaySec seconds")
+    Replay.replayToMemory(spark, batches, "append")(
+      _.withWatermark("ts", s"$delaySec seconds")
         .dropDuplicatesWithinWatermark("fp")
-        .toDF()
-        .writeStream.format("memory").queryName(qname).outputMode("append")
-        .start()
-      try batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      finally q.stop()
-      spark.table(qname).collect().map(_.getAs[String]("fp")).toSeq
-    }
+        .toDF())
+      .collect().map(_.getAs[String]("fp")).toSeq
   }
 
   test("duplicates within the watermark horizon are suppressed, in-batch and cross-batch") {
