@@ -1,9 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.json4s.{JDecimal, JObject, JValue}
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods
+import scala.util.{Failure, Success, Try}
+import graft.layout.DocRow
+import graft.pipeline.{Checkpointing, ExtractionPipeline}
 
 /** The production entrypoint — the class the north rule's spark-submit
   * invocation launches (scripts/spark-submit-example.sh):
@@ -21,11 +25,20 @@ import org.json4s.jackson.JsonMethods
   *                        way — takedown/compact/vacuum/time travel apply
   *                        to the extracted text, not just the stats)
   *
-  * RESUMABLE BY CONSTRUCTION: every launch anti-joins the input against the
-  * committed doc_ids and processes only the remainder, so re-running after
-  * a crash (or with a grown input table) does incremental work and a
-  * completed run is a cheap no-op. Emits one JSON metrics line on stdout
-  * (docs committed this run, total committed, snapshot count).
+  * ONE EXTRACTION, ONE RUN IN BOTH TABLES: each document is extracted
+  * once per run; both tables stage that run's data files (invisible to
+  * readers), then `spans` publishes and `stats` publishes last. Each
+  * publish is one log write. `stats` is the commit point: it is the table
+  * the resume filter reads.
+  *
+  * RESUMABLE BY CONSTRUCTION: every launch first settles a run an earlier
+  * launch left staged — published in either table, it is published in the
+  * other too; published in neither, it is abandoned in both — and then
+  * anti-joins the input against the committed doc_ids and processes only
+  * the remainder. So re-running after a crash (or with a grown input
+  * table) does incremental work, lands no document twice, and a completed
+  * run is a cheap no-op. Emits one JSON metrics line on stdout (docs
+  * committed this run, total committed, snapshot count).
   */
 object ExtractMain {
 
@@ -82,17 +95,13 @@ object ExtractMain {
     import spark.implicits._
     val times = (1 to reps).map { rep =>
       val t0 = System.nanoTime()
-      val r = graft.pipeline.ExtractionPipeline.run(spark,
-        spark.read.parquet(input).as[graft.layout.DocRow],
-        saltPages = Some(saltPages), persistIntermediate = false)
+      val docs = spark.read.parquet(input).as[DocRow]
       sinkDir match {
         case Some(base) =>
-          val runId = f"bench$rep%02d"
-          graft.pipeline.Checkpointing.commit(
-            r.outSpans.toDF(), s"$base/rep$rep/spans", runId)
-          graft.pipeline.Checkpointing.commit(
-            r.stats.toDF(), s"$base/rep$rep/stats", runId)
-        case None => r.outSpans.count()
+          land(docs, s"$base/rep$rep", saltPages, f"bench$rep%02d", audit = false)
+        case None =>
+          ExtractionPipeline.run(spark, docs, saltPages = Some(saltPages),
+            persistIntermediate = false).outSpans.count()
       }
       (System.nanoTime() - t0) / 1e9
     }
@@ -108,7 +117,6 @@ object ExtractMain {
     * TEXT in the spans table would not be a takedown at all). Prints one
     * JSON line per table, mirroring run(). */
   def maintain(spark: SparkSession, out: String, cmd: Array[String]): Unit = {
-    import graft.pipeline.Checkpointing
     // spans may not exist (a run that committed no docs yet)
     val tables = Seq(s"$out/stats", s"$out/spans")
       .filter(d => Checkpointing.snapshots(d).nonEmpty)
@@ -194,19 +202,17 @@ object ExtractMain {
 
   /** The testable body: returns (docs committed this run, total committed).
     *
-    * `audit = true` switches the landing to write-audit-publish: both
-    * tables STAGE (invisible to readers), the would-be state is audited —
-    * one stats row per doc, every span row backed by a stats row, no
-    * doc_id collision with the committed table — and only then published
-    * (metadata-only). A failed audit abandons both batches and throws:
-    * the table never saw a row. This is how a risky parser change or
-    * backfill runs in production without exposing wrong data. */
+    * `audit = true` audits the staged run before it is published: one
+    * stats row per doc, every span row backed by a stats row, no doc_id
+    * collision with the committed table. A failed audit abandons both
+    * batches and throws: the table never saw a row. This is how a risky
+    * parser change or backfill runs in production without exposing wrong
+    * data. */
   def run(spark: SparkSession, input: String, out: String,
       saltPages: Int = 64, audit: Boolean = false): (Long, Long) = {
     require(saltPages >= 1, s"saltPages must be at least 1, got $saltPages\n" +
       "usage: ExtractMain <inputDir> <outputDir> [saltPages] [audit]")
     import spark.implicits._
-    import graft.pipeline.Checkpointing
     // job wall clock from first plan to committed truth, excluding JVM +
     // SparkSession startup — the time a cluster bills to the JOB, and the
     // number the two-cluster-size scaling comparison divides (a fixed
@@ -214,53 +220,77 @@ object ExtractMain {
     // ratio at small t and has nothing to do with the pipeline)
     val t0 = System.nanoTime()
     val statsDir = s"$out/stats"
-    val docs = spark.read.parquet(input).as[graft.layout.DocRow]
+    Checkpointing.settle(Seq(s"$out/spans", statsDir))
+    val docs = spark.read.parquet(input).as[DocRow]
     val pending = Checkpointing.resumeFilter(spark, docs, statsDir)
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val committed =
-      if (pending.isEmpty) 0L
-      else {
-        val r = graft.pipeline.ExtractionPipeline.run(spark, pending,
-          saltPages = Some(saltPages), persistIntermediate = false)
-        // spans are a COMMITTED table too (snapshot log + manifests), so
-        // takedown/compact/vacuum cover the extracted text, not just the
-        // per-doc stats — and time travel works on the content itself
-        if (!audit) {
-          Checkpointing.commit(r.outSpans.toDF(), s"$out/spans", runId)
-          Checkpointing.commit(r.stats.toDF(), statsDir, runId)
-        } else {
-          val nStats = Checkpointing.stage(r.stats.toDF(), statsDir, runId)
-          Checkpointing.stage(r.outSpans.toDF(), s"$out/spans", runId)
-          val audited = Checkpointing.readStaged(spark, statsDir, runId)
-          val dupIds = audited.groupBy("doc_id")
-            .agg(org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("n"))
-            .filter(org.apache.spark.sql.functions.col("n") > 1).count()
-          val spanIds = Checkpointing
-            .readStaged(spark, s"$out/spans", runId)
-            .select("doc_id").distinct()
-          val orphanSpans = spanIds.join(audited.select("doc_id"),
-            Seq("doc_id"), "left_anti").count()
-          if (dupIds > 0 || orphanSpans > 0) {
-            Checkpointing.abandon(statsDir, runId)
-            Checkpointing.abandon(s"$out/spans", runId)
-            throw new IllegalStateException(s"audit failed for run $runId: " +
-              s"$dupIds duplicated doc_ids, $orphanSpans span docs without " +
-              "a stats row — batch abandoned, table unchanged")
-          }
-          Checkpointing.publish(s"$out/spans", runId)
-          Checkpointing.publish(statsDir, runId)
-          nStats
-        }
-      }
-    // committed truth, not the raw dir: after an upsert/delete the raw
-    // directory still holds pre-rebase files / un-applied tombstones
-    val (nSnaps, head) = Checkpointing.readHead(spark, statsDir)
-    val total = head.fold(0L)(_.count())
+    val committed = land(pending, out, saltPages, runId, audit)
+    // committed truth from the log, not the raw dir: after an upsert or a
+    // delete the raw directory still holds pre-rebase files / un-applied
+    // tombstones
+    val (nSnaps, total) = Checkpointing.headRows(spark, statsDir)
     val secs = (System.nanoTime() - t0) / 1e9
     emit(("run" -> runId) ~ ("docs_committed" -> committed) ~
       ("total_committed" -> total) ~ ("snapshots" -> nSnaps) ~
       ("seconds" -> seconds(secs)))
     (committed, total)
+  }
+
+  /** Lands `docs` as run `runId` in `<out>/spans` and `<out>/stats`;
+    * returns the stats rows (0, and no run, when `docs` is empty). The
+    * per-document output is computed once, by an eager local checkpoint
+    * released on return. Both tables stage concurrently; when either stage
+    * fails, what the other staged is abandoned once both have ended. Then
+    * spans publish and stats publish. A failure from the first publish on
+    * is left to the next run's [[Checkpointing.settle]]. */
+  private def land(docs: Dataset[DocRow], out: String, saltPages: Int,
+      runId: String, audit: Boolean): Long = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val (spansDir, statsDir) = (s"$out/spans", s"$out/stats")
+    val outs = ExtractionPipeline.docOuts(docs, Some(saltPages))
+      .localCheckpoint(eager = true)
+    val blocks = outs.queryExecution.logical.collectFirst {
+      case r: LogicalRDD => r.rdd
+    }.get
+    try if (blocks.isEmpty()) 0L else {
+      // one thread per table: each write is mostly fixed driver and job
+      // overhead, so the two overlap well
+      val staged = Seq(spansDir -> outs.flatMap(_.spans).toDF(),
+          statsDir -> outs.map(_.stat).toDF()).map { case (dir, df) =>
+        val task = new java.util.concurrent.FutureTask[Long](
+          () => Checkpointing.stage(df, dir, runId))
+        new Thread(task, s"stage-$runId-${dir.split('/').last}").start()
+        dir -> task
+      }.map { case (dir, task) =>
+        dir -> Try(task.get()).recoverWith {
+          case e: java.util.concurrent.ExecutionException => Failure(e.getCause)
+        }
+      }
+      staged.collectFirst { case (_, Failure(e)) =>
+        staged.collect { case (dir, Success(_)) => Checkpointing.abandon(dir, runId) }
+        throw e
+      }
+      if (audit) {
+        import org.apache.spark.sql.functions.{col, count, lit}
+        val audited = Checkpointing.readStaged(spark, statsDir, runId)
+        val dupIds = audited.groupBy("doc_id").agg(count(lit(1)).as("n"))
+          .filter(col("n") > 1).count()
+        val spanIds = Checkpointing.readStaged(spark, spansDir, runId)
+          .select("doc_id").distinct()
+        val orphanSpans = spanIds.join(audited.select("doc_id"),
+          Seq("doc_id"), "left_anti").count()
+        if (dupIds > 0 || orphanSpans > 0) {
+          Checkpointing.abandon(statsDir, runId)
+          Checkpointing.abandon(spansDir, runId)
+          throw new IllegalStateException(s"audit failed for run $runId: " +
+            s"$dupIds duplicated doc_ids, $orphanSpans span docs without " +
+            "a stats row — batch abandoned, table unchanged")
+        }
+      }
+      Checkpointing.publish(spansDir, runId)
+      Checkpointing.publish(statsDir, runId)
+      staged.last._2.get
+    } finally blocks.unpersist(blocking = false)
   }
 }

@@ -96,6 +96,14 @@ object Checkpointing {
       key.takeWhile(_.isDigit).toInt -> f
     }
 
+  /** The runId in a snapshot entry's key (`<seq>-<runId>`). */
+  private def runOf(key: String): String = key.dropWhile(_.isDigit).drop(1)
+
+  /** The runIds a log dir's snapshot names carry — names only, no JSON
+    * read. */
+  private def loggedRuns(logDir: java.io.File): Set[String] =
+    logEntries(logDir, "snapshot-").map(e => runOf(e._1)).toSet
+
   private def parseLog(files: Seq[(Int, java.io.File)]): Seq[Snapshot] =
     files.map { case (_, f) => LogCodec.readSnapshot(Files.readString(f.toPath)) }
 
@@ -144,11 +152,22 @@ object Checkpointing {
   def readAt(spark: SparkSession, dir: String, version: Int): DataFrame =
     readLogAt(spark, dir, committedLog(dir), version)
 
-  /** The snapshot count and the table at the log's head (None before the
-    * first commit), from one parse of the log. */
-  def readHead(spark: SparkSession, dir: String): (Int, Option[DataFrame]) = {
+  /** The snapshot count and the head's row count, from one parse of the
+    * log and no Spark job: the sum of `rows` over the head's effective
+    * stack. Where those logged rows do not add up to the table — the
+    * stack carries a delete set, or lists a file twice — the head is
+    * counted instead. (0, 0) before the first commit. */
+  def headRows(spark: SparkSession, dir: String): (Int, Long) = {
     val snaps = snapshots(dir)
-    (snaps.size, snaps.lastOption.map(s => readLogAt(spark, dir, snaps, s.seq)))
+    snaps.lastOption.fold((0, 0L)) { head =>
+      val stack = effectiveSnaps(snaps, head.seq)
+      val files = stack.flatMap(_.files)
+      val rows =
+        if (stack.exists(_.deletes.nonEmpty) || files.distinct.size != files.size)
+          assemble(spark, dir, head.seq, stack).count()
+        else stack.map(_.rows).sum
+      (snaps.size, rows)
+    }
   }
 
   /** [[readAt]] over a log the caller has already parsed. */
@@ -587,7 +606,8 @@ object Checkpointing {
     // not destroy a batch an auditor is still looking at. (A stale marker
     // left by a crashed publish is not a staged batch, so ITS files are
     // protected via the snapshot.)
-    val stagedLive = stagedIn(dir, snaps).flatMap(_.files).toSet
+    val published = snaps.map(_.runId).toSet
+    val stagedLive = stagedIn(dir, published).flatMap(_.files).toSet
     val live = liveSnaps.flatMap(_.files).toSet ++ stagedLive
     val orphans = (parquetNames(dir) -- live).toSeq.sorted
     orphans.foreach(n => Files.deleteIfExists(Paths.get(s"$dir/$n")))
@@ -601,7 +621,6 @@ object Checkpointing {
     delOrphans.foreach(n => deleteRecursively(new java.io.File(delRoot, n)))
     // stale staged markers (publish crashed after its snapshot write)
     // are metadata debris — the snapshot owns the files now
-    val published = snaps.map(_.runId).toSet
     val staleMarkers = logEntries(manifestDir(dir), "staged-")
       .collect { case (run, f) if published(run) => f }
     staleMarkers.foreach(f => Files.deleteIfExists(f.toPath))
@@ -868,7 +887,7 @@ object Checkpointing {
         Some(readLogAt(spark, committedDir, snaps, snaps.last.seq))
       // a dir whose ONLY content is staged (unpublished) batches has no
       // committed rows — the raw-dir legacy fallback must not count them
-      else if (stagedIn(committedDir, snaps).nonEmpty) None
+      else if (stagedIn(committedDir, Set.empty).nonEmpty) None
       else if (Files.exists(Paths.get(committedDir)))
         Some(spark.read.parquet(committedDir))
       else None
@@ -897,7 +916,7 @@ object Checkpointing {
     // the rewrite swaps the whole data dir — an undecided staged batch
     // (write-audit-publish) lives in that dir outside any snapshot and
     // would be silently destroyed; decide the audit first
-    val pending = stagedIn(dir, snaps)
+    val pending = stagedIn(dir, snaps.map(_.runId).toSet)
     require(pending.isEmpty, "compact with undecided staged batches " +
       s"(${pending.map(_.runId).mkString(", ")}) — publish or abandon first")
     // compact deletes superseded files OUTRIGHT — it would destroy the
@@ -1096,7 +1115,7 @@ object Checkpointing {
     * way. */
   def stage(df: DataFrame, dir: String, runId: String): Long = {
     require(!Files.exists(stagedPath(dir, runId)) &&
-      !snapshots(dir).exists(_.runId == runId),
+      !loggedRuns(manifestDir(dir))(runId),
       s"run $runId already staged or published at $dir")
     val (rows, added, stats) = writeInstrumented(df, dir, runId)
     Files.writeString(stagedPath(dir, runId),
@@ -1108,45 +1127,48 @@ object Checkpointing {
     * has a snapshot is the debris of a publish that crashed between
     * snapshot write and marker cleanup — filtered out here (the publish
     * DID happen; the next publish/abandon call or vacuum clears it). */
-  def staged(dir: String): Seq[Staged] = stagedIn(dir, snapshots(dir))
+  def staged(dir: String): Seq[Staged] =
+    stagedIn(dir, loggedRuns(manifestDir(dir)))
 
-  /** [[staged]] against the parsed log `snaps`: markers whose runId it
-    * has not published. */
-  private def stagedIn(dir: String, snaps: Seq[Snapshot]): Seq[Staged] = {
-    val published = snaps.map(_.runId).toSet
+  /** The staged markers of `dir` whose runId is not in `published`. */
+  private def stagedIn(dir: String, published: Set[String]): Seq[Staged] =
     logEntries(manifestDir(dir), "staged-").collect {
       case (run, f) if !published(run) =>
         LogCodec.readStaged(Files.readString(f.toPath))
     }
-  }
 
-  private def stagedBatch(dir: String, snaps: Seq[Snapshot],
-      runId: String): Staged = stagedIn(dir, snaps).find(_.runId == runId)
-    .getOrElse(throw new IllegalArgumentException(s"no staged batch $runId at $dir"))
+  /** The unpublished staged batch `runId` of `dir`: its marker alone is
+    * read, the log only listed. */
+  private def stagedBatch(dir: String, runId: String): Staged = {
+    val p = stagedPath(dir, runId)
+    if (!Files.exists(p) || loggedRuns(manifestDir(dir))(runId))
+      throw new IllegalArgumentException(s"no staged batch $runId at $dir")
+    LogCodec.readStaged(Files.readString(p))
+  }
 
   /** The auditor's view: the current committed table PLUS the staged
     * batch — what the table WOULD be after publish. Audit invariants
     * (row counts, no duplicate doc_ids, quality gates) run here before
     * any reader can see the rows. */
   def readStaged(spark: SparkSession, dir: String, runId: String): DataFrame = {
+    val st = stagedBatch(dir, runId)
     val snaps = snapshots(dir)
-    val st = stagedBatch(dir, snaps, runId)
     val batch = spark.read.parquet(st.files.map(n => s"$dir/$n"): _*)
     if (snaps.isEmpty) batch
     else readLogAt(spark, dir, snaps, snaps.last.seq).unionByName(batch)
   }
 
   /** Write-audit-publish, step 3a: promote the staged batch to a real
-    * snapshot — one metadata write; the data files don't move. Idempotent
-    * against the crash window: if the runId is already published, only the
-    * stale marker is cleaned up. */
+    * snapshot — one metadata write; the data files don't move, and the
+    * log is only listed. Idempotent against the crash window: if the
+    * runId is already published, only the stale marker is cleaned up. */
   def publish(dir: String, runId: String): Long = {
-    val snaps = snapshots(dir)
-    val rows = snaps.find(_.runId == runId) match {
-      case Some(published) => published.rows // only the marker is left
+    val m = manifestDir(dir)
+    val rows = logEntries(m, "snapshot-").find(e => runOf(e._1) == runId) match {
+      case Some((_, f)) => // only the marker is left
+        LogCodec.readSnapshot(Files.readString(f.toPath)).rows
       case None =>
-        val st = stagedBatch(dir, snaps, runId)
-        val m = manifestDir(dir)
+        val st = stagedBatch(dir, runId)
         writeSnapshot(m, Snapshot(nextSeq(m), runId, st.files, st.rows,
           stats = st.stats))
         st.rows
@@ -1159,10 +1181,31 @@ object Checkpointing {
     * the batch's data files. The committed table never saw the rows.
     * Returns the removed file names. */
   def abandon(dir: String, runId: String): Seq[String] = {
-    val st = stagedBatch(dir, snapshots(dir), runId)
+    val st = stagedBatch(dir, runId)
     Files.deleteIfExists(stagedPath(dir, runId))
     st.files.foreach(n => Files.deleteIfExists(Paths.get(s"$dir/$n")))
     st.files
+  }
+
+  /** Settles the runs a landing into several tables (`dirs`) left half
+    * done. A run lands by staging in every table and then publishing in
+    * each, so a runId still staged somewhere is decided by the others:
+    * published in any table, it is published wherever it is still staged
+    * (roll forward); published nowhere, it is abandoned everywhere.
+    * Only names are listed while nothing is staged; a settled run's
+    * markers are read, the logs never parsed. */
+  def settle(dirs: Seq[String]): Unit = {
+    val marked = dirs.map(d => d -> logEntries(manifestDir(d), "staged-").map(_._1))
+    val runs = marked.flatMap(_._2).distinct
+    if (runs.nonEmpty) {
+      val published = dirs.map(d => loggedRuns(manifestDir(d)))
+      runs.foreach { run =>
+        val forward = published.exists(_(run))
+        marked.foreach { case (d, ms) =>
+          if (ms.contains(run)) { if (forward) publish(d, run) else abandon(d, run) }
+        }
+      }
+    }
   }
 
   // ------------------------------------------------------------ log codec

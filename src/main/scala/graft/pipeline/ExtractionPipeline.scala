@@ -76,14 +76,32 @@ object ExtractionPipeline {
     def unpersist(): Unit = persisted.foreach(_.unpersist())
   }
 
+  /** The per-document dataset every output projects, built the way
+    * [[run]] builds it: one keyed pass on the salted path (`saltPages =
+    * Some(n)`, see [[SaltedExtract]]), a narrow map otherwise. Results are
+    * identical either way (asserted in SaltedExtractSpec). */
+  def docOuts(docs: Dataset[DocRow], saltPages: Option[Int]): Dataset[DocOut] = {
+    import docs.sparkSession.implicits._
+    saltPages match {
+      case Some(n) => SaltedExtract.docOuts(SaltedExtract.chunkRows(docs, n))
+      case None => docs.map { d =>
+        val r = Extract.extractDoc(d)
+        docOut(r.stat, r.candidates, r.media)
+      }
+    }
+  }
+
   /** @param saltPages when set, oversized documents are split into
     *                   page-aligned chunks of at most this many pages before
     *                   extraction (bounded per-task layout state — the skew
-    *                   path; see [[SaltedExtract]]). Results are identical
-    *                   either way (asserted in SaltedExtractSpec).
+    *                   path; see [[SaltedExtract]]).
     * @param persistIntermediate persist the per-document dataset, so a
     *                   caller reading several outputs parses once; a caller
-    *                   reading each output once (ExtractMain) opts out. */
+    *                   reading one output once opts out. [[graft.ExtractMain]]
+    *                   does not come through here: it lands both tables from
+    *                   one eager local checkpoint of [[docOuts]], which keeps
+    *                   the plan's AQE-coalesced partitioning where a persist
+    *                   would not (one file per shuffle partition per table). */
   def run(spark: SparkSession, docs: Dataset[DocRow],
       saltPages: Option[Int] = None,
       persistIntermediate: Boolean = true): Result = {
@@ -91,16 +109,11 @@ object ExtractionPipeline {
 
     // candidates keep their own lineage (a second parse when read): only
     // the candidate-table query and tests read them
-    val (outs0, candidates) = saltPages match {
-      case Some(n) =>
-        val rows = SaltedExtract.chunkRows(docs, n)
-        (SaltedExtract.docOuts(rows), rows.flatMap(_._2))
-      case None =>
-        (docs.map { d =>
-          val r = Extract.extractDoc(d)
-          docOut(r.stat, r.candidates, r.media)
-        }, docs.flatMap(d => Extract.extractDoc(d).candidates))
+    val candidates = saltPages match {
+      case Some(n) => SaltedExtract.chunkRows(docs, n).flatMap(_._2)
+      case None => docs.flatMap(d => Extract.extractDoc(d).candidates)
     }
+    val outs0 = docOuts(docs, saltPages)
     val outs =
       if (persistIntermediate)
         outs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -129,6 +129,143 @@ class ExtractMainSpec extends AnyFunSuite {
   }
 }
 
+/** One run lands in both tables, or in neither: a landing that stops
+  * part-way is settled by the next launch, and no document is landed twice. */
+class ExtractMainLandingSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+  import graft.pipeline.{Checkpointing, ExtractionPipeline}
+
+  private val docs = graft.layout.FixtureCorpus.fixtureDocs
+
+  /** A fresh output root whose input holds the first 8 fixture docs,
+    * landed by one run, and then grows by the rest. */
+  private def grownAfterOneRun(name: String): (String, String) = {
+    val base = java.nio.file.Files.createTempDirectory(name).toString
+    val (input, out) = (s"$base/in", s"$base/out")
+    spark.createDataset(docs.take(8)).write.parquet(input)
+    ExtractMain.run(spark, input, out, saltPages = 16)
+    spark.createDataset(docs.drop(8)).write.mode("append").parquet(input)
+    (input, out)
+  }
+
+  private def head(dir: String) =
+    Checkpointing.readAt(spark, dir, Checkpointing.snapshots(dir).last.seq)
+
+  private def markers(out: String): Seq[String] = Seq("spans", "stats")
+    .flatMap(t => Option(new java.io.File(s"$out/${t}_manifest").list())
+      .getOrElse(Array.empty[String]).filter(_.startsWith("staged-")))
+
+  /** Every input doc has one stats row, and the spans equal the
+    * straight-through pipeline's: none missing, none twice. */
+  private def assertLandedOnce(out: String): Unit = {
+    val ids = head(s"$out/stats").select("doc_id").as[String].collect().toSeq
+    assert(ids.sorted == docs.map(_.doc_id).sorted)
+    val rows = head(s"$out/spans")
+      .select("doc_id", "ord", "kind", "text", "media_ref")
+      .as[(String, Int, String, String, String)].collect().toSeq
+    val keys = rows.map(r => (r._1, r._2))
+    val dups = keys.size - keys.distinct.size
+    assert(dups == 0, s"$dups duplicated (doc_id, ord) span rows")
+    val want = ExtractionPipeline
+      .run(spark, spark.createDataset(docs), persistIntermediate = false)
+      .outSpans.map(o => (o.doc_id, o.ord, o.kind, o.text, o.media_ref))
+      .collect().sorted.toSeq
+    val got = rows.sorted
+    assert(got == want && want.nonEmpty)
+    assert(got.map(_._1).distinct.sorted ==
+      head(s"$out/stats").filter($"status" === "success")
+        .select("doc_id").as[String].collect().sorted.toSeq)
+  }
+
+  test("the stats landing fails after the spans data is written: " +
+      "the rerun lands every doc once") {
+    val (input, out) = grownAfterOneRun("graft-emfail")
+    intercept[Exception](graft.ScopedConf(spark,
+        "spark.sql.sources.commitProtocolClass" ->
+          classOf[FailStatsCommit].getName) {
+      ExtractMain.run(spark, input, out, saltPages = 16)
+    })
+    val afterFailure = (Checkpointing.snapshots(s"$out/spans").size,
+      Checkpointing.snapshots(s"$out/stats").size, markers(out))
+    val (n, total) = ExtractMain.run(spark, input, out, saltPages = 16)
+    assertLandedOnce(out)
+    assert((n, total) == ((docs.size - 8).toLong, docs.size.toLong))
+    assert(afterFailure == ((1, 1, Nil)))
+  }
+
+  test("a run published in spans only is rolled forward; a run published " +
+      "nowhere is abandoned") {
+    /** Stages the pending docs of `out` as run `runId` in both tables. */
+    def stageBoth(input: String, out: String, runId: String): Unit = {
+      val pending = Checkpointing.resumeFilter(spark,
+        spark.read.parquet(input).as[graft.layout.DocRow], s"$out/stats")
+      val outs = ExtractionPipeline.docOuts(pending, Some(16))
+      Checkpointing.stage(outs.flatMap(_.spans).toDF(), s"$out/spans", runId)
+      Checkpointing.stage(outs.map(_.stat).toDF(), s"$out/stats", runId)
+    }
+    // published nowhere: abandoned, and the rerun lands the docs itself
+    val (input, out) = grownAfterOneRun("graft-emlost")
+    stageBoth(input, out, "lost")
+    val (n1, t1) = ExtractMain.run(spark, input, out, saltPages = 16)
+    assert((n1, t1) == ((docs.size - 8).toLong, docs.size.toLong))
+    assert(!Checkpointing.snapshots(s"$out/stats").exists(_.runId == "lost"))
+    assertLandedOnce(out)
+    assert(markers(out).isEmpty)
+
+    // published in spans only: stats publish the same run, nothing is left
+    // pending
+    val (input2, out2) = grownAfterOneRun("graft-emhalf")
+    stageBoth(input2, out2, "half")
+    Checkpointing.publish(s"$out2/spans", "half")
+    val (n2, t2) = ExtractMain.run(spark, input2, out2, saltPages = 16)
+    assert((n2, t2) == ((0L, docs.size.toLong)))
+    assert(Checkpointing.snapshots(s"$out2/stats").map(_.runId).last == "half")
+    assert(Checkpointing.snapshots(s"$out2/spans").size == 2)
+    assertLandedOnce(out2)
+    assert(markers(out2).isEmpty)
+  }
+
+  test("a fresh run shuffles the extraction once and releases what it " +
+      "materializes") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val base = java.nio.file.Files.createTempDirectory("graft-emonce").toString
+    spark.createDataset(docs).write.parquet(s"$base/in")
+    val sc = spark.sparkContext
+    val cacheWasEmpty = spark.sharedState.cacheManager.isEmpty
+    val before = sc.getPersistentRDDs.keySet
+    val shuffleStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskType == "ShuffleMapTask") { shuffleStages.add(t.stageId); () }
+    }
+    org.apache.spark.graft.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try ExtractMain.run(spark, s"$base/in", s"$base/out", saltPages = 16)
+    finally {
+      org.apache.spark.graft.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    // the extraction's groupByKey; with a probe for pending docs, one
+    // extraction per table and a count of the head, a run shuffled 4 times
+    assert(shuffleStages.size == 1, shuffleStages)
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, left.values.map(r => s"${r.id} ${r.name}").mkString("; "))
+    assert(!cacheWasEmpty || spark.sharedState.cacheManager.isEmpty)
+  }
+}
+
+/** Fails the job commit of every write into a directory named `stats`:
+  * its tasks have written their files, which the abort then removes. */
+class FailStatsCommit(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
+      jobId, path, dynamicPartitionOverwrite) {
+  override def commitJob(job: org.apache.hadoop.mapreduce.JobContext,
+      commits: Seq[org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage]): Unit =
+    if (path.endsWith("/stats")) throw new java.io.IOException(s"commit of $path refused")
+    else super.commitJob(job, commits)
+}
+
 /** The audited (write-audit-publish) launch mode. */
 class ExtractMainAuditSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark

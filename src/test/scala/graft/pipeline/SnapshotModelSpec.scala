@@ -33,8 +33,8 @@ class SnapshotModelSpec extends AnyFunSuite {
       val rnd = new scala.util.Random(seed)
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft-snapmodel$seed").toString + "/t"
-      val (n0, head0) = Checkpointing.readHead(spark, dir)
-      assert(n0 == 0 && head0.isEmpty, "readHead of a table with no commits")
+      assert(Checkpointing.headRows(spark, dir) == ((0, 0L)),
+        "headRows of a table with no commits")
       // model: snapshot seq i+1 ADDS adds(i) and DELETES dels(i);
       // visible state at version v = fold of (s ++ adds) -- dels over 1..v
       var adds = Vector.empty[Set[Long]]
@@ -135,9 +135,9 @@ class SnapshotModelSpec extends AnyFunSuite {
         // invariant 1: latest version = the model fold, in ids AND count
         val snaps = Checkpointing.snapshots(dir)
         assert(snaps.length == adds.length, s"seed=$seed step=$step")
-        val (nHead, head) = Checkpointing.readHead(spark, dir)
-        assert(nHead == adds.length &&
-          head.map(idsOf).contains(visible(adds.length)), s"seed=$seed step=$step")
+        assert(Checkpointing.headRows(spark, dir) ==
+          ((adds.length, visible(adds.length).size.toLong)),
+          s"seed=$seed step=$step headRows")
 
         // invariant 2: every LIVE version v = fold over 1..v; count check
         // catches duplication (e.g. compacting an un-vacuumed upsert's raw
@@ -186,6 +186,53 @@ class SnapshotModelSpec extends AnyFunSuite {
       }
     }
     assert(mergeRuns >= 1, "no seed exercised the merge op — re-seed the mix")
+  }
+
+  test("headRows sums the logged rows without a job, and counts the head " +
+      "where they do not add up") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val C = Checkpointing
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-headrows").toString + "/t"
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    /** headRows of `dir` and the Spark jobs it ran. */
+    def headRows(): ((Int, Long), Int) = {
+      org.apache.spark.graft.ListenerBusDrain(sc)
+      jobs.set(0)
+      sc.addSparkListener(listener)
+      try (C.headRows(spark, dir), { org.apache.spark.graft.ListenerBusDrain(sc); jobs.get })
+      finally sc.removeSparkListener(listener)
+    }
+    C.commit(df(1L to 3L), dir, "c1")
+    assert(headRows() == (((1, 3L), 0)))
+    C.commit(df(4L to 5L), dir, "c2")
+    assert(headRows() == (((2, 5L), 0)))
+    C.deleteWhere(df(Seq(2L)), dir, "d1") // rows = keys: counted
+    val (deleted, deleteJobs) = headRows()
+    assert(deleted == ((3, 4L)) && deleteJobs > 0)
+    C.compact(spark, dir, partitions = 1, "k1") // rebase: summed again
+    assert(headRows() == (((4, 4L), 0)))
+    C.upsert(df(Seq(1L, 6L)), dir, "u1")
+    assert(headRows() == (((5, 5L), 0)))
+    C.rollback(dir, 4, "rb1") // delegates to version 4's stack
+    assert(headRows() == (((6, 4L), 0)))
+    C.commit(df(Seq(7L)), dir, "c3")
+    assert(headRows() == (((7, 5L), 0)))
+    // a stack listing one file twice reads it once: counted, not summed
+    val twice = java.nio.file.Files.createTempDirectory("graft-headrows2")
+      .toString + "/t"
+    C.commit(df(1L to 3L), twice, "c1")
+    val m = java.nio.file.Paths.get(twice + "_manifest")
+    val first = C.snapshots(twice).head
+    java.nio.file.Files.writeString(m.resolve("snapshot-00002-c2.json"),
+      C.LogCodec.snapshot(first.copy(seq = 2, runId = "c2")))
+    assert(C.headRows(spark, twice) == ((2, 3L)))
   }
 
   test("branches: MoR base, seq ordering across the branch, expiry protection") {
