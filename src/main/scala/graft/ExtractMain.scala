@@ -1,13 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.json4s.{JDecimal, JObject, JValue}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, size, sum, when}
+import org.json4s.{JDecimal, JLong, JObject, JValue}
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods
 import scala.util.{Failure, Success, Try}
-import graft.layout.DocRow
+import graft.layout.{DocRow, PaperStat}
 import graft.pipeline.{Checkpointing, ExtractionPipeline}
+import graft.pipeline.ExtractionPipeline.OutSpan
 
 /** The production entrypoint — the class the north rule's spark-submit
   * invocation launches (scripts/spark-submit-example.sh):
@@ -31,14 +33,22 @@ import graft.pipeline.{Checkpointing, ExtractionPipeline}
   * publish is one log write. `stats` is the commit point: it is the table
   * the resume filter reads.
   *
+  * ONLY THE JOBS THAT DO WORK: the extraction's checkpoint, one write per
+  * table and, on a table with commits, the broadcast of its doc_ids. The
+  * input's and the tables' schemas come from parquet footers, not from
+  * inference jobs; whether anything is pending, and the run's counters,
+  * are observed on the checkpoint job itself, not probed by another.
+  *
   * RESUMABLE BY CONSTRUCTION: every launch first settles a run an earlier
   * launch left staged — published in either table, it is published in the
   * other too; published in neither, it is abandoned in both — and then
   * anti-joins the input against the committed doc_ids and processes only
   * the remainder. So re-running after a crash (or with a grown input
   * table) does incremental work, lands no document twice, and a completed
-  * run is a cheap no-op. Emits one JSON metrics line on stdout (docs
-  * committed this run, total committed, snapshot count).
+  * run is a cheap no-op. Emits one JSON metrics line on stdout: docs
+  * committed this run, total committed, snapshot count, the counters
+  * observed on the extraction (docs in, their status split, spans out)
+  * and seconds.
   */
 object ExtractMain {
 
@@ -95,7 +105,7 @@ object ExtractMain {
     import spark.implicits._
     val times = (1 to reps).map { rep =>
       val t0 = System.nanoTime()
-      val docs = spark.read.parquet(input).as[DocRow]
+      val docs = Checkpointing.readParquet(spark, input).as[DocRow]
       sinkDir match {
         case Some(base) =>
           land(docs, s"$base/rep$rep", saltPages, f"bench$rep%02d", audit = false)
@@ -221,10 +231,10 @@ object ExtractMain {
     val t0 = System.nanoTime()
     val statsDir = s"$out/stats"
     Checkpointing.settle(Seq(s"$out/spans", statsDir))
-    val docs = spark.read.parquet(input).as[DocRow]
+    val docs = Checkpointing.readParquet(spark, input).as[DocRow]
     val pending = Checkpointing.resumeFilter(spark, docs, statsDir)
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val committed = land(pending, out, saltPages, runId, audit)
+    val (committed, counts) = land(pending, out, saltPages, runId, audit)
     // committed truth from the log, not the raw dir: after an upsert or a
     // delete the raw directory still holds pre-rebase files / un-applied
     // tombstones
@@ -232,32 +242,53 @@ object ExtractMain {
     val secs = (System.nanoTime() - t0) / 1e9
     emit(("run" -> runId) ~ ("docs_committed" -> committed) ~
       ("total_committed" -> total) ~ ("snapshots" -> nSnaps) ~
+      JObject(counts.map { case (k, v) => k -> (JLong(v): JValue) }.toList) ~
       ("seconds" -> seconds(secs)))
     (committed, total)
   }
 
+  /** The counters observed on the extraction's checkpoint job, in the
+    * order the run's JSON line lists them: documents in, their status
+    * split, and output spans. */
+  private val counters: Seq[(String, Column)] = Seq(
+    "docs_in" -> count(lit(1)),
+    "success" -> count(when(col("stat.status") === "success", true)),
+    "not_found" -> count(when(col("stat.status") === "not_found", true)),
+    "oversized_skip" -> count(when(col("stat.status") === "oversized_skip", true)),
+    "spans_out" -> coalesce(sum(size(col("spans"))), lit(0L)))
+
   /** Lands `docs` as run `runId` in `<out>/spans` and `<out>/stats`;
-    * returns the stats rows (0, and no run, when `docs` is empty). The
-    * per-document output is computed once, by an eager local checkpoint
-    * released on return. Both tables stage concurrently; when either stage
-    * fails, what the other staged is abandoned once both have ended. Then
-    * spans publish and stats publish. A failure from the first publish on
-    * is left to the next run's [[Checkpointing.settle]]. */
+    * returns the stats rows (0, and no run, when `docs` is empty) and the
+    * [[counters]]. The per-document output is computed once, by an eager
+    * local checkpoint released on return; the counters are observed on
+    * that job, and "anything to land?" is read from them. Both tables stage
+    * concurrently, each projecting only the column it writes; when either
+    * stage fails, what the other staged is abandoned once both have ended.
+    * Then spans publish and stats publish. A failure from the first
+    * publish on is left to the next run's [[Checkpointing.settle]]. */
   private def land(docs: Dataset[DocRow], out: String, saltPages: Int,
-      runId: String, audit: Boolean): Long = {
+      runId: String, audit: Boolean): (Long, Seq[(String, Long)]) = {
     val spark = docs.sparkSession
     import spark.implicits._
     val (spansDir, statsDir) = (s"$out/spans", s"$out/stats")
+    val observed = Observation(s"land-$runId")
+    val metrics = counters.map { case (k, c) => c.as(k) }
     val outs = ExtractionPipeline.docOuts(docs, Some(saltPages))
+      .observe(observed, metrics.head, metrics.tail: _*)
       .localCheckpoint(eager = true)
+    val seen = observed.get
+    val counts = counters.map { case (k, _) => k -> seen(k).asInstanceOf[Long] }
     val blocks = outs.queryExecution.logical.collectFirst {
       case r: LogicalRDD => r.rdd
     }.get
-    try if (blocks.isEmpty()) 0L else {
+    try if (counts.head._2 == 0L) (0L, counts) else {
       // one thread per table: each write is mostly fixed driver and job
-      // overhead, so the two overlap well
-      val staged = Seq(spansDir -> outs.flatMap(_.spans).toDF(),
-          statsDir -> outs.map(_.stat).toDF()).map { case (dir, df) =>
+      // overhead, so the two overlap well. Each frame decodes only the
+      // column it writes and re-encodes it, which keeps the encoder's
+      // schema (a bare column projection would write nullable fields).
+      val spans = outs.select("spans").as[Seq[OutSpan]].flatMap(identity).toDF()
+      val stats = outs.select("stat.*").as[PaperStat].map(identity).toDF()
+      val staged = Seq(spansDir -> spans, statsDir -> stats).map { case (dir, df) =>
         val task = new java.util.concurrent.FutureTask[Long](
           () => Checkpointing.stage(df, dir, runId))
         new Thread(task, s"stage-$runId-${dir.split('/').last}").start()
@@ -272,7 +303,6 @@ object ExtractMain {
         throw e
       }
       if (audit) {
-        import org.apache.spark.sql.functions.{col, count, lit}
         val audited = Checkpointing.readStaged(spark, statsDir, runId)
         val dupIds = audited.groupBy("doc_id").agg(count(lit(1)).as("n"))
           .filter(col("n") > 1).count()
@@ -290,7 +320,7 @@ object ExtractMain {
       }
       Checkpointing.publish(spansDir, runId)
       Checkpointing.publish(statsDir, runId)
-      staged.last._2.get
+      (staged.last._2.get, counts)
     } finally blocks.unpersist(blocking = false)
   }
 }

@@ -96,6 +96,52 @@ class ExtractMainSpec extends AnyFunSuite {
     }
   }
 
+  test("an input without spans is refused before any table is touched") {
+    val base = java.nio.file.Files.createTempDirectory("graft-emain-nospans").toString
+    val (input, out) = (s"$base/in", s"$base/out")
+    Seq(("1.a.pdf", 1L)).toDF("doc_id", "doc_ord").write.parquet(input)
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      ExtractMain.run(spark, input, out, saltPages = 16))
+    assert(e.getMessage.contains("spans"), e.getMessage)
+    assert(!new java.io.File(out).exists())
+  }
+
+  test("the run's counters equal what it committed") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    import graft.pipeline.Checkpointing
+    val base = java.nio.file.Files.createTempDirectory("graft-emcount").toString
+    val (input, out) = (s"$base/in", s"$base/out")
+    val docs = graft.layout.FixtureCorpus.fixtureDocs
+    def counted(): Map[String, BigInt] = {
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(buf)(ExtractMain.run(spark, input, out, saltPages = 16))
+      JsonMethods.parse(buf.toString("UTF-8")).asInstanceOf[JObject].obj
+        .collect { case (k, JInt(v)) => k -> v }.toMap
+    }
+    /** The counters the stats and spans that run `seq` added give. */
+    def committed(seq: Int): Map[String, BigInt] = {
+      def added(t: String) =
+        Checkpointing.changesBetween(spark, s"$out/$t", seq - 1, seq)
+      val split = added("stats").groupBy("status").count().as[(String, Long)]
+        .collect().toMap
+      Map("docs_in" -> BigInt(added("stats").count()),
+        "spans_out" -> BigInt(added("spans").count())) ++
+        Seq("success", "not_found", "oversized_skip")
+          .map(k => k -> BigInt(split.getOrElse(k, 0L)))
+    }
+    val keys = Set("docs_in", "success", "not_found", "oversized_skip", "spans_out")
+    spark.createDataset(docs.take(9)).write.parquet(input)
+    val first = counted().filter(c => keys(c._1))
+    spark.createDataset(docs.drop(9)).write.mode("append").parquet(input)
+    val second = counted().filter(c => keys(c._1))
+    assert(first == committed(1) && first("docs_in") == 9)
+    assert(second == committed(2) && second("docs_in") == docs.size - 9)
+    assert(Seq(first, second).map(c => c("success") + c("not_found")).forall(_ > 0))
+    // nothing pending: nothing counted
+    assert(counted().filter(c => keys(c._1)).values.toSet == Set(BigInt(0)))
+  }
+
   test("stdout of run and maintain snapshots: one JSON object per line, " +
       "keys in order, three-decimal seconds") {
     import org.json4s._
@@ -117,7 +163,8 @@ class ExtractMainSpec extends AnyFunSuite {
     }
     val ran = stdout(ExtractMain.run(spark, input, out, saltPages = 16))
     assert(ran.map(_.obj.map(_._1)) == Seq(List("run", "docs_committed",
-      "total_committed", "snapshots", "seconds")))
+      "total_committed", "snapshots", "docs_in", "success", "not_found",
+      "oversized_skip", "spans_out", "seconds")))
     assert(ran.head \ "docs_committed" == JInt(4))
     val snaps = stdout(ExtractMain.maintain(spark, out, Array("snapshots")))
     assert(snaps.map(_ \ "table") == Seq(JString("stats"), JString("spans")))
@@ -252,6 +299,37 @@ class ExtractMainLandingSpec extends AnyFunSuite {
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
     assert(left.isEmpty, left.values.map(r => s"${r.id} ${r.name}").mkString("; "))
     assert(!cacheWasEmpty || spark.sharedState.cacheManager.isEmpty)
+  }
+}
+
+/** A run starts only the jobs that do work: the extraction's checkpoint
+  * (a shuffle-map job and its result job), one write per table, and on a
+  * resumed run the broadcast of the committed doc_ids. */
+class ExtractMainJobsSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  test("a fresh run starts 4 jobs and a resumed run 5, neither a schema " +
+      "inference nor an emptiness probe; a resumed run shuffles once") {
+    val docs = graft.layout.FixtureCorpus.fixtureDocs
+    val base = java.nio.file.Files.createTempDirectory("graft-emjobs").toString
+    val (input, out) = (s"$base/in", s"$base/out")
+    def jobsOfRun() =
+      TestSpark.jobsOf(ExtractMain.run(spark, input, out, saltPages = 16))
+    spark.createDataset(docs.take(8)).write.parquet(input)
+    val (_, fresh, freshShuffles) = jobsOfRun()
+    spark.createDataset(docs.drop(8)).write.mode("append").parquet(input)
+    val (_, resumed, resumedShuffles) = jobsOfRun()
+    Seq(fresh -> 4, resumed -> 5).foreach { case (jobs, n) =>
+      assert(jobs.size == n, jobs)
+      // the two table writes are the only parquet jobs
+      assert(jobs.count(_.startsWith("parquet at")) == 2, jobs)
+      assert(jobs.filter(_.startsWith("parquet at"))
+        .forall(_.startsWith("parquet at Checkpointing")), jobs)
+      assert(!jobs.exists(_.contains("isEmpty")), jobs)
+    }
+    assert(freshShuffles.size == 1 && resumedShuffles.size == 1,
+      (freshShuffles, resumedShuffles))
   }
 }
 

@@ -11,6 +11,31 @@ object TestSpark {
   val sfDir: String = sys.env.getOrElse("GRAFT_TESTDATA",
     sys.props.getOrElse("graft.testdata", "/root/testdata/sf0.001"))
   lazy val spark: SparkSession = graft.LocalSpark.builder("graft-test", 4).getOrCreate()
+
+  /** The jobs `body` starts, each by the name of the stage it was
+    * submitted for, and the ids of the shuffle-map stages it runs. */
+  def jobsOf[T](body: => T): (T, Seq[String], Set[Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val shuffleStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.add(j.stageInfos.maxBy(_.stageId).name); ()
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskType == "ShuffleMapTask") { shuffleStages.add(t.stageId); () }
+    }
+    org.apache.spark.graft.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val out = try body finally {
+      org.apache.spark.graft.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    (out, jobs.asScala.toSeq, shuffleStages.asScala.toSet)
+  }
 }
 
 class PipelineSpec extends AnyFunSuite {
