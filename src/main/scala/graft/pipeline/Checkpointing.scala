@@ -1098,12 +1098,16 @@ object Checkpointing {
 
   /** The footer of one parquet file, read on the driver with the session's
     * Hadoop settings (what `spark.hadoop.*` sets, such as object-store
-    * credentials) — the settings Spark's own reads and writes use. */
+    * credentials) — the settings Spark's own reads and writes use. The
+    * read options come from the same settings: the one-argument `open`
+    * builds them from a new `Configuration`, which parses the Hadoop
+    * default resources again on every footer read. */
   private def withFooter[T](spark: SparkSession, path: HPath)(
       f: org.apache.parquet.hadoop.metadata.ParquetMetadata => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path,
-        spark.sparkContext.hadoopConfiguration))
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf, path).build())
     try f(r.getFooter) finally r.close()
   }
 

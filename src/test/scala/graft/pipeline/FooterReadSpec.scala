@@ -91,6 +91,41 @@ class FooterReadSpec extends AnyFunSuite {
       .map(p => new java.io.File(p).getName).filter(files.contains)
     assert(opened.sorted == files.sorted)
   }
+
+  test("a footer read takes its read options from the session's Hadoop " +
+      "settings") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    val dir = freshDir("footer-options")
+    spark.range(0, 10, 1, 1).write.parquet(dir)
+    val file = new java.io.File(dir).list().filter(_.endsWith(".parquet")).head
+    RecordingDecryptionFactory.asked.clear()
+    hc.set("parquet.crypto.factory.class",
+      classOf[RecordingDecryptionFactory].getName)
+    // the frame is built from the footer alone: no job reads the file
+    val df = try Checkpointing.readParquet(spark, dir)
+      finally hc.unset("parquet.crypto.factory.class")
+    import scala.jdk.CollectionConverters._
+    assert(RecordingDecryptionFactory.asked.asScala.toSeq
+      .map(p => new java.io.File(p).getName) == Seq(file))
+    assert(df.count() == 10)
+  }
+}
+
+/** A decryption-properties factory that records the files it is asked
+  * about and leaves them plaintext. */
+class RecordingDecryptionFactory
+    extends org.apache.parquet.crypto.DecryptionPropertiesFactory {
+  override def getFileDecryptionProperties(
+      conf: org.apache.hadoop.conf.Configuration,
+      path: org.apache.hadoop.fs.Path)
+      : org.apache.parquet.crypto.FileDecryptionProperties = {
+    RecordingDecryptionFactory.asked.add(path.toUri.getPath)
+    null
+  }
+}
+
+object RecordingDecryptionFactory {
+  val asked = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
 
 /** The local file system, recording the paths it opens. */
