@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.{Column, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{coalesce, col, count, lit, size, sum, when}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.functions.{ceil, coalesce, col, count, greatest, lit, size,
+  sum, when}
+import org.apache.spark.sql.internal.SQLConf
 import org.json4s.{JDecimal, JLong, JObject, JValue}
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods
@@ -34,10 +37,14 @@ import graft.pipeline.ExtractionPipeline.OutSpan
   * the resume filter reads.
   *
   * ONLY THE JOBS THAT DO WORK: the extraction's checkpoint, one write per
-  * table and, on a table with commits, the broadcast of its doc_ids. The
-  * input's and the tables' schemas come from parquet footers, not from
-  * inference jobs; whether anything is pending, and the run's counters,
-  * are observed on the checkpoint job itself, not probed by another.
+  * table and, on a table with commits, the broadcast of its doc_ids. None
+  * of them shuffles: each document is parsed and finished in the task that
+  * reads it, and each write coalesces the checkpoint to as many partitions
+  * as its bytes fill at AQE's advisory partition size, one file per table
+  * at ordinary run sizes. The input's and the tables' schemas come from
+  * parquet footers, not from inference jobs; whether anything is pending,
+  * and the run's counters, are observed on the checkpoint job itself, not
+  * probed by another.
   *
   * RESUMABLE BY CONSTRUCTION: every launch first settles a run an earlier
   * launch left staged — published in either table, it is published in the
@@ -47,8 +54,9 @@ import graft.pipeline.ExtractionPipeline.OutSpan
   * table) does incremental work, lands no document twice, and a completed
   * run is a cheap no-op. Emits one JSON metrics line on stdout: docs
   * committed this run, total committed, snapshot count, the counters
-  * observed on the extraction (docs in, their status split, spans out)
-  * and seconds.
+  * observed on the extraction (docs in, their status split, chunks parsed,
+  * criterion candidates, spans out), the part files per table and
+  * seconds.
   */
 object ExtractMain {
 
@@ -249,45 +257,62 @@ object ExtractMain {
 
   /** The counters observed on the extraction's checkpoint job, in the
     * order the run's JSON line lists them: documents in, their status
-    * split, and output spans. */
-  private val counters: Seq[(String, Column)] = Seq(
-    "docs_in" -> count(lit(1)),
-    "success" -> count(when(col("stat.status") === "success", true)),
-    "not_found" -> count(when(col("stat.status") === "not_found", true)),
-    "oversized_skip" -> count(when(col("stat.status") === "oversized_skip", true)),
-    "spans_out" -> coalesce(sum(size(col("spans"))), lit(0L)))
+    * split, the chunks the salted parse ran (`max(1, ceil(pages /
+    * saltPages))` per parsed document, as [[graft.pipeline.SaltedExtract]]
+    * chunks it), the criterion candidates it found, and output spans. */
+  private def counters(saltPages: Int): Seq[(String, Column)] = {
+    def status(s: String) = count(when(col("stat.status") === s, true))
+    def total(c: Column) = coalesce(sum(c), lit(0L))
+    Seq(
+      "docs_in" -> count(lit(1)),
+      "success" -> status("success"),
+      "not_found" -> status("not_found"),
+      "oversized_skip" -> status("oversized_skip"),
+      "chunks" -> total(when(col("stat.status") =!= "oversized_skip",
+        greatest(lit(1L), ceil(col("stat.page_size") / saltPages)))),
+      "candidates" -> total(col("stat.criterion_tables_count")),
+      "spans_out" -> total(size(col("spans"))))
+  }
 
   /** Lands `docs` as run `runId` in `<out>/spans` and `<out>/stats`;
-    * returns the stats rows (0, and no run, when `docs` is empty) and the
-    * [[counters]]. The per-document output is computed once, by an eager
-    * local checkpoint released on return; the counters are observed on
-    * that job, and "anything to land?" is read from them. Both tables stage
-    * concurrently, each projecting only the column it writes; when either
-    * stage fails, what the other staged is abandoned once both have ended.
-    * Then spans publish and stats publish. A failure from the first
-    * publish on is left to the next run's [[Checkpointing.settle]]. */
+    * returns the stats rows (0, and no run, when `docs` is empty), the
+    * [[counters]] and the part files each table's write produces at most.
+    * The per-document `stat` and `spans` are computed once, in the task
+    * that parses each document, by an eager local checkpoint released on
+    * return; the counters are observed on that job, and "anything to
+    * land?" is read from them. Both tables stage concurrently from the
+    * checkpoint coalesced by [[filesPerTable]], each projecting only the
+    * column it writes; when either stage fails, what the other staged is
+    * abandoned once both have ended. Then spans publish and stats publish.
+    * A failure from the first publish on is left to the next run's
+    * [[Checkpointing.settle]]. */
   private def land(docs: Dataset[DocRow], out: String, saltPages: Int,
       runId: String, audit: Boolean): (Long, Seq[(String, Long)]) = {
     val spark = docs.sparkSession
     import spark.implicits._
     val (spansDir, statsDir) = (s"$out/spans", s"$out/stats")
     val observed = Observation(s"land-$runId")
-    val metrics = counters.map { case (k, c) => c.as(k) }
+    val named = counters(saltPages)
+    val metrics = named.map { case (k, c) => c.as(k) }
     val outs = ExtractionPipeline.docOuts(docs, Some(saltPages))
+      .select("stat", "spans")
       .observe(observed, metrics.head, metrics.tail: _*)
       .localCheckpoint(eager = true)
     val seen = observed.get
-    val counts = counters.map { case (k, _) => k -> seen(k).asInstanceOf[Long] }
+    val counts = named.map { case (k, _) => k -> seen(k).asInstanceOf[Long] }
     val blocks = outs.queryExecution.logical.collectFirst {
       case r: LogicalRDD => r.rdd
     }.get
-    try if (counts.head._2 == 0L) (0L, counts) else {
+    try if (counts.head._2 == 0L) (0L, counts :+ ("files" -> 0L)) else {
+      val files = filesPerTable(blocks,
+        spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+      val written = outs.coalesce(files)
       // one thread per table: each write is mostly fixed driver and job
       // overhead, so the two overlap well. Each frame decodes only the
       // column it writes and re-encodes it, which keeps the encoder's
       // schema (a bare column projection would write nullable fields).
-      val spans = outs.select("spans").as[Seq[OutSpan]].flatMap(identity).toDF()
-      val stats = outs.select("stat.*").as[PaperStat].map(identity).toDF()
+      val spans = written.select("spans").as[Seq[OutSpan]].flatMap(identity).toDF()
+      val stats = written.select("stat.*").as[PaperStat].map(identity).toDF()
       val staged = Seq(spansDir -> spans, statsDir -> stats).map { case (dir, df) =>
         val task = new java.util.concurrent.FutureTask[Long](
           () => Checkpointing.stage(df, dir, runId))
@@ -320,7 +345,18 @@ object ExtractMain {
       }
       Checkpointing.publish(spansDir, runId)
       Checkpointing.publish(statsDir, runId)
-      (staged.last._2.get, counts)
+      (staged.last._2.get, counts :+ ("files" -> files.toLong))
     } finally blocks.unpersist(blocking = false)
+  }
+
+  /** The partitions each table write gets, so the most part files it can
+    * produce: the checkpoint's stored bytes over `target`, the size AQE
+    * aims a partition at (`spark.sql.adaptive.advisoryPartitionSizeInBytes`),
+    * at least 1 and never more than the checkpoint has. */
+  private def filesPerTable(blocks: RDD[_], target: Long): Int = {
+    val bytes = blocks.sparkContext.getRDDStorageInfo.find(_.id == blocks.id)
+      .fold(0L)(i => i.memSize + i.diskSize)
+    math.min(blocks.getNumPartitions.toLong,
+      math.max(1L, math.ceil(bytes.toDouble / target).toLong)).toInt
   }
 }

@@ -23,8 +23,30 @@ import graft.core.BoldDetector
   */
 object TableDetector {
 
-  private val RuleRe = "^\\+([-=]+\\+)+$".r
-  private def isRule(s: Span): Boolean = s.kind == "rule" && RuleRe.matches(s.text)
+  /** The column edges of `s` — the positions of its '+' — when it is a rule
+    * line: a "rule" span shaped `+` (`[-=]+` `+`)+, as "+----+====+". Null
+    * when it is not. The shape check and the edges are one pass over the
+    * text. */
+  private[layout] def ruleEdges(s: Span): Array[Int] = {
+    val t = s.text
+    if (s.kind != "rule" || t == null || t.length < 3 || t.charAt(0) != '+' ||
+        t.charAt(t.length - 1) != '+') return null
+    val edges = new scala.collection.mutable.ArrayBuilder.ofInt
+    var afterPlus = false
+    var p = 0
+    while (p < t.length) {
+      val c = t.charAt(p)
+      if (c == '+') {
+        if (afterPlus) return null
+        edges += p
+        afterPlus = true
+      } else if (c == '-' || c == '=') afterPlus = false
+      else return null
+      p += 1
+    }
+    edges.result()
+  }
+
   private def isRowLine(text: String): Boolean =
     text.length >= 2 && text.charAt(0) == '|' && text.charAt(text.length - 1) == '|'
 
@@ -34,16 +56,17 @@ object TableDetector {
     var i = 0
     while (i < spans.length) {
       val s = spans(i)
-      if (isRule(s)) {
+      val edges = ruleEdges(s)
+      if (edges != null) {
         // ---- ruled path: consume a grid block
-        val edges = plusPositions(s.text)
         var j = i + 1
         var lastRule = i
         var valid = true
         while (j < spans.length && valid) {
           val t = spans(j)
-          if (isRule(t)) {
-            if (plusPositions(t.text) == edges) { lastRule = j; j += 1 }
+          val tEdges = ruleEdges(t)
+          if (tEdges != null) {
+            if (java.util.Arrays.equals(tEdges, edges)) { lastRule = j; j += 1 }
             else valid = false // inconsistent grid: close at last consistent rule
           } else if (t.kind == "text" && isRowLine(t.text)) j += 1
           else valid = false
@@ -56,7 +79,7 @@ object TableDetector {
         // ---- whitespace-alignment path: consume the maximal plain-text run
         var j = i
         while (j < spans.length && spans(j).kind == "text" &&
-               !isRowLine(spans(j).text) && !isRule(spans(j))) j += 1
+               !isRowLine(spans(j).text)) j += 1
         if (j - i >= 3) parseAligned(page, spans, i, j).foreach(out += _)
         i = j
       } else i += 1
@@ -64,13 +87,12 @@ object TableDetector {
     out.result()
   }
 
-  private def plusPositions(rule: String): Vector[Int] =
-    rule.iterator.zipWithIndex.collect { case ('+', p) => p }.toVector
-
-  /** Parse the grid block spans[start..endRule] (both rule lines). */
+  /** Parse the grid block spans[start..endRule] (both rule lines; every
+    * "rule" span in it is a rule line with `edges`, every other span a row
+    * line). */
   private def parseGrid(
       page: Page, spans: Vector[Span], start: Int, endRule: Int,
-      edges: Vector[Int]): Option[DetectedTable] = {
+      edges: Array[Int]): Option[DetectedTable] = {
     if (edges.length < 2) return None
     val rows = Vector.newBuilder[Vector[String]]
     val bold = Set.newBuilder[(Int, Int)]
@@ -106,7 +128,7 @@ object TableDetector {
     var k = start
     while (k <= endRule) {
       val s = spans(k)
-      if (isRule(s)) closeGroup()
+      if (s.kind == "rule") closeGroup()
       else {
         // split the row line at the edges
         val line = s.text

@@ -13,24 +13,21 @@ import graft.layout._
   * loop: parse, merge its criterion table, write its stats back (steps 1-3
   * and 6), producing one [[DocOut]]:
   *
-  *   salted (saltPages = Some(n)):
-  *   docs ──flatMap(chunkDoc ► extractChunk)──► chunk rows             (narrow)
-  *        (PartialStat, candidates, media) per <= n-page chunk
-  *        ──groupByKey(doc_id)──mapGroups──► DocOut                   (1 shuffle,
-  *          reduceStats ► mergeDoc ► updateStat + outputSpans          chunk rows)
-  *   unsalted (saltPages = None):
-  *   docs ──map(extractDoc ► mergeDoc ► updateStat + outputSpans)──►  (narrow)
+  *   docs ──map(extract ► mergeDoc ► updateStat + outputSpans)──►    (narrow)
   *        DocOut
+  *     extract = SaltedExtract.extractDoc when salted (saltPages = Some(n):
+  *       chunkDoc ► extractChunk per <= n-page chunk, one at a time ►
+  *       reduce the partial stats), Extract.extractDoc otherwise
   *
   *   DocOut ──► stats / merged / outSpans                         (projections)
   *   merged ──flatMap(CorpusSheet.sheetRows)──► sheet rows             (narrow)
   *          ──map-column expansion over the distinct column names──► corpus DF
   *   corpus ──fuzzy L1 + ffill window + row_number──► pivot DF
   *
-  * Unpersisted, each output is its own plan: one shuffle per output on the
-  * salted path, none on the unsalted path; raw documents never shuffle.
-  * The corpus/pivot stages run at "sheet scale" (rows = extracted table
-  * rows, orders of magnitude smaller than the corpus). The ffill/No. window
+  * `stats`, `merged` and `outSpans` shuffle on neither path, so raw
+  * documents never shuffle. The corpus/pivot stages run at "sheet scale"
+  * (rows = extracted table rows, orders of magnitude smaller than the
+  * corpus). The ffill/No. window
   * is intentionally global-ordered — the reference's semantics (pandas
   * implicit row order, step_5_pivot_table.py:78-85) REQUIRE one total
   * order.
@@ -76,32 +73,37 @@ object ExtractionPipeline {
     def unpersist(): Unit = persisted.foreach(_.unpersist())
   }
 
-  /** The per-document dataset every output projects, built the way
-    * [[run]] builds it: one keyed pass on the salted path (`saltPages =
-    * Some(n)`, see [[SaltedExtract]]), a narrow map otherwise. Results are
+  /** The per-document extraction: [[SaltedExtract.extractDoc]] with
+    * `saltPages = Some(n)`, [[Extract.extractDoc]] otherwise. Results are
     * identical either way (asserted in SaltedExtractSpec). */
+  private def extractor(saltPages: Option[Int]): DocRow => Extract.ExtractResult =
+    saltPages match {
+      case Some(n) => SaltedExtract.extractDoc(_, n)
+      case None => Extract.extractDoc(_)
+    }
+
+  /** The per-document dataset every output projects, built the way
+    * [[run]] builds it: one narrow map that finishes each document in the
+    * task that parses it, salted or not. */
   def docOuts(docs: Dataset[DocRow], saltPages: Option[Int]): Dataset[DocOut] = {
     import docs.sparkSession.implicits._
-    saltPages match {
-      case Some(n) => SaltedExtract.docOuts(SaltedExtract.chunkRows(docs, n))
-      case None => docs.map { d =>
-        val r = Extract.extractDoc(d)
-        docOut(r.stat, r.candidates, r.media)
-      }
+    val extract = extractor(saltPages)
+    docs.map { d =>
+      val r = extract(d)
+      docOut(r.stat, r.candidates, r.media)
     }
   }
 
-  /** @param saltPages when set, oversized documents are split into
-    *                   page-aligned chunks of at most this many pages before
-    *                   extraction (bounded per-task layout state — the skew
-    *                   path; see [[SaltedExtract]]).
+  /** @param saltPages when set, documents are parsed in page-aligned chunks
+    *                   of at most this many pages (bounded per-task layout
+    *                   state — the skew path; see [[SaltedExtract]]).
     * @param persistIntermediate persist the per-document dataset, so a
     *                   caller reading several outputs parses once; a caller
     *                   reading one output once opts out. [[graft.ExtractMain]]
     *                   does not come through here: it lands both tables from
-    *                   one eager local checkpoint of [[docOuts]], which keeps
-    *                   the plan's AQE-coalesced partitioning where a persist
-    *                   would not (one file per shuffle partition per table). */
+    *                   one eager local checkpoint of [[docOuts]]' `stat` and
+    *                   `spans`, whose size sets how many files each table
+    *                   write produces. */
   def run(spark: SparkSession, docs: Dataset[DocRow],
       saltPages: Option[Int] = None,
       persistIntermediate: Boolean = true): Result = {
@@ -109,10 +111,8 @@ object ExtractionPipeline {
 
     // candidates keep their own lineage (a second parse when read): only
     // the candidate-table query and tests read them
-    val candidates = saltPages match {
-      case Some(n) => SaltedExtract.chunkRows(docs, n).flatMap(_._2)
-      case None => docs.flatMap(d => Extract.extractDoc(d).candidates)
-    }
+    val extract = extractor(saltPages)
+    val candidates = docs.flatMap(d => extract(d).candidates)
     val outs0 = docOuts(docs, saltPages)
     val outs =
       if (persistIntermediate)

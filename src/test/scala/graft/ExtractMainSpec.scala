@@ -119,25 +119,38 @@ class ExtractMainSpec extends AnyFunSuite {
       JsonMethods.parse(buf.toString("UTF-8")).asInstanceOf[JObject].obj
         .collect { case (k, JInt(v)) => k -> v }.toMap
     }
-    /** The counters the stats and spans that run `seq` added give. */
-    def committed(seq: Int): Map[String, BigInt] = {
+    /** The counters the stats and spans that run `seq` added give, with
+      * the chunks its `batch` of documents parses into and the files of
+      * its stats commit. */
+    def committed(seq: Int, batch: Seq[graft.layout.DocRow]): Map[String, BigInt] = {
       def added(t: String) =
         Checkpointing.changesBetween(spark, s"$out/$t", seq - 1, seq)
       val split = added("stats").groupBy("status").count().as[(String, Long)]
         .collect().toMap
+      val candidates = added("stats")
+        .agg(org.apache.spark.sql.functions.sum("criterion_tables_count"))
+        .as[Long].head()
       Map("docs_in" -> BigInt(added("stats").count()),
-        "spans_out" -> BigInt(added("spans").count())) ++
+        "chunks" -> BigInt(batch.map(graft.pipeline.SaltedExtract.chunkDoc(_, 16).size).sum),
+        "candidates" -> BigInt(candidates),
+        "spans_out" -> BigInt(added("spans").count()),
+        "files" -> BigInt(Checkpointing.snapshots(s"$out/stats")
+          .find(_.seq == seq).get.files.size)) ++
         Seq("success", "not_found", "oversized_skip")
           .map(k => k -> BigInt(split.getOrElse(k, 0L)))
     }
-    val keys = Set("docs_in", "success", "not_found", "oversized_skip", "spans_out")
+    val keys = Set("docs_in", "success", "not_found", "oversized_skip", "chunks",
+      "candidates", "spans_out", "files")
     spark.createDataset(docs.take(9)).write.parquet(input)
     val first = counted().filter(c => keys(c._1))
     spark.createDataset(docs.drop(9)).write.mode("append").parquet(input)
     val second = counted().filter(c => keys(c._1))
-    assert(first == committed(1) && first("docs_in") == 9)
-    assert(second == committed(2) && second("docs_in") == docs.size - 9)
+    assert(first == committed(1, docs.take(9)) && first("docs_in") == 9)
+    assert(second == committed(2, docs.drop(9)) && second("docs_in") == docs.size - 9)
     assert(Seq(first, second).map(c => c("success") + c("not_found")).forall(_ > 0))
+    // F14 parses as 13 chunks; the first batch holds criterion tables
+    assert(second("chunks") > second("docs_in") && first("candidates") > 0)
+    assert(Seq(first, second).forall(_("files") == 1))
     // nothing pending: nothing counted
     assert(counted().filter(c => keys(c._1)).values.toSet == Set(BigInt(0)))
   }
@@ -164,7 +177,7 @@ class ExtractMainSpec extends AnyFunSuite {
     val ran = stdout(ExtractMain.run(spark, input, out, saltPages = 16))
     assert(ran.map(_.obj.map(_._1)) == Seq(List("run", "docs_committed",
       "total_committed", "snapshots", "docs_in", "success", "not_found",
-      "oversized_skip", "spans_out", "seconds")))
+      "oversized_skip", "chunks", "candidates", "spans_out", "files", "seconds")))
     assert(ran.head \ "docs_committed" == JInt(4))
     val snaps = stdout(ExtractMain.maintain(spark, out, Array("snapshots")))
     assert(snaps.map(_ \ "table") == Seq(JString("stats"), JString("spans")))
@@ -273,8 +286,7 @@ class ExtractMainLandingSpec extends AnyFunSuite {
     assert(markers(out2).isEmpty)
   }
 
-  test("a fresh run shuffles the extraction once and releases what it " +
-      "materializes") {
+  test("a fresh run shuffles nothing and releases what it materializes") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val base = java.nio.file.Files.createTempDirectory("graft-emonce").toString
     spark.createDataset(docs).write.parquet(s"$base/in")
@@ -293,24 +305,23 @@ class ExtractMainLandingSpec extends AnyFunSuite {
       org.apache.spark.graft.ListenerBusDrain(sc)
       sc.removeSparkListener(listener)
     }
-    // the extraction's groupByKey; with a probe for pending docs, one
-    // extraction per table and a count of the head, a run shuffled 4 times
-    assert(shuffleStages.size == 1, shuffleStages)
+    // each document is finished in the task that parses it: no stage of
+    // the run writes shuffle output
+    assert(shuffleStages.isEmpty, shuffleStages)
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
     assert(left.isEmpty, left.values.map(r => s"${r.id} ${r.name}").mkString("; "))
     assert(!cacheWasEmpty || spark.sharedState.cacheManager.isEmpty)
   }
 }
 
-/** A run starts only the jobs that do work: the extraction's checkpoint
-  * (a shuffle-map job and its result job), one write per table, and on a
-  * resumed run the broadcast of the committed doc_ids. */
+/** A run starts only the jobs that do work: the extraction's checkpoint,
+  * one write per table, and on a resumed run the broadcast of the
+  * committed doc_ids. */
 class ExtractMainJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("a fresh run starts 4 jobs and a resumed run 5, neither a schema " +
-      "inference nor an emptiness probe; a resumed run shuffles once") {
+  test("a fresh run starts 3 jobs and a resumed run 4, none a shuffle") {
     val docs = graft.layout.FixtureCorpus.fixtureDocs
     val base = java.nio.file.Files.createTempDirectory("graft-emjobs").toString
     val (input, out) = (s"$base/in", s"$base/out")
@@ -320,16 +331,53 @@ class ExtractMainJobsSpec extends AnyFunSuite {
     val (_, fresh, freshShuffles) = jobsOfRun()
     spark.createDataset(docs.drop(8)).write.mode("append").parquet(input)
     val (_, resumed, resumedShuffles) = jobsOfRun()
-    Seq(fresh -> 4, resumed -> 5).foreach { case (jobs, n) =>
+    Seq(fresh -> 3, resumed -> 4).foreach { case (jobs, n) =>
       assert(jobs.size == n, jobs)
-      // the two table writes are the only parquet jobs
+      // the two table writes are the only parquet jobs: no schema inference
       assert(jobs.count(_.startsWith("parquet at")) == 2, jobs)
       assert(jobs.filter(_.startsWith("parquet at"))
         .forall(_.startsWith("parquet at Checkpointing")), jobs)
+      // and no emptiness probe
       assert(!jobs.exists(_.contains("isEmpty")), jobs)
     }
-    assert(freshShuffles.size == 1 && resumedShuffles.size == 1,
+    assert(freshShuffles.isEmpty && resumedShuffles.isEmpty,
       (freshShuffles, resumedShuffles))
+  }
+
+  test("one part file per table; a smaller advisory size splits the writes") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    import graft.pipeline.Checkpointing
+    val docs = graft.layout.FixtureCorpus.fixtureDocs
+    val base = java.nio.file.Files.createTempDirectory("graft-emfiles").toString
+    val input = s"$base/in"
+    spark.createDataset(docs).repartition(4).write.parquet(input)
+    val inputPartitions = spark.read.parquet(input).rdd.getNumPartitions
+    assert(inputPartitions > 1, inputPartitions)
+    /** Lands the input in a fresh root: the run's `files` and, per table,
+      * the part files written and the committed rows. */
+    def land(out: String) = {
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(buf)(ExtractMain.run(spark, input, out, saltPages = 16))
+      val files = JsonMethods.parse(buf.toString("UTF-8")) \ "files"
+      files -> Seq("spans", "stats").map { t =>
+        val parts = new java.io.File(s"$out/$t").list().count(_.startsWith("part-"))
+        val rows = Checkpointing.readAt(spark, s"$out/$t", 1).collect()
+          .map(_.toString).sorted.toSeq
+        (t, parts, rows)
+      }
+    }
+    val (files, plain) = land(s"$base/plain")
+    assert(files == JInt(1) && plain.forall(_._2 == 1), plain.map(_._2))
+    val (splitFiles, split) = graft.ScopedConf(spark,
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k") {
+      land(s"$base/split")
+    }
+    val statsFiles = split.find(_._1 == "stats").get._2
+    assert(splitFiles == JInt(statsFiles) && statsFiles > 1, split.map(_._2))
+    assert(split.forall(_._2 <= inputPartitions), (split.map(_._2), inputPartitions))
+    assert(split.map(t => (t._1, t._3)) == plain.map(t => (t._1, t._3)))
+    assert(plain.forall(_._3.nonEmpty))
   }
 }
 

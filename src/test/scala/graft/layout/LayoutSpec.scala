@@ -113,6 +113,42 @@ class TableDetectorSpec extends AnyFunSuite {
       assert(tables.head.body == expected)
     }
   }
+
+  test("one-pass rule edges agree with the regex and '+' scan they replace") {
+    // the detector's former rule check and column edges
+    val ruleRe = "^\\+([-=]+\\+)+$".r
+    def oldEdges(s: Span): Option[Vector[Int]] =
+      if (s.kind == "rule" && ruleRe.matches(s.text))
+        Some(s.text.iterator.zipWithIndex.collect { case ('+', p) => p }.toVector)
+      else None
+    def newEdges(s: Span) = Option(TableDetector.ruleEdges(s)).map(_.toVector)
+    val fixtureSpans = (FixtureCorpus.fixtureDocs ++
+      (0 until 20).map(FixtureCorpus.scaledDoc(_, 7L))).flatMap(_.spans)
+    assert(fixtureSpans.count(s => oldEdges(s).nonEmpty) > 100)
+    fixtureSpans.filter(_.text != null).foreach { s =>
+      assert(newEdges(s) == oldEdges(s), s)
+    }
+    val ruleish = Gen.listOf(Gen.frequency(
+      6 -> Gen.const('-'), 2 -> Gen.const('='), 3 -> Gen.const('+'),
+      1 -> Gen.oneOf('|', ' ', 'x', '*'))).map(_.mkString)
+    val texts = Gen.oneOf(ruleish, ruleish.map("+" + _ + "+"),
+      Gen.listOf(Gen.choose(1, 6).map("-" * _)).map(_.mkString("+", "+", "+")))
+    val spans = for {
+      kind <- Gen.frequency(8 -> Gen.const("rule"), 1 -> Gen.const("text"))
+      text <- texts
+    } yield Span(kind, text, null, 0)
+    var rules = 0
+    forAllSeeded(spans, n = 600) { s =>
+      assert(newEdges(s) == oldEdges(s), s)
+      if (oldEdges(s).nonEmpty) rules += 1
+    }
+    // both outcomes are exercised, and the malformed shapes by name
+    assert(rules > 100 && rules < 550, rules)
+    Seq("", "+", "++", "+-", "-+", "+--++", "+-+-", "+- -+", "+-=+",
+        "+==+--+", "+-+\n").foreach { t =>
+      assert(newEdges(Span("rule", t, null, 0)) == oldEdges(Span("rule", t, null, 0)), t)
+    }
+  }
 }
 
 class ContextSpec extends AnyFunSuite {

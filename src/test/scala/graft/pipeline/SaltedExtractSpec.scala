@@ -58,6 +58,15 @@ class SaltedExtractSpec extends AnyFunSuite {
     assert(a.toVector == ref.map(_._1) && b.toVector == ref.map(_._1))
     val refSpans = ref.flatMap(_._2).sortBy(s => (s.doc_id, s.ord))
     assert(sa == refSpans && sb == refSpans)
+
+    // the per-document function itself: the salted extraction of each
+    // fixture document equals the unsalted one, F14 parsed in 13 chunks
+    FixtureCorpus.fixtureDocs.foreach { d =>
+      val (p, q) = (Extract.extractDoc(d), SaltedExtract.extractDoc(d, maxPages = 16))
+      assert(q.stat == p.stat, d.doc_id)
+      assert(q.candidates.map(candKey) == p.candidates.map(candKey), d.doc_id)
+      assert(q.media == p.media, d.doc_id)
+    }
   }
 
   test("salted path applies the span budget to the WHOLE doc, matching unsalted") {
@@ -65,15 +74,19 @@ class SaltedExtractSpec extends AnyFunSuite {
       Span("page", "1", null, 0) +:
         (1 to 20000).map(i => Span("text", s"line$i", null, i)).toVector)
     val docs = spark.createDataset(Seq(bomb, FixtureCorpus.f01))
-    val rows = SaltedExtract.chunkRows(docs, maxPages = 16, spanBudget = 10000)
-    val outs = SaltedExtract.docOuts(rows).collect()
+    val extract = (d: DocRow) =>
+      SaltedExtract.extractDoc(d, maxPages = 16, spanBudget = 10000)
+    val outs = docs.map { d =>
+      val r = extract(d)
+      ExtractionPipeline.docOut(r.stat, r.candidates, r.media)
+    }.collect()
     val byId = outs.map(o => o.stat.doc_id -> o.stat).toMap
     assert(byId("98.bomb.pdf") == Extract.extractDoc(bomb, spanBudget = 10000).stat)
     assert(byId("98.bomb.pdf").status == "oversized_skip")
     assert(byId("1.f01_clean.pdf").status == "success")
     // the bomb contributes no candidates or media downstream
-    val parts = rows.collect().filter(_._1.doc_id == "98.bomb.pdf")
-    assert(parts.forall(p => p._2.isEmpty && p._3.isEmpty))
+    val parts = docs.collect().filter(_.doc_id == "98.bomb.pdf").map(extract)
+    assert(parts.forall(p => p.candidates.isEmpty && p.media.isEmpty))
     assert(outs.filter(_.stat.doc_id == "98.bomb.pdf")
       .forall(o => o.merged.isEmpty && o.spans.isEmpty))
   }
