@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.Query
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
@@ -533,12 +534,8 @@ object Bench {
     // computed — count() lets Catalyst prune projection work and
     // undercounts.
     val spark = session(cpus)
-    // comma-separated substring filter, iteration aid
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.split(',').exists(n.contains)) }
     (1 to queryRounds).foreach { round =>
-      names.foreach { case (name, fn) =>
+      SparkEntry.selected.foreach { case Query(name, fn, _) =>
         // x* queries are fixture/correctness surfaces (x11 re-runs the
         // pipeline twice, x13/x15 replay streaming queries) — min over 2
         // rounds (round 2 confirms round 1 wasn't an interference

@@ -10,6 +10,7 @@ import org.json4s.{JDecimal, JLong, JObject, JValue}
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods
 import scala.util.{Failure, Success, Try}
+import graft.io.Parquet
 import graft.layout.{DocRow, PaperStat}
 import graft.pipeline.{Checkpointing, ExtractionPipeline}
 import graft.pipeline.ExtractionPipeline.OutSpan
@@ -113,7 +114,7 @@ object ExtractMain {
     import spark.implicits._
     val times = (1 to reps).map { rep =>
       val t0 = System.nanoTime()
-      val docs = Checkpointing.readParquet(spark, input).as[DocRow]
+      val docs = Parquet.read(spark, input).as[DocRow]
       sinkDir match {
         case Some(base) =>
           land(docs, s"$base/rep$rep", saltPages, f"bench$rep%02d", audit = false)
@@ -239,7 +240,7 @@ object ExtractMain {
     val t0 = System.nanoTime()
     val statsDir = s"$out/stats"
     Checkpointing.settle(Seq(s"$out/spans", statsDir))
-    val docs = Checkpointing.readParquet(spark, input).as[DocRow]
+    val docs = Parquet.read(spark, input).as[DocRow]
     val pending = Checkpointing.resumeFilter(spark, docs, statsDir)
     val runId = java.util.UUID.randomUUID().toString.take(8)
     val (committed, counts) = land(pending, out, saltPages, runId, audit)

@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.Query
+
 /** Dev tool for the optimization rounds (guide §1.1/§7.2): dump
   * `.explain("formatted")` for declared queries to files, so plan shapes
   * (Exchange count, join strategy, PushedFilters/ReadSchema) can be
@@ -18,14 +20,11 @@ object PlanDump {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_OUT", "/root/repo/plans/r06")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLANS_SUFFIX", "before")
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
     val spark = LocalSpark.builder("graft-plandump", cpus).getOrCreate()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.split(',').exists(n.contains)) }
-    names.foreach { case (name, fn) =>
+    SparkEntry.selected.foreach { case Query(name, build, _) =>
       try {
-        val df = fn(spark, sfDir)
+        val df = build(spark, sfDir)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.writeString(

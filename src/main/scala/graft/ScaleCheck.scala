@@ -81,8 +81,8 @@ object ScaleCheck {
     val corpusLines = scala.collection.mutable.ArrayBuffer[String]()
 
     args.foreach { dir =>
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+      val docs = graft.io.Parquet.read(spark, s"$dir/documents.parquet")
+      val emb = graft.io.Parquet.read(spark, s"$dir/embeddings.parquet")
       val nDocs = docs.count()
       val nVecs = emb.count()
       val nLists = Similarity.adaptiveLists(nVecs)
@@ -179,18 +179,18 @@ object ScaleCheck {
         val (tIP, cIP) = timed { () =>
           Dedup.incrementalMinhashPairs(corpusOnly, delta,
             minJaccardBp = 2000L,
-            prebuiltIndex = Some(spark.read.parquet(s"$scratch/index")))
+            prebuiltIndex = Some(graft.io.Parquet.read(spark, s"$scratch/index")))
             .count()
         }
         ingestPairTime = math.min(ingestPairTime, tIP); nDeltaPairs = cIP
         val pairs = Dedup.incrementalMinhashPairs(corpusOnly, delta,
             minJaccardBp = 2000L,
-            prebuiltIndex = Some(spark.read.parquet(s"$scratch/index")))
+            prebuiltIndex = Some(graft.io.Parquet.read(spark, s"$scratch/index")))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         pairs.count()
         val (tF, cF) = timed { () =>
           Components.incrementalComponents(
-            spark.read.parquet(s"$scratch/prior"), pairs, "doc_a", "doc_b")(_.count())
+            graft.io.Parquet.read(spark, s"$scratch/prior"), pairs, "doc_a", "doc_b")(_.count())
         }
         pairs.unpersist()
         foldTime = math.min(foldTime, tF); nLabeled = cF

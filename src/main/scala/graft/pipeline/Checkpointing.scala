@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.layout.DocRow
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.hadoop.fs.{Path => HPath}
+import graft.io.Parquet
 
 /** Checkpoint/resume semantics — the Spark analog of the reference's
   * per-paper incremental commits and status-column scans
@@ -222,14 +222,14 @@ object Checkpointing {
       s"snapshot $version is expired (files rewritten by compaction): " +
         missing.take(3).mkString(", "))
     val delSets = effective.flatMap(s => s.deletes.map(d => (s.seq, d)))
-    if (delSets.isEmpty) readParquet(spark, files: _*)
+    if (delSets.isEmpty) Parquet.read(spark, files: _*)
     else {
       val missingDels = delSets.map(_._2)
         .filterNot(d => Files.exists(Paths.get(s"${dir}_deletes/$d")))
       require(missingDels.isEmpty, s"snapshot $version is expired (delete " +
         s"sets removed by vacuum/compaction): ${missingDels.mkString(", ")}")
       val dataLegs = effective.filter(_.files.nonEmpty)
-        .map(s => readParquet(spark, s.files.map(n => s"$dir/$n"): _*)
+        .map(s => Parquet.read(spark, s.files.map(n => s"$dir/$n"): _*)
           .withColumn("_commit_seq", lit(s.seq)))
       require(dataLegs.nonEmpty, s"snapshot $version has delete sets but no " +
         "data files — nothing to apply them to (table schema unknown)")
@@ -249,7 +249,7 @@ object Checkpointing {
     * read glob characters in that name as a pattern, so they are escaped. */
   private def readDeleteSet(spark: SparkSession, dir: String,
       name: String): DataFrame =
-    readParquet(spark, s"${dir}_deletes/" +
+    Parquet.read(spark, s"${dir}_deletes/" +
       name.replaceAll("""([\\{}\[\]*?])""", """\\$1"""))
 
   /** The manifest-stats file-skipping decision for a `spec`-column range
@@ -345,7 +345,7 @@ object Checkpointing {
     val missing = files.filterNot(f => Files.exists(Paths.get(f)))
     require(missing.isEmpty, s"delta files rewritten by a later compaction: " +
       missing.take(3).mkString(", "))
-    readParquet(spark, files: _*)
+    Parquet.read(spark, files: _*)
   }
 
   /** Iceberg DESCRIBE HISTORY: the snapshot log as a DataFrame — the
@@ -387,7 +387,7 @@ object Checkpointing {
     val legs = range.flatMap { s =>
       val ins =
         if (s.files.isEmpty) Nil
-        else Seq(readParquet(spark, s.files.map(n => s"$dir/$n"): _*)
+        else Seq(Parquet.read(spark, s.files.map(n => s"$dir/$n"): _*)
           .withColumn("_change_type", lit("insert"))
           .withColumn("_commit_seq", lit(s.seq)))
       val del =
@@ -483,7 +483,7 @@ object Checkpointing {
       s"delete set $runId already exists at $delDir")
     keys.coalesce(1).write.parquet(delDir)
     val n = parquetNames(delDir).toSeq
-      .map(f => footerStats(keys.sparkSession, s"$delDir/$f", "doc_id")._1).sum
+      .map(f => Parquet.footerStats(keys.sparkSession, s"$delDir/$f", "doc_id")._1).sum
     if (n == 0) {
       deleteRecursively(new java.io.File(delDir))
       require(n > 0, s"delete set $runId matched no doc_ids — refusing to " +
@@ -890,7 +890,7 @@ object Checkpointing {
       // committed rows — the raw-dir legacy fallback must not count them
       else if (stagedIn(committedDir, Set.empty).nonEmpty) None
       else if (Files.exists(Paths.get(committedDir)))
-        Some(readParquet(spark, committedDir))
+        Some(Parquet.read(spark, committedDir))
       else None
     // a broadcast anti-join gives the same rows whether or not the build
     // side repeats a key, so the committed ids are not de-duplicated (a
@@ -941,7 +941,7 @@ object Checkpointing {
     // would duplicate rows), and live delete sets must be materialized
     // into the rewrite — readAt(latest) is both, by definition
     val df = if (snaps.nonEmpty) readLogAt(spark, dir, snaps, snaps.last.seq)
-             else readParquet(spark, dir)
+             else Parquet.read(spark, dir)
     val tmp = s"${dir}_compact-$runId"
     // the rewrite CLUSTERS by doc_ord when the column exists (Iceberg's
     // rewrite_data_files with a sort order): range partitioning gives the
@@ -1039,14 +1039,14 @@ object Checkpointing {
     val m = manifestDir(dir)
     if (snapshotFiles(m).isEmpty && filesBefore.nonEmpty) {
       val legacyRows = filesBefore.toSeq
-        .map(n => footerStats(spark, s"$dir/$n", statsCol)._1).sum
+        .map(n => Parquet.footerStats(spark, s"$dir/$n", statsCol)._1).sum
       writeSnapshot(m, Snapshot(1, "legacy-adopt", filesBefore.toSeq,
         legacyRows))
     }
     df.write.mode(SaveMode.Append).parquet(dir)
     val added = (parquetNames(dir) -- filesBefore).toSeq.sorted
     // per-file rows + statsCol ranges from the footers (metadata-only)
-    val perFile = added.map(n => n -> footerStats(spark, s"$dir/$n", statsCol))
+    val perFile = added.map(n => n -> Parquet.footerStats(spark, s"$dir/$n", statsCol))
     if (writeManifest) {
       Files.createDirectories(m.toPath)
       val lines = perFile.map { case (name, (rows, range)) =>
@@ -1063,99 +1063,6 @@ object Checkpointing {
       case (n, (_, Some((mn, mx)))) => n -> (mn, mx)
     }.toMap
     (rows, added, stats)
-  }
-
-  /** Footer metadata of one freshly-written parquet file: (rowCount,
-    * Option(min, max) of `statsCol` across its row groups). Metadata-only —
-    * no Spark job, no data pages read. Stats are absent (conservative: the
-    * file is never pruned) when the column is missing, non-long, or has no
-    * non-null values. */
-  private def footerStats(spark: SparkSession, path: String, statsCol: String)
-      : (Long, Option[(Long, Long)]) = {
-    import scala.jdk.CollectionConverters._
-    withFooter(spark, new HPath(path)) { footer =>
-      val blocks = footer.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      val ranges = blocks.flatMap { b =>
-        b.getColumns.asScala
-          .find(_.getPath.toDotString == statsCol)
-          .flatMap { c =>
-            val s = c.getStatistics
-            if (s == null || !s.hasNonNullValue) None
-            else (s.genericGetMin, s.genericGetMax) match {
-              case (mn: java.lang.Long, mx: java.lang.Long) =>
-                Some((mn.longValue, mx.longValue))
-              case _ => None
-            }
-          }
-      }
-      val range =
-        if (ranges.isEmpty) None
-        else Some((ranges.map(_._1).min, ranges.map(_._2).max))
-      (rows, range)
-    }
-  }
-
-  /** The footer of one parquet file, read on the driver with the session's
-    * Hadoop settings (what `spark.hadoop.*` sets, such as object-store
-    * credentials) — the settings Spark's own reads and writes use. The
-    * read options come from the same settings: the one-argument `open`
-    * builds them from a new `Configuration`, which parses the Hadoop
-    * default resources again on every footer read. */
-  private def withFooter[T](spark: SparkSession, path: HPath)(
-      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => T): T = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
-      org.apache.parquet.HadoopReadOptions.builder(conf, path).build())
-    try f(r.getFooter) finally r.close()
-  }
-
-  /** The footer key under which Spark's parquet writer stores the schema it
-    * wrote; Spark's schema inference reads the same key. */
-  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
-
-  /** The one parquet read of the table verbs and of [[graft.ExtractMain]]'s
-    * input: `paths` (files, or directories of files) read under the schema
-    * Spark's writer stored in the footer of the first file — the file and
-    * the key Spark's own schema inference reads, so the frame is the same,
-    * but building it runs no inference job. It is Spark's inferring read
-    * where that schema is not at hand: schema merging is on, the first
-    * directory holds subdirectories or summary files, or the footer has no
-    * Spark schema (a file another writer wrote). */
-  private[graft] def readParquet(spark: SparkSession, paths: String*): DataFrame =
-    footerSchema(spark, paths) match {
-      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
-
-  /** The schema [[readParquet]] reads `paths` under, when it is at hand. */
-  private def footerSchema(spark: SparkSession, paths: Seq[String])
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val merging = spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean
-    if (paths.isEmpty || merging) None
-    else scala.util.Try {
-      val root = new HPath(paths.head)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // a glob (an escaped name, too) resolves as Spark resolves it
-      val first = Option(fs.globStatus(root)).flatMap(_.headOption).flatMap { st =>
-        if (!st.isDirectory) Some(st.getPath)
-        else {
-          val children = fs.listStatus(st.getPath).toSeq
-          if (children.exists(c => c.isDirectory ||
-              Set("_metadata", "_common_metadata")(c.getPath.getName))) None
-          else children.map(_.getPath).find { p =>
-            !p.getName.startsWith("_") && !p.getName.startsWith(".")
-          }
-        }
-      }
-      first.flatMap { f =>
-        Option(withFooter(spark, f)(
-          _.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)))
-      }.map(org.apache.spark.sql.types.DataType.fromJson).collect {
-        case s: org.apache.spark.sql.types.StructType => s
-      }
-    }.toOption.flatten
   }
 
   // --------------------------------------------------- write-audit-publish
@@ -1215,7 +1122,7 @@ object Checkpointing {
   def readStaged(spark: SparkSession, dir: String, runId: String): DataFrame = {
     val st = stagedBatch(dir, runId)
     val snaps = snapshots(dir)
-    val batch = readParquet(spark, st.files.map(n => s"$dir/$n"): _*)
+    val batch = Parquet.read(spark, st.files.map(n => s"$dir/$n"): _*)
     if (snaps.isEmpty) batch
     else readLogAt(spark, dir, snaps, snaps.last.seq).unionByName(batch)
   }

@@ -77,11 +77,11 @@ private[streaming] object Replay {
     /** Every version read as one frame; None before the first write. */
     def union(spark: SparkSession): Option[DataFrame] = {
       val vs = versions
-      if (vs.isEmpty) None else Some(spark.read.parquet(vs.map(dir): _*))
+      if (vs.isEmpty) None else Some(graft.io.Parquet.read(spark, vs.map(dir): _*))
     }
 
     /** The last version; None before the first write. */
     def latest(spark: SparkSession): Option[DataFrame] =
-      versions.lastOption.map(v => spark.read.parquet(dir(v)))
+      versions.lastOption.map(v => graft.io.Parquet.read(spark, dir(v)))
   }
 }

@@ -38,7 +38,7 @@ object StreamClassifier {
     // train once, persist: the artifact a production ingest reads
     Classifier.trainTokenLr(Classifier.seedLabeled(corpus, threshBp))
       .write.mode("overwrite").parquet(s"$workDir/model")
-    val model = spark.read.parquet(s"$workDir/model")
+    val model = graft.io.Parquet.read(spark, s"$workDir/model")
     val out = Replay.Versioned(s"$workDir/out")
     Replay.replay(spark, batches)(_.toDF().writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

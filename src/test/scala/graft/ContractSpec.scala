@@ -16,6 +16,24 @@ class ContractSpec extends AnyFunSuite {
     assert(q == o, s"only-query=${(q -- o).toSeq.sorted} only-oracle=${(o -- q).toSeq.sorted}")
   }
 
+  test("the catalogue refuses a name declared twice") {
+    val q = SparkEntry.catalogue.head
+    val e = intercept[IllegalArgumentException](
+      graft.queries.Query.catalogue(Seq(q), SparkEntry.catalogue.take(3), Seq(q.copy())))
+    assert(e.getMessage.contains(q.name))
+    assert(SparkEntry.catalogue.map(_.name).distinct.size == SparkEntry.catalogue.size)
+  }
+
+  test("plain queries of every family build without a Spark job") {
+    val s = TestSpark.spark
+    Seq("q01_pricing_summary", "q12_text_profile", "q15_minhash_lsh_pairs",
+        "q40_bm25_search", "q85_hybrid_rrf", "x37_sql_surface",
+        "x04_fixture_month").foreach { name =>
+      val (_, jobs, _) = TestSpark.jobsOf(SparkEntry.queries(name)(s, TestSpark.sfDir))
+      assert(jobs.isEmpty, s"$name: $jobs")
+    }
+  }
+
   test("every query's schema has unique, non-empty, case-distinct column names") {
     val sf = TestSpark.sfDir
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

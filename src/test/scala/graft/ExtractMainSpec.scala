@@ -287,24 +287,13 @@ class ExtractMainLandingSpec extends AnyFunSuite {
   }
 
   test("a fresh run shuffles nothing and releases what it materializes") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val base = java.nio.file.Files.createTempDirectory("graft-emonce").toString
     spark.createDataset(docs).write.parquet(s"$base/in")
     val sc = spark.sparkContext
     val cacheWasEmpty = spark.sharedState.cacheManager.isEmpty
     val before = sc.getPersistentRDDs.keySet
-    val shuffleStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskType == "ShuffleMapTask") { shuffleStages.add(t.stageId); () }
-    }
-    org.apache.spark.graft.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try ExtractMain.run(spark, s"$base/in", s"$base/out", saltPages = 16)
-    finally {
-      org.apache.spark.graft.ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
+    val shuffleStages = JobCounts.of(spark)(
+      ExtractMain.run(spark, s"$base/in", s"$base/out", saltPages = 16))._2.shuffleStages
     // each document is finished in the task that parses it: no stage of
     // the run writes shuffle output
     assert(shuffleStages.isEmpty, shuffleStages)

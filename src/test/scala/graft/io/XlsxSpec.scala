@@ -8,7 +8,7 @@ class XlsxSpec extends AnyFunSuite {
 
   test("pivot sheet round-trips through the xlsx sink (S5 parity)") {
     import spark.implicits._
-    val pivot = graft.FixtureQueries.result(spark).pivot
+    val pivot = graft.queries.Fixture.result(spark).pivot
     val path = java.nio.file.Files.createTempDirectory("graft-xlsx")
       .resolve("pivot.xlsx").toString
     Xlsx.write(pivot, path)

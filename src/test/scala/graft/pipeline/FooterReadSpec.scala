@@ -3,9 +3,9 @@ package graft.pipeline
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
 
-/** The table verbs learn a frame's schema from the footer Spark's writer
-  * left, so building a frame runs no Spark job, and the schema is the one
-  * Spark's own inference gives. */
+/** The table verbs and the driver-table reads learn a frame's schema from
+  * one parquet footer, so building a frame runs no Spark job, and the
+  * schema is the one Spark's own inference gives. */
 class FooterReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -69,6 +69,17 @@ class FooterReadSpec extends AnyFunSuite {
     assert(frames("readStaged nothing committed").count() == 5)
   }
 
+  test("every driver table reads under Spark's inferred schema, with no job") {
+    val tables = new java.io.File(TestSpark.sfDir).list().filter(_.endsWith(".parquet"))
+      .sorted.map(n => s"${TestSpark.sfDir}/$n").toSeq
+    assert(tables.nonEmpty)
+    val (frames, jobs, _) = TestSpark.jobsOf(tables.map(graft.io.Parquet.read(spark, _)))
+    assert(jobs.isEmpty, jobs)
+    tables.zip(frames).foreach { case (path, df) =>
+      assert(df.schema == spark.read.parquet(path).schema, path)
+    }
+  }
+
   test("a footer read goes through the session's Hadoop settings") {
     val hc = spark.sparkContext.hadoopConfiguration
     val dir = freshDir("footer-conf")
@@ -102,7 +113,7 @@ class FooterReadSpec extends AnyFunSuite {
     hc.set("parquet.crypto.factory.class",
       classOf[RecordingDecryptionFactory].getName)
     // the frame is built from the footer alone: no job reads the file
-    val df = try Checkpointing.readParquet(spark, dir)
+    val df = try graft.io.Parquet.read(spark, dir)
       finally hc.unset("parquet.crypto.factory.class")
     import scala.jdk.CollectionConverters._
     assert(RecordingDecryptionFactory.asked.asScala.toSeq

@@ -15,26 +15,8 @@ object TestSpark {
   /** The jobs `body` starts, each by the name of the stage it was
     * submitted for, and the ids of the shuffle-map stages it runs. */
   def jobsOf[T](body: => T): (T, Seq[String], Set[Int]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-      SparkListenerTaskEnd}
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val shuffleStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.add(j.stageInfos.maxBy(_.stageId).name); ()
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskType == "ShuffleMapTask") { shuffleStages.add(t.stageId); () }
-    }
-    org.apache.spark.graft.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    val out = try body finally {
-      org.apache.spark.graft.ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    (out, jobs.asScala.toSeq, shuffleStages.asScala.toSet)
+    val (out, counts) = graft.JobCounts.of(spark)(body)
+    (out, counts.jobs, counts.shuffleStages)
   }
 }
 

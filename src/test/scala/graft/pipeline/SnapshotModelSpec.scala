@@ -190,24 +190,13 @@ class SnapshotModelSpec extends AnyFunSuite {
 
   test("headRows sums the logged rows without a job, and counts the head " +
       "where they do not add up") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val C = Checkpointing
     val dir = java.nio.file.Files
       .createTempDirectory("graft-headrows").toString + "/t"
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     /** headRows of `dir` and the Spark jobs it ran. */
     def headRows(): ((Int, Long), Int) = {
-      org.apache.spark.graft.ListenerBusDrain(sc)
-      jobs.set(0)
-      sc.addSparkListener(listener)
-      try (C.headRows(spark, dir), { org.apache.spark.graft.ListenerBusDrain(sc); jobs.get })
-      finally sc.removeSparkListener(listener)
+      val (rows, counts) = graft.JobCounts.of(spark)(C.headRows(spark, dir))
+      (rows, counts.jobs.size)
     }
     C.commit(df(1L to 3L), dir, "c1")
     assert(headRows() == (((1, 3L), 0)))
